@@ -36,13 +36,6 @@ def _norm(c):
     return F.sqrt(_dot(c, c))
 
 
-def with_unit_vectors(df: DataFrame, vec_col: str = "embedding",
-                      out_col: str = "unit") -> DataFrame:
-    v = F.col(vec_col).cast("array<double>")
-    return df.withColumn(out_col,
-                         F.transform(v, lambda x: x / _norm(v)))
-
-
 #: cosine_topk refuses corpora larger than this (see its docstring).
 COSINE_TOPK_CORPUS_BOUND = 1_000_000
 

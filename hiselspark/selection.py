@@ -130,11 +130,10 @@ def compute_sufficient_stats_scale(
     minibatches with ``mapInPandas``, partial-sum per task, two-level
     reduce.  Returns (xtx, xty, rows_used, n_minibatches).
 
-    ``precision='float32'`` runs the Gram tiles in float32 (the stage
-    is memory-bandwidth-bound: half the bytes, double the SIMD width)
-    while the partial-sum accumulators stay float64 — scores agree
-    with the float64 path to ~1e-6 relative.  Default float64 is
-    bit-identical to the reference."""
+    ``precision='float32'`` runs the Gram tiles in float32 (half the
+    bytes, double the SIMD width) while the partial-sum accumulators
+    stay float64 — scores agree with the float64 path to ~1e-6
+    relative.  Default float64 agrees with the reference to ~1e-15."""
     d = len(feature_cols)
     dy = len(target_cols)
     fc, tc = list(feature_cols), list(target_cols)
@@ -357,8 +356,7 @@ class SparkHSICSelector:
         """Compute per-outer-batch ``(X^T X, X^T y, rows, minibatches)``.
 
         ``precision='float32'`` (scale/hash modes only) computes the
-        Gram tiles in float32 — the bandwidth-bound half of the job at
-        corpus scale — with float64 accumulators; parity mode always
+        Gram tiles in float32 with float64 accumulators; parity mode always
         runs float64 (bit-compatibility with the reference and the
         pinned oracles).
 

@@ -11,6 +11,18 @@ for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
 
 
 @pytest.fixture(scope="session")
+def hisel():
+    """The reference package, imported in place; tests that use it skip
+    when the reference checkout is absent."""
+    from . import refshim
+
+    try:
+        return refshim.load_reference()
+    except ImportError:
+        pytest.skip("reference not present")
+
+
+@pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession
 

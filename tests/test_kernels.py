@@ -6,20 +6,20 @@ import pytest
 from hiselspark import kernels as hk
 from hiselspark import lar as hlar
 
-from . import refshim
 
-hisel = refshim.load_reference()
-rk = hisel.kernels
-KernelType = rk.KernelType
+@pytest.fixture(scope="module")
+def rk(hisel):
+    return hisel.kernels
+
 
 RNG = np.random.default_rng(42)
 
 
-def test_rbf_featurewise_matches_reference():
+def test_rbf_featurewise_matches_reference(rk):
     x = RNG.uniform(size=(40, 5))
     l = 1.3
     ours = hk.rbf_gram_featurewise(x, l)
-    ref = rk.featwise(x.T.copy(), l, KernelType.RBF)
+    ref = rk.featwise(x.T.copy(), l, rk.KernelType.RBF)
     np.testing.assert_allclose(ours, ref, rtol=1e-10, atol=1e-12)
 
 
@@ -29,10 +29,10 @@ def test_rbf_featurewise_analytic():
     np.testing.assert_allclose(g[0], [[1.0, np.exp(-0.5)], [np.exp(-0.5), 1.0]])
 
 
-def test_delta_featurewise_matches_reference():
+def test_delta_featurewise_matches_reference(rk):
     x = RNG.integers(0, 7, size=(50, 4))
     ours = hk.delta_gram_featurewise(x)
-    ref = rk.featwise(x.T.copy().astype(int), 1.0, KernelType.DELTA)
+    ref = rk.featwise(x.T.copy().astype(int), 1.0, rk.KernelType.DELTA)
     np.testing.assert_allclose(ours, ref, rtol=1e-12)
 
 
@@ -42,31 +42,31 @@ def test_delta_rows_sum_to_one():
     np.testing.assert_allclose(g.sum(axis=2), 1.0, rtol=1e-12)
 
 
-def test_mixed_featurewise_matches_reference():
+def test_mixed_featurewise_matches_reference(rk):
     xc = RNG.integers(0, 5, size=(30, 3)).astype(float)
     xf = RNG.uniform(size=(30, 4))
     x = np.hstack([xc, xf])
     ours = hk.gram_featurewise(x, 1.0, hk.KernelKind.MIXED, cat_split=3)
-    ref = rk.featwise(x.T.copy(), 1.0, KernelType.BOTH, catcont_split=3)
+    ref = rk.featwise(x.T.copy(), 1.0, rk.KernelType.BOTH, catcont_split=3)
     np.testing.assert_allclose(ours, ref, rtol=1e-10, atol=1e-12)
 
 
-def test_rbf_joint_matches_reference():
+def test_rbf_joint_matches_reference(rk):
     x = RNG.uniform(size=(35, 6))
     ours = hk.rbf_gram_joint(x, 2.0)
-    ref = rk.multivariate(x.T.copy(), 2.0, KernelType.RBF)
+    ref = rk.multivariate(x.T.copy(), 2.0, rk.KernelType.RBF)
     np.testing.assert_allclose(ours, ref, rtol=1e-10, atol=1e-12)
 
 
-def test_delta_joint_matches_reference():
+def test_delta_joint_matches_reference(rk):
     x = RNG.integers(0, 3, size=(40, 3))
     ours = hk.delta_gram_joint(x)
-    ref = rk.multivariate(x.T.copy().astype(int), 1.0, KernelType.DELTA)
+    ref = rk.multivariate(x.T.copy().astype(int), 1.0, rk.KernelType.DELTA)
     np.testing.assert_allclose(ours, ref, rtol=1e-12)
 
 
-def test_double_center_matches_reference_and_hgh():
-    g = rk.featwise(RNG.uniform(size=(4, 25)), 1.0, KernelType.RBF)
+def test_double_center_matches_reference_and_hgh(rk):
+    g = rk.featwise(RNG.uniform(size=(4, 25)), 1.0, rk.KernelType.RBF)
     ours = hk.double_center(g.copy())
     ref = rk._center_gram(g.copy())
     np.testing.assert_allclose(ours, ref, rtol=1e-10, atol=1e-12)
@@ -74,18 +74,18 @@ def test_double_center_matches_reference_and_hgh():
     np.testing.assert_allclose(ours, hgh, rtol=1e-8, atol=1e-10)
 
 
-def test_feature_map_matches_reference():
+def test_feature_map_matches_reference(rk):
     x = RNG.uniform(size=(60, 5))
     ours = hk.apply_feature_map(x, 1.0, hk.KernelKind.RBF, batch_size=20)
-    ref = rk.apply_feature_map(KernelType.RBF, x.T.copy(), 1.0, 20)
+    ref = rk.apply_feature_map(rk.KernelType.RBF, x.T.copy(), 1.0, 20)
     np.testing.assert_allclose(ours, ref, rtol=1e-9, atol=1e-11)
 
 
-def test_feature_map_joint_matches_reference():
+def test_feature_map_joint_matches_reference(rk):
     y = RNG.uniform(size=(60, 2))
     ours = hk.apply_feature_map(y, np.sqrt(2), hk.KernelKind.RBF,
                                 batch_size=30, joint=True)
-    ref = rk.apply_feature_map(KernelType.RBF, y.T.copy(), np.sqrt(2), 30,
+    ref = rk.apply_feature_map(rk.KernelType.RBF, y.T.copy(), np.sqrt(2), 30,
                                is_multivariate=True)
     np.testing.assert_allclose(ours, ref, rtol=1e-9, atol=1e-11)
 
@@ -96,26 +96,64 @@ def test_batch_slices_drops_remainder():
     assert sls[-1] == slice(40, 60)
 
 
-@pytest.mark.parametrize("x_kind,dtype", [
-    (hk.KernelKind.RBF, float),
-    (hk.KernelKind.DELTA, int),
+def _stats_inputs(inputs, n, d=6):
+    """x for the explicit-Phi cases: uniform floats, integer codes,
+    two code columns then floats, uniform floats standardized the
+    reference's way (column SUM subtracted: a large offset), or uniform
+    codes with a constant first column."""
+    if inputs == "codes":
+        return RNG.integers(0, 5, size=(n, d))
+    if inputs == "mixed":
+        return np.hstack([RNG.integers(0, 4, size=(n, 2)).astype(float),
+                          RNG.uniform(size=(n, d - 2))])
+    x = RNG.uniform(size=(n, d))
+    if inputs == "hisel":
+        x = (x - x.sum(axis=0)) / (1e-9 + x.std(axis=0))
+    elif inputs == "constant":
+        x = np.floor(4 * x)
+        x[:, 0] = 3.0
+    return x
+
+
+_RBF, _DELTA, _MIXED = (hk.KernelKind.RBF, hk.KernelKind.DELTA,
+                        hk.KernelKind.MIXED)
+
+
+@pytest.mark.parametrize("x_kind,inputs,n,row_chunk,col_chunk,dtype,tol", [
+    (_RBF, "uniform", 48, 17, 64, np.float64, 1e-12),
+    (_DELTA, "codes", 48, 17, 64, np.float64, 1e-12),
+    (_MIXED, "mixed", 48, 17, 64, np.float64, 1e-12),
+    # n a multiple of neither chunk, and the two chunks differ
+    (_RBF, "uniform", 53, 17, 11, np.float64, 1e-12),
+    (_MIXED, "mixed", 53, 11, 17, np.float64, 1e-12),
+    (_RBF, "hisel", 53, 17, 11, np.float64, 1e-12),
+    (_RBF, "constant", 53, 17, 11, np.float64, 1e-12),
+    (_DELTA, "constant", 53, 17, 11, np.float64, 1e-12),
+    (_RBF, "hisel", 53, 17, 11, np.float32, 1e-5),
+    (_MIXED, "mixed", 53, 11, 17, np.float32, 1e-5),
 ])
-def test_sufficient_stats_equal_explicit_phi(x_kind, dtype):
-    """(X^T X, X^T y) from the chunked streaming path == explicit Phi."""
-    n, d = 48, 6
-    if dtype is int:
-        x = RNG.integers(0, 5, size=(n, d))
-    else:
-        x = RNG.uniform(size=(n, d))
+def test_sufficient_stats_equal_explicit_phi(x_kind, inputs, n, row_chunk,
+                                             col_chunk, dtype, tol):
+    """(X^T X, X^T y) from the tiled streaming path == explicit float64
+    Phi, each entry within ``tol`` of sqrt(diag_f * diag_g) (xty: of
+    sqrt(diag_f * |psi|^2), its Cauchy-Schwarz bound)."""
+    x = _stats_inputs(inputs, n)
     y = RNG.uniform(size=(n, 1))
-    phi = hk.feature_map_block(x, 1.0, x_kind)
+    split = 2 if x_kind == _MIXED else 0
+    phi = hk.feature_map_block(x, 1.0, x_kind, cat_split=split)
     psi = hk.feature_map_block(y, 1.0, hk.KernelKind.RBF, joint=True)
     xtx, xty = hk.batch_sufficient_stats(
         x, y, x_kind, hk.KernelKind.RBF, x_bandwidth=1.0, y_bandwidth=1.0,
-        row_chunk=17)
-    np.testing.assert_allclose(xtx, phi.T @ phi, rtol=1e-8, atol=1e-10)
-    np.testing.assert_allclose(xty, (phi.T @ psi).ravel(), rtol=1e-8,
-                               atol=1e-10)
+        cat_split=split, row_chunk=row_chunk, col_chunk=col_chunk,
+        dtype=dtype)
+    ref_xtx, ref_xty = phi.T @ phi, (phi.T @ psi).ravel()
+    diag = np.diag(ref_xtx)
+    assert np.all(np.abs(xtx - ref_xtx)
+                  <= tol * np.sqrt(np.outer(diag, diag)))
+    assert np.all(np.abs(xty - ref_xty)
+                  <= tol * np.sqrt(diag * (psi.ravel() @ psi.ravel())))
+    if inputs == "constant":
+        assert xtx[0, 0] == 0.0
 
 
 def test_sufficient_stats_mixed_kernel():
@@ -147,7 +185,7 @@ def test_hsic_scores_from_xty():
         np.testing.assert_allclose(xty[f], np.trace(k @ lc), rtol=1e-8)
 
 
-def test_lar_matches_reference_on_random_gram():
+def test_lar_matches_reference_on_random_gram(hisel):
     n, d = 200, 12
     x = RNG.uniform(size=(n, d))
     beta = np.zeros(d)

@@ -9,10 +9,6 @@ import pytest
 from hiselspark import permutohedron, stats
 from hiselspark.kernels import KernelKind, prefix_grams, rbf_gram_joint
 
-from . import refshim
-
-hisel = refshim.load_reference()
-
 
 # ---------------------------------------------------------------------------
 # permutohedron
@@ -33,7 +29,7 @@ def test_sample_permutations_degenerate():
 # prefix grams vs reference
 # ---------------------------------------------------------------------------
 
-def test_prefix_grams_rbf_matches_reference():
+def test_prefix_grams_rbf_matches_reference(hisel):
     rng = np.random.default_rng(2)
     x = rng.uniform(size=(40, 5))
     ours = prefix_grams(x, KernelKind.RBF)
@@ -41,7 +37,7 @@ def test_prefix_grams_rbf_matches_reference():
     np.testing.assert_allclose(ours, ref, rtol=1e-9, atol=1e-11)
 
 
-def test_prefix_grams_delta_matches_reference():
+def test_prefix_grams_delta_matches_reference(hisel):
     rng = np.random.default_rng(3)
     x = rng.integers(0, 4, size=(30, 4))
     ours = prefix_grams(x, KernelKind.DELTA)
@@ -96,7 +92,7 @@ def test_emi_matches_bruteforce_tiny():
     assert emi == pytest.approx(np.mean(mis), rel=1e-9)
 
 
-def test_quantile_discretise_matches_reference():
+def test_quantile_discretise_matches_reference(hisel):
     rng = np.random.default_rng(7)
     y = rng.normal(size=500)
     ours = stats.quantile_discretise(y)
@@ -104,7 +100,7 @@ def test_quantile_discretise_matches_reference():
     np.testing.assert_array_equal(ours, ref.astype(np.int64))
 
 
-def test_prefix_encode_matches_reference():
+def test_prefix_encode_matches_reference(hisel):
     rng = np.random.default_rng(8)
     x = rng.integers(0, 5, size=(100, 6))
     np.testing.assert_array_equal(stats.prefix_encode(x),

@@ -8,10 +8,6 @@ import pytest
 
 from hiselspark.selection import SparkHSICSelector, hsic_lasso_select
 
-from . import refshim
-
-hisel = refshim.load_reference()
-
 
 def _planted_continuous(n=600, d=8, seed=7):
     rng = np.random.default_rng(seed)
@@ -36,7 +32,7 @@ def no_shuffle(monkeypatch):
     monkeypatch.setattr(np.random, "permutation", lambda n: np.arange(n))
 
 
-def test_parity_with_reference_selector(spark, no_shuffle):
+def test_parity_with_reference_selector(hisel, spark, no_shuffle):
     x, y = _planted_continuous()
     sdf, cols, ycols = _to_sdf(spark, x, y)
     sel = SparkHSICSelector(sdf, cols, ycols, standardize="hisel")
@@ -53,7 +49,7 @@ def test_parity_with_reference_selector(spark, no_shuffle):
                                rtol=1e-6, atol=1e-8)
 
 
-def test_parity_multiple_outer_batches(spark, no_shuffle):
+def test_parity_multiple_outer_batches(hisel, spark, no_shuffle):
     x, y = _planted_continuous(n=800)
     sdf, cols, ycols = _to_sdf(spark, x, y)
     sel = SparkHSICSelector(sdf, cols, ycols, standardize="hisel")
@@ -66,7 +62,7 @@ def test_parity_multiple_outer_batches(spark, no_shuffle):
     np.testing.assert_allclose(res.projection.sum(), 3.0, rtol=1e-9)
 
 
-def test_parity_discrete_features(spark, no_shuffle):
+def test_parity_discrete_features(hisel, spark, no_shuffle):
     rng = np.random.default_rng(11)
     n, d = 500, 6
     x = rng.integers(0, 5, size=(n, d))
@@ -126,7 +122,8 @@ def test_autoselect_threshold_cut(spark):
     assert len(res.features) <= 5
 
 
-def test_parity_epoch_augmentation_matches_reference(spark, monkeypatch):
+def test_parity_epoch_augmentation_matches_reference(hisel, spark,
+                                                     monkeypatch):
     """epochs=2 parity: the reference's per-outer-batch epoch shuffles
     (unseeded np.random.permutation, select.py:384-389) are pinned to
     the SAME seeded sequence the Spark parity path generates — both

@@ -34,7 +34,9 @@ Only then are the pins emitted, keyed BY SF TAG, into
 sf and reports ``ok`` instead of ``pinned_at_gate_sf``.
 
 Usage: python tools/pin_all.py SF_DIR [SF_DIR ...]
-       (regenerates the files with exactly the given sf tags)
+       (regenerates the given sf tags; tags already pinned for other
+       sfs are kept.  Refuses to run when the result would have no
+       sf0.01 set, which the modules' gate defaults bind to.)
 """
 from __future__ import annotations
 
@@ -66,6 +68,7 @@ CONSTANT_PINNED = [
     "hsic_select_embeddings", "segmented_select", "pca_project",
 ]
 ALL_PINNED = LITERAL_PINNED + CONSTANT_PINNED
+GATE_TAG = "sf0.01"   # the pin set the gate defaults bind to
 
 
 def sql_value(v) -> str:
@@ -196,6 +199,10 @@ def main():
         consts_by_sf.update(PINNED_CONSTANTS_BY_SF)
     except ImportError:
         pass
+    tags = {os.path.basename(d.rstrip("/")) for d in sf_dirs}
+    if GATE_TAG not in tags | (set(oracles_by_sf) & set(consts_by_sf)):
+        raise SystemExit(f"refusing to write pins without a {GATE_TAG} "
+                         f"set: pass its SF_DIR too")
     for sf_dir in sf_dirs:
         tag = os.path.basename(sf_dir.rstrip("/"))
         print(f"=== {tag} ===", flush=True)
@@ -243,8 +250,8 @@ def main():
                 f.write(f'        "{name}": """{sql}""",\n')
             f.write('    },\n')
         f.write('}\n\n# driver-gate default (the driver runs oracles '
-                'at sf0.01)\nPINNED_ORACLES = '
-                'PINNED_ORACLES_BY_SF["sf0.01"]\n')
+                f'at {GATE_TAG})\nPINNED_ORACLES = '
+                f'PINNED_ORACLES_BY_SF["{GATE_TAG}"]\n')
     print(f"wrote {ORACLES_OUT}")
 
     with open(CONSTS_OUT, "w") as f:
@@ -264,7 +271,7 @@ def main():
                 f.write(f'        "{k}": {v!r},\n')
             f.write('    },\n')
         f.write('}\n\n# driver-gate default\nPINNED_CONSTANTS = '
-                'PINNED_CONSTANTS_BY_SF["sf0.01"]\n')
+                f'PINNED_CONSTANTS_BY_SF["{GATE_TAG}"]\n')
     print(f"wrote {CONSTS_OUT}")
 
 
