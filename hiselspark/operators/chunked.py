@@ -7,22 +7,22 @@ operators here cluster by ``(entity, time-bucket)`` instead — a hot
 entity's 90-day timeline splits into ``span/bucket`` independent tasks
 — while producing **bit-identical results** to the plain operators.
 
-Cost discipline (this is what makes the chunked path as cheap as the
-plain one): each operator moves the full frame through exactly ONE
-shuffle — the ``repartition(entity, bucket)`` clustering (for rolling,
-the time-overlap context rows are ``explode``-duplicated narrowly in
-the SAME scan BEFORE that shuffle — single consumer of the upstream,
-so an expensive decode never needs a protective cache).  Everything
-cross-bucket rides on per-(entity, bucket) summary tables: one row per
-non-empty bucket per entity, built with NO extra shuffle (groupBy on
-the clustering keys reuses the partitioning), prefix-scanned per
-entity (tiny windows, pure JVM), and joined back on the clustering
-keys — the big side is already hash-partitioned on them, so only the
-tiny summary moves.  The summary branch and the join's big side share
-the clustering exchange via ReusedExchange: pre-shuffle work runs
-once by construction, and the duplicated post-shuffle window pass over
-the narrow frame measures cheaper than persisting the intermediate
-(the cache write alone cost ~1.7s of the sf0.1 stage wall).  (No
+Cost discipline: each operator clusters the full frame with ONE
+``repartition(entity, bucket)`` (for rolling, the time-overlap context
+rows are ``explode``-duplicated narrowly in the same scan BEFORE that
+shuffle, not as a second union branch).  Everything cross-bucket rides
+on per-(entity, bucket) summary tables: one row per non-empty bucket
+per entity, grouped on the clustering keys, prefix-scanned per entity
+(tiny windows, pure JVM), and joined back on the clustering keys.
+The summary branch and the join's big side do NOT share one
+evaluation of the input: the summary needs fewer columns and its
+filters are pushed below the clustering repartition, so its exchange
+never matches the big side's and is not reused — each branch
+re-evaluates the operator's input (measured on the pipeline's
+training frame without its caches: the fused image scan ran 3 times
+and the timeline twice).  The operators do not persist; a caller whose
+input is expensive (image decode, an upstream timeline) materializes
+it first, as ``pipeline.assemble_training_frame`` does.  (No
 broadcast hints: a per-(entity, bucket) table grows with the corpus,
 and the driver-side broadcast build measurably dominated the stage
 wall even at 500k rows; AQE may still choose broadcast when a summary
@@ -97,17 +97,17 @@ def _cluster(df: DataFrame, entity_col: str,
     """THE one full-frame shuffle: hash-cluster on (entity, bucket).
     Downstream windows/groupBys on these keys reuse the partitioning.
 
-    ``materialize=True`` persists the clustered frame.  All chunked
-    operators now pass ``False``: their summary branch and join big
-    side share this exchange via ReusedExchange, so the expensive
-    pre-shuffle upstream runs once regardless, and the duplicated
-    post-shuffle work (one window/agg pass over the narrow frame)
-    measures cheaper than the cache materialization at every scale
-    tried (same-day A/B at 2M images: no-persist plan 1.5× faster
-    end-to-end, ``plan_cost_ab`` in BENCH_SCALING.json).  The knob
-    stays for callers whose downstream re-evaluates the frame many
-    times (iterative algorithms) — the production equivalent is
-    checkpointing to the warehouse (checkpoint/resume layer)."""
+    ``materialize=True`` persists the clustered frame and registers it
+    for :func:`release_chunk_caches` (``encoding._chunked_before_stats``
+    uses it).  The operators in this module pass ``False``: each of
+    their branches (summary table, join big side) then re-evaluates
+    the input, because the branches' exchanges differ in columns and
+    pushed-down filters and Spark does not reuse one for the other.
+    Persisting here measured slower than that re-evaluation on a
+    cheap input (same-day A/B at 2M images: no-persist plan 1.5×
+    faster end-to-end, ``plan_cost_ab`` in BENCH_SCALING.json); a
+    caller with an expensive input materializes it instead, as
+    ``pipeline.assemble_training_frame`` does."""
     out = df.repartition(F.col(entity_col), F.col(_B))
     if materialize:
         out = _remember(out.persist())
@@ -211,10 +211,8 @@ def _overlap_context(tagged: DataFrame, ts_col: str, bucket_seconds: float,
     ``overlap_seconds`` of rows into the next bucket, flagged __ctx=1.
 
     Single-scan form: each tail-window row ``explode``s into itself
-    plus its next-bucket context copy — the input is consumed ONCE, so
-    callers need no protective persist of the upstream (an earlier
-    two-branch union scanned it twice, forcing a cache of the whole
-    tagged frame just to avoid a double image-decode)."""
+    plus its next-bucket context copy, so this step reads its input
+    once (an earlier two-branch union scanned it twice)."""
     bucket_us = int(bucket_seconds * 1_000_000)
     row_us = (ts_seconds(ts_col) * 1_000_000).cast("long")
     in_tail = (row_us >= (F.col(_B) + 1) * bucket_us
@@ -358,12 +356,10 @@ def chunked_timeline_features(
     for name, expr in _rolling_exprs(rolling_aggs, rolling_window_s,
                                      w_range).items():
         out = out.withColumn(name, expr)
-    # no persist: the summary branch and the join's big side share the
-    # clustering exchange (ReusedExchange — the expensive pre-shuffle
-    # work, e.g. image decode, runs once by construction), and the
-    # duplicated post-shuffle work is one window pass over the narrow
-    # frame — measured cheaper than materializing the cache at every
-    # scale tried (the cache write alone cost ~1.7s of the sf0.1 wall)
+    # no persist: the summary branch below and the join's big side
+    # each re-evaluate ``df`` (their exchanges differ, so neither is
+    # reused), which a caller with an expensive input avoids by
+    # materializing it (pipeline.assemble_training_frame)
     real = out.filter(F.col(_CTX) == 0).drop(_CTX)
 
     # ONE summary pass for sessionize AND lag carries: both aggregate

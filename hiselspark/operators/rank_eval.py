@@ -370,7 +370,8 @@ def bradley_terry(
     players = wins.join(tot_games, "i").select(
         "i", "wins", "games")
 
-    if driver_pair_cap and sym.count() <= driver_pair_cap:
+    if driver_pair_cap and (sym.limit(driver_pair_cap + 1).count()
+                            <= driver_pair_cap):
         return _bt_driver_rounds(df.sparkSession, sym, players,
                                  int(iterations), s, k_scale)
     ratings = players.select(

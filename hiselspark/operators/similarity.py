@@ -57,11 +57,11 @@ def cosine_topk(probes: DataFrame, corpus: DataFrame, k: int = 10,
     as the bounded-recall verifier they are floored against."""
     bound = COSINE_TOPK_CORPUS_BOUND if corpus_bound is None \
         else int(corpus_bound)
-    n_corpus = corpus.count()
-    if n_corpus > bound:
+    # the guard scan stops at bound + 1 rows
+    if corpus.limit(bound + 1).count() > bound:
         raise ValueError(
-            f"cosine_topk: corpus has {n_corpus} rows, above the "
-            f"declared exact-verifier bound {bound}.  Use ivf_topk/"
+            f"cosine_topk: corpus has more than {bound} rows, the "
+            f"declared exact-verifier bound.  Use ivf_topk/"
             f"pq_topk for large corpora, or pass corpus_bound "
             f"explicitly to force the exact scan.")
     probe_id_col = probe_id_col or id_col

@@ -16,7 +16,8 @@ Stages (each a documented operator elsewhere in the package):
 """
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from contextlib import contextmanager
+from typing import Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -79,18 +80,32 @@ def engineer_timeline(
         bucket_seconds=bucket_seconds)
 
 
+@contextmanager
 def assemble_training_frame(
     images,
     labels: DataFrame,
     n_phash_bits: int = 16,
     tolerance_seconds: Optional[float] = None,
     bucket_seconds: Optional[float] = None,
-) -> Tuple[DataFrame, List[str]]:
+) -> Iterator[Tuple[DataFrame, List[str]]]:
     """Full point-in-time feature matrix: one row per label
     ``(entity_id, label_ts)`` with the feature vector as of that
-    moment (backward as-of, zero leakage).  Returns (frame, feature
-    column names).  ``bucket_seconds`` routes the timeline windows AND
-    the as-of join through the skew-proof chunked operators.
+    moment (backward as-of, zero leakage).  A context manager yielding
+    (frame, feature column names)::
+
+        with assemble_training_frame(images, labels) as (frame, cols):
+            ...  # every action on ``frame`` goes here
+
+    ``bucket_seconds`` routes the timeline windows AND the as-of join
+    through the skew-proof chunked operators.
+
+    Two intermediates fan out to more than one consumer: the featurized
+    scan (timeline big side + summary branch) and the timeline (as-of
+    big side + seed branch).  Each branch re-evaluates its input, so
+    both are persisted here — the scan and the timeline run once per
+    call, not three and two times — and unpersisted when the block
+    exits, also when it raises.  ``frame`` stays valid after the block
+    but recomputes from the sources.
 
     ``images`` is either a DataFrame (blobs cross the Arrow socket into
     the pixel-stats worker) or a parquet directory path / explicit file
@@ -104,7 +119,25 @@ def assemble_training_frame(
                                             n_phash_bits)
     else:
         featurized = featurize_images(images, n_phash_bits)
-    feats = engineer_timeline(featurized, bucket_seconds=bucket_seconds)
+    featurized = featurized.persist()
+    try:
+        feats = engineer_timeline(
+            featurized, bucket_seconds=bucket_seconds).persist()
+        try:
+            yield _join_labels(labels, feats, tolerance_seconds,
+                               bucket_seconds)
+        finally:
+            # dependent cache first: dropping the scan's cache while the
+            # timeline's is registered but unfilled would re-plan it
+            feats.unpersist()
+    finally:
+        featurized.unpersist()
+
+
+def _join_labels(labels: DataFrame, feats: DataFrame,
+                 tolerance_seconds: Optional[float],
+                 bucket_seconds: Optional[float],
+                 ) -> Tuple[DataFrame, List[str]]:
     feature_cols = [c for c in feats.columns
                     if c not in ("entity_id", "ts")]
     if bucket_seconds is None:
@@ -152,18 +185,18 @@ def select_features_pointintime(
     kernel, and near-unique identifier-like columns (session_id) are
     excluded — identity-shaped Grams carry spuriously large HSIC mass.
     """
-    frame, feature_cols = assemble_training_frame(
-        images, labels, n_phash_bits=n_phash_bits,
-        bucket_seconds=bucket_seconds)
-    feature_cols = [c for c in feature_cols if c != "session_id"]
-    frame = frame.select(
-        F.col("y").cast("double").alias("y"),
-        *[F.col(c).cast("double").alias(c) for c in feature_cols])
-    sel = SparkHSICSelector(frame, feature_cols, ["y"])
-    # precision='float32' halves Gram-tile memory traffic (2.5-2.9x on
-    # the bandwidth-bound core, see BASELINE.md) — the corpus-scale
-    # opt-in; float64 stays the default wherever the reference parity
-    # contract applies
-    return sel.run(number_of_features=number_of_features,
-                   minibatch_size=minibatch_size, mode=mode,
-                   precision=precision)
+    with assemble_training_frame(
+            images, labels, n_phash_bits=n_phash_bits,
+            bucket_seconds=bucket_seconds) as (frame, feature_cols):
+        feature_cols = [c for c in feature_cols if c != "session_id"]
+        frame = frame.select(
+            F.col("y").cast("double").alias("y"),
+            *[F.col(c).cast("double").alias(c) for c in feature_cols])
+        sel = SparkHSICSelector(frame, feature_cols, ["y"])
+        # precision='float32' halves Gram-tile memory traffic (2.5-2.9x
+        # on the bandwidth-bound core, see BASELINE.md) — the
+        # corpus-scale opt-in; float64 stays the default wherever the
+        # reference parity contract applies
+        return sel.run(number_of_features=number_of_features,
+                       minibatch_size=minibatch_size, mode=mode,
+                       precision=precision)

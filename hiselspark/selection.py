@@ -25,7 +25,7 @@ Two batching modes:
   production path.
 * ``mode="scale"`` — zero-shuffle: ``mapInPandas`` slices each existing
   partition into minibatches, computes stats per slice, and emits one
-  partial-sum row per task; a two-level reduce sums them.  No global
+  partial-sum row per task; the driver sums them.  No global
   ordering, no shuffle of the feature rows at all.  Per-partition
   remainders (< minibatch_size rows each) are dropped, mirroring the
   reference's remainder rule at partition granularity.
@@ -123,12 +123,12 @@ def compute_sufficient_stats_scale(
     y_kind: KernelKind,
     cat_split: int,
     minibatch_size: int,
-    reduce_groups: int = 64,
     precision: str = "float64",
 ) -> Tuple[np.ndarray, np.ndarray, int, int]:
     """Zero-shuffle sufficient stats: slice each partition into
-    minibatches with ``mapInPandas``, partial-sum per task, two-level
-    reduce.  Returns (xtx, xty, rows_used, n_minibatches).
+    minibatches with ``mapInPandas``, partial-sum per task, sum the
+    partials on the driver.  Returns (xtx, xty, rows_used,
+    n_minibatches).
 
     ``precision='float32'`` runs the Gram tiles in float32 (half the
     bytes, double the SIMD width) while the partial-sum accumulators
@@ -186,35 +186,20 @@ def compute_sufficient_stats_scale(
     pruned = df.select(*fc, *tc)
     stats = pruned.mapInPandas(per_partition, _STAT_SCHEMA)
     try:
-        return _reduce_stats(stats, d, reduce_groups)
+        return _reduce_stats(stats, d)
     except ValueError:
         # tiny-input fallback: every partition had < 8 rows — collapse
         # to one partition and batch there (test-scale path only)
         stats1 = pruned.coalesce(1).mapInPandas(per_partition, _STAT_SCHEMA)
-        return _reduce_stats(stats1, d, reduce_groups)
+        return _reduce_stats(stats1, d)
 
 
-def _reduce_stats(stats: DataFrame, d: int,
-                  reduce_groups: int) -> Tuple[np.ndarray, np.ndarray, int, int]:
-    """Two-level sum of sufficient-stat rows: partial sums shuffled into
-    ``reduce_groups`` groups, summed per group in pandas, final sum on
-    the driver over at most ``reduce_groups`` rows."""
-
-    def sum_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        xtx = np.sum(np.stack(pdf["xtx"].map(np.asarray)), axis=0)
-        xty = np.sum(np.stack(pdf["xty"].map(np.asarray)), axis=0)
-        return _make_stats_row(int(pdf["group_key"].iloc[0]), xtx, xty,
-                               int(pdf["n_rows"].sum()),
-                               int(pdf["n_batches"].sum()))
-
-    reduced = (
-        stats
-        .withColumn("group_key", F.pmod(F.spark_partition_id(),
-                                        F.lit(reduce_groups)).cast("long"))
-        .groupBy("group_key")
-        .applyInPandas(sum_group, _STAT_SCHEMA)
-        .toPandas()
-    )
+def _reduce_stats(stats: DataFrame,
+                  d: int) -> Tuple[np.ndarray, np.ndarray, int, int]:
+    """Driver sum of the per-task partial-sum rows: at most one row per
+    input partition (``defaultParallelism`` after the rebalance), few
+    enough to collect and sum without a reduce stage."""
+    reduced = stats.toPandas()
     if reduced.empty:
         raise ValueError("no complete minibatch: input smaller than "
                          "minibatch_size in every partition")

@@ -91,19 +91,23 @@ def main(argv=None) -> int:
         labels, snap_l = load_side(spark, args.labels)
         snapshot = f"images:{snap_i} labels:{snap_l}"
 
-    frame, feature_cols = assemble_training_frame(
-        images, labels, n_phash_bits=args.phash_bits)
-    frame = frame.withColumn(
-        "__bucket", F.pmod(F.xxhash64("entity_id"), F.lit(args.buckets)))
-
     run = PartitionedRun(args.output, input_snapshot=snapshot)
+    # the bucket jobs share one scan + timeline: the cached upstream
+    # lives until the last bucket is written
+    with assemble_training_frame(
+            images, labels, n_phash_bits=args.phash_bits) as (
+            frame, feature_cols):
+        frame = frame.withColumn(
+            "__bucket", F.pmod(F.xxhash64("entity_id"),
+                               F.lit(args.buckets)))
 
-    def job(partition: str, out: str):
-        part = frame.filter(F.col("__bucket") == int(partition)).drop("__bucket")
-        part.write.parquet(out)
-        return part
+        def job(partition: str, out: str):
+            part = (frame.filter(F.col("__bucket") == int(partition))
+                    .drop("__bucket"))
+            part.write.parquet(out)
+            return part
 
-    run.run([str(b) for b in range(args.buckets)], job)
+        run.run([str(b) for b in range(args.buckets)], job)
     matrix = run.read_output(spark)
 
     cols = [c for c in feature_cols if c != "session_id"]

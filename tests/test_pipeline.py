@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from hiselspark import datagen
 from hiselspark.functions.image import decode_image, psnr
+from hiselspark.metrics import instrument
 from hiselspark.pipeline import (assemble_training_frame,
                                  select_features_pointintime)
 
@@ -53,20 +54,38 @@ def test_decode_roundtrip_exact(corpus):
 
 def test_training_frame_no_leakage(corpus):
     images, labels = corpus
-    frame, cols = assemble_training_frame(images, labels)
-    bad = frame.filter("__matched_ts > ts").count()
-    assert bad == 0
-    assert frame.count() > 500
+    with assemble_training_frame(images, labels) as (frame, cols):
+        bad = frame.filter("__matched_ts > ts").count()
+        assert bad == 0
+        assert frame.count() > 500
 
 
-def test_selection_recovers_planted_features(corpus):
+def _cache_entries(spark):
+    """Plans registered with the session's cache manager — a persist
+    that never ran an action is listed here but not among the
+    persistent RDDs."""
+    data = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    return sorted(data.apply(i).plan().toString()
+                  for i in range(data.size()))
+
+
+def test_selection_recovers_planted_features(spark, corpus):
     images, labels = corpus
-    res = select_features_pointintime(images, labels,
+    before = _cache_entries(spark)
+    counted, scanned = instrument(images, "images")
+    res = select_features_pointintime(counted, labels,
                                       number_of_features=4,
                                       minibatch_size=150)
     # y = 2*bit0 - 1.5*bit7 + 0.25*n_tokens + eps (datagen.labels)
     assert {"pbit0", "pbit7"} <= set(res.features)
     assert {"caption_tokens", "caption_rtokens"} & set(res.features)
+    # the scan feeds several branches but is evaluated once per call
+    assert scanned.rows.value == images.count()
+    # and every cache the call made is released, also when it raises
+    assert _cache_entries(spark) == before
+    with pytest.raises(ValueError, match="at least 2 features"):
+        select_features_pointintime(images, labels, number_of_features=-1)
+    assert _cache_entries(spark) == before
 
 
 def test_fused_scan_equals_dataframe_featurizer(spark, tmp_path_factory):

@@ -116,13 +116,13 @@ wall = min(walls)
 # production scale.  Reference-scale minibatches (1000 rows: Gram cost
 # per row grows with b) so the stage is compute-bound, and
 # standardize='none' so the measured region is exactly one
-# mapInPandas pass + the two-level reduce + driver LARS.
-frame, fcols = assemble_training_frame(images, labels,
-                                       bucket_seconds=7 * 86400.0)
-fcols = [c for c in fcols if c != "session_id"]
-frame = frame.select(F.col("y").cast("double").alias("y"),
-                     *[F.col(c).cast("double").alias(c) for c in fcols])
-frame = frame.persist(); n_core = frame.count()
+# mapInPandas pass + the driver sum + driver LARS.
+with assemble_training_frame(images, labels,
+                             bucket_seconds=7 * 86400.0) as (frame, fcols):
+    fcols = [c for c in fcols if c != "session_id"]
+    frame = frame.select(F.col("y").cast("double").alias("y"),
+                         *[F.col(c).cast("double").alias(c) for c in fcols])
+    frame = frame.persist(); n_core = frame.count()
 sel = SparkHSICSelector(frame, fcols, ["y"], standardize="none")
 sel.run(number_of_features=4, minibatch_size=2000, mode="scale",
         cache=False)   # warm

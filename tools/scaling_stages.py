@@ -55,12 +55,12 @@ tl = engineer_timeline(spark.read.parquet(f"{{inter}}/feats"),
 tl.write.mode("overwrite").parquet(f"{{inter}}/timeline")
 labels = (spark.read.parquet(f"{{corpus}}/labels")
           .withColumn("label_ts", F.col("label_ts").cast("timestamp")))
-frame, fcols = assemble_training_frame(
-    f"{{corpus}}/images", labels, bucket_seconds=BUCKET)
-fcols = [c for c in fcols if c != "session_id"]
-frame.select(F.col("y").cast("double").alias("y"),
-             *[F.col(c).cast("double").alias(c) for c in fcols]) \
-    .write.mode("overwrite").parquet(f"{{inter}}/frame")
+with assemble_training_frame(
+        f"{{corpus}}/images", labels, bucket_seconds=BUCKET) as (frame, fcols):
+    fcols = [c for c in fcols if c != "session_id"]
+    frame.select(F.col("y").cast("double").alias("y"),
+                 *[F.col(c).cast("double").alias(c) for c in fcols]) \
+        .write.mode("overwrite").parquet(f"{{inter}}/frame")
 print("prepped")
 """
 
