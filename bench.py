@@ -169,7 +169,7 @@ def main() -> None:
     # north metric is steady-state throughput.
     from hiselspark.operators.chunked import release_chunk_caches
     select_features_pointintime(img_path, lbls, number_of_features=4,
-                                minibatch_size=200, mode="scale")
+                                minibatch_size=200)
     release_chunk_caches()
     # best of two timed reps: this sandbox shares the host with other
     # tenants whose load spikes skew single-shot walls by 2-3x (observed
@@ -187,8 +187,7 @@ def main() -> None:
         t0 = time.perf_counter()
         res = select_features_pointintime(img_path, lbls,
                                           number_of_features=4,
-                                          minibatch_size=200,
-                                          mode="scale")
+                                          minibatch_size=200)
         w = time.perf_counter() - t0
         north_sec = min(north_sec, w)
         raw_walls.setdefault("north_pipeline", []).append(round(w, 3))
@@ -197,7 +196,6 @@ def main() -> None:
         res32 = select_features_pointintime(img_path, lbls,
                                             number_of_features=4,
                                             minibatch_size=200,
-                                            mode="scale",
                                             precision="float32")
         w = time.perf_counter() - t0
         north32_sec = min(north32_sec, w)

@@ -24,7 +24,7 @@ class HSICLassoParameters:
     batch_size: int = 9000
     minibatch_size: int = 500
     number_of_epochs: int = 4
-    mode: str = "scale"
+    mode: str = "hash"
     order_col: Optional[str] = None
     # reference ``use_preselection``/``mi_threshold``: the ksgmi MI
     # filter, here the distributed histogram estimator (preselect.py)
@@ -86,12 +86,7 @@ def select_features(
             mode=hp.mode,
             order_col=hp.order_col,
             batch_size=hp.batch_size,
-            # epoch augmentation exists on the parity path (reference-
-            # exact shuffled concatenation) and the hash path (per-epoch
-            # batch groupings — the production form); plain scale mode
-            # has no stable batch identity to augment, so it runs 1
-            epochs=(hp.number_of_epochs if hp.mode in ("parity", "hash")
-                    else 1),
+            epochs=hp.number_of_epochs,
             threshold=hp.hsic_threshold,
         )
         cont_features = cont_result.features

@@ -344,9 +344,11 @@ def bradley_terry(
     HUGEINT oracle): the c·S and W·S PRODUCTS multiply in
     DECIMAL(38,0) / arbitrary-precision ints — an int64 multiply
     wraps silently past ~9·10⁴ games per pair at S = 1e14, a bound
-    the sf1 gate actually crossed — while every quotient and sum is
-    back under int64 by construction.  Players in no decided game
-    are absent.  Returns (player, rating, wins, games)."""
+    the sf1 gate actually crossed — while every quotient is back
+    under int64 by construction.  The driver path runs in Python ints
+    whenever a per-player sum of c·S or the total W·S could reach
+    2^62, so its int64 sums cannot wrap either.  Players in no
+    decided game are absent.  Returns (player, rating, wins, games)."""
     s = int(term_scale)
     k_scale = int(scale)
     w = (df.groupBy(F.col(winner_col).alias("i"),
@@ -443,10 +445,16 @@ def _bt_driver_rounds(spark, sym: DataFrame, players: DataFrame,
     c = s_pdf["c"].to_numpy(np.int64)
     wins = p_pdf["wins"].to_numpy(np.int64)
     k = len(p_pdf)
-    big = (int(c.max(initial=0)) * s >= 2 ** 62
-           or int(wins.max(initial=0)) * s >= 2 ** 62)
+    # D_i <= S * sum_j c_ij and sum(raw) <= S * sum(W): bound the
+    # per-player sums and the total in Python ints (each also bounds
+    # its single products, as c and W are nonnegative)
+    c_per_player = [0] * k
+    for i_t, c_t in zip(i_idx.tolist(), c.tolist()):
+        c_per_player[i_t] += c_t
+    big = (max(c_per_player) * s >= 2 ** 62
+           or sum(wins.tolist()) * s >= 2 ** 62)
     if big:
-        # heavy arena: c*S / wins*S exceed int64 — run the identical
+        # heavy arena: the int64 sums could wrap — run the identical
         # formulas in arbitrary-precision Python ints (matches the
         # distributed path's DECIMAL(38,0) products)
         ci = [int(v) for v in c]

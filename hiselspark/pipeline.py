@@ -167,7 +167,7 @@ def select_features_pointintime(
     number_of_features: int = 5,
     n_phash_bits: int = 16,
     minibatch_size: int = 200,
-    mode: str = "scale",
+    mode: str = "hash",
     bucket_seconds: Optional[float] = 7 * 86400.0,
     precision: str = "float64",
 ) -> SelectionResult:

@@ -10,25 +10,23 @@ Spark-first re-expression (SURVEY.md §4.3): LARS touches the stacked
 feature map only through ``X^T X`` and ``X^T y``, which are associative
 sums of per-minibatch (d, d)/(d,) blocks.  So executors compute
 per-minibatch sufficient statistics inside Arrow-batched pandas UDFs,
-Spark sum-reduces them (map-side partial aggregation, then a tiny
-shuffle of (d*d+d)-length arrays), and the driver runs LARS on the d x d
-result.  The feature map — ~1e12 * b rows at production scale — never
-exists.
+the driver sums the (d*d+d)-length blocks in minibatch-key order, and
+runs LARS on the d x d result.  The feature map — ~1e12 * b rows at
+production scale — never exists.
 
 Two batching modes:
 
+* ``mode="hash"`` (default) — the production route: each row goes to
+  minibatch ``pmod(xxhash64(seed, [epoch], raw input values), num_mb)``,
+  one shuffle of the narrow numeric frame groups the minibatches, and
+  the driver sums their blocks in key order.  Batch membership and fold
+  order do not depend on the partition layout.
 * ``mode="parity"`` — replicates the reference's row-order-dependent
   batch assignment exactly (outer batches then minibatches by row
   position, remainder dropped, optional seeded epoch shuffles) so
   selected indices / HSIC scores / lasso paths are allclose to the
   reference.  Uses a global row index — fine at test scale, not the
   production path.
-* ``mode="scale"`` — zero-shuffle: ``mapInPandas`` slices each existing
-  partition into minibatches, computes stats per slice, and emits one
-  partial-sum row per task; the driver sums them.  No global
-  ordering, no shuffle of the feature rows at all.  Per-partition
-  remainders (< minibatch_size rows each) are dropped, mirroring the
-  reference's remainder rule at partition granularity.
 """
 from __future__ import annotations
 
@@ -113,99 +111,6 @@ def _stats_kwargs(x_kind: KernelKind, cat_split: int, dy: int,
         cat_split=cat_split,
         dtype=np.float32 if precision == "float32" else np.float64,
     )
-
-
-def compute_sufficient_stats_scale(
-    df: DataFrame,
-    feature_cols: Sequence[str],
-    target_cols: Sequence[str],
-    x_kind: KernelKind,
-    y_kind: KernelKind,
-    cat_split: int,
-    minibatch_size: int,
-    precision: str = "float64",
-) -> Tuple[np.ndarray, np.ndarray, int, int]:
-    """Zero-shuffle sufficient stats: slice each partition into
-    minibatches with ``mapInPandas``, partial-sum per task, sum the
-    partials on the driver.  Returns (xtx, xty, rows_used,
-    n_minibatches).
-
-    ``precision='float32'`` runs the Gram tiles in float32 (half the
-    bytes, double the SIMD width) while the partial-sum accumulators
-    stay float64 — scores agree with the float64 path to ~1e-6
-    relative.  Default float64 agrees with the reference to ~1e-15."""
-    d = len(feature_cols)
-    dy = len(target_cols)
-    fc, tc = list(feature_cols), list(target_cols)
-    kw = _stats_kwargs(x_kind, cat_split, dy, precision)
-    kw["y_kind"] = y_kind
-    b = minibatch_size
-
-    def per_partition(pdfs):
-        xtx = np.zeros((d, d))
-        xty = np.zeros(d)
-        rows = 0
-        batches = 0
-        xbuf: List[np.ndarray] = []
-        ybuf: List[np.ndarray] = []
-        buffered = 0
-
-        def one_batch(xarr, yarr):
-            nonlocal rows, batches, xtx, xty
-            bx, by = batch_sufficient_stats(xarr, yarr, **kw)
-            xtx += bx
-            xty += by
-            rows += xarr.shape[0]
-            batches += 1
-
-        for pdf in pdfs:
-            xbuf.append(pdf[fc].to_numpy())
-            ybuf.append(pdf[tc].to_numpy())
-            buffered += len(pdf)
-            if buffered >= b:
-                xarr = np.vstack(xbuf)
-                yarr = np.vstack(ybuf)
-                full = (xarr.shape[0] // b) * b
-                for s in range(0, full, b):
-                    one_batch(xarr[s:s + b], yarr[s:s + b])
-                xbuf, ybuf = [xarr[full:]], [yarr[full:]]
-                buffered = xarr.shape[0] - full
-        # per-partition tail: the reference drops the global remainder
-        # (kernels.py:220-225); dropping a remainder per *partition*
-        # would waste up to (b-1) x n_partitions rows, so tails of at
-        # least b/2 rows are kept as one smaller minibatch (delta-kernel
-        # normalization is per-batch, so variable sizes are exact).  A
-        # partition smaller than one minibatch contributes whatever it
-        # has (>= 8 rows) as a single batch — mirrors the reference's
-        # b = min(n, batch_size) rule at partition granularity.
-        if buffered >= max(8, b // 2) or (batches == 0 and buffered >= 8):
-            one_batch(np.vstack(xbuf), np.vstack(ybuf))
-        if batches:
-            yield _make_stats_row(0, xtx, xty, rows, batches)
-
-    pruned = df.select(*fc, *tc)
-    stats = pruned.mapInPandas(per_partition, _STAT_SCHEMA)
-    try:
-        return _reduce_stats(stats, d)
-    except ValueError:
-        # tiny-input fallback: every partition had < 8 rows — collapse
-        # to one partition and batch there (test-scale path only)
-        stats1 = pruned.coalesce(1).mapInPandas(per_partition, _STAT_SCHEMA)
-        return _reduce_stats(stats1, d)
-
-
-def _reduce_stats(stats: DataFrame,
-                  d: int) -> Tuple[np.ndarray, np.ndarray, int, int]:
-    """Driver sum of the per-task partial-sum rows: at most one row per
-    input partition (``defaultParallelism`` after the rebalance), few
-    enough to collect and sum without a reduce stage."""
-    reduced = stats.toPandas()
-    if reduced.empty:
-        raise ValueError("no complete minibatch: input smaller than "
-                         "minibatch_size in every partition")
-    xtx = np.sum(np.stack(reduced["xtx"].map(np.asarray)), axis=0).reshape(d, d)
-    xty = np.sum(np.stack(reduced["xty"].map(np.asarray)), axis=0)
-    return xtx, xty, int(reduced["n_rows"].sum()), int(reduced["n_batches"].sum())
 
 
 # ---------------------------------------------------------------------------
@@ -298,119 +203,115 @@ class SparkHSICSelector:
 
     # -- preprocessing ----------------------------------------------------
 
-    def _standardized(self, df: DataFrame) -> DataFrame:
-        """Column standardization.  'hisel' replicates the reference's
-        quirk of subtracting the column SUM, not the mean
-        (``select.py:379-383``) — kept for parity; 'zscore' is the sane
-        variant recommended at scale.  Discrete columns pass through."""
-        if self.standardize == "none":
-            return df
-        cont_x = self.feature_cols[self.cat_split:]
-        cont_y = (self.target_cols if self.y_kind == KernelKind.RBF else [])
-        cols = cont_x + list(cont_y)
-        if not cols:
-            return df
-        aggs = []
+    def _moments(self, df: DataFrame
+                 ) -> Tuple[int, Dict[str, Tuple[float, float]]]:
+        """One aggregate over the input rows: the row count and each
+        standardized column's ``(centre, scale)``.  'hisel' replicates
+        the reference's quirk of subtracting the column SUM, not the
+        mean (``select.py:379-383``) — kept for parity; 'zscore' is the
+        sane variant recommended at scale.  Discrete columns pass
+        through."""
+        cols: List[str] = []
+        if self.standardize != "none":
+            cols = self.feature_cols[self.cat_split:] + (
+                self.target_cols if self.y_kind == KernelKind.RBF else [])
+        aggs = [F.count(F.lit(1)).alias("__n")]
         for c in cols:
             center = F.sum(c) if self.standardize == "hisel" else F.mean(c)
             aggs += [center.alias(f"{c}__center"),
                      F.stddev_pop(c).alias(f"{c}__scale")]
         row = df.agg(*aggs).collect()[0].asDict()
-        out = df
-        for c in cols:
-            out = out.withColumn(
-                c,
-                (F.col(c).cast("double") - F.lit(float(row[f"{c}__center"])))
-                / F.lit(1e-9 + float(row[f"{c}__scale"] or 0.0)))
-        return out
+        return int(row["__n"]), {
+            c: (float(row[f"{c}__center"]),
+                1e-9 + float(row[f"{c}__scale"] or 0.0)) for c in cols}
+
+    @staticmethod
+    def _standardized(df: DataFrame,
+                      moments: Dict[str, Tuple[float, float]]) -> DataFrame:
+        """The standardization projection ``(x - centre) / scale``."""
+        return df.withColumns({
+            c: (F.col(c).cast("double") - F.lit(center)) / F.lit(scale)
+            for c, (center, scale) in moments.items()})
 
     # -- sufficient stats -------------------------------------------------
 
     def sufficient_stats(
         self,
         minibatch_size: int = 250,
-        mode: str = "scale",
+        mode: str = "hash",
         order_col: Optional[str] = None,
         batch_size: Optional[int] = None,
         epochs: int = 1,
         seed: int = 0,
         cache: bool = True,
-        rebalance: bool = True,
         precision: str = "float64",
     ) -> List[Tuple[np.ndarray, np.ndarray, int, int]]:
         """Compute per-outer-batch ``(X^T X, X^T y, rows, minibatches)``.
 
-        ``precision='float32'`` (scale/hash modes only) computes the
-        Gram tiles in float32 with float64 accumulators; parity mode always
-        runs float64 (bit-compatibility with the reference and the
-        pinned oracles).
-
-        In scale mode there is a single outer batch.  In parity mode
+        ``mode="hash"`` has a single outer batch.  In ``mode="parity"``
         outer batches replicate reference ``select.py:159-170``.
 
-        ``cache`` persists the column-pruned input before the two
-        passes over it (standardization agg + sufficient stats) — vital
-        when the upstream plan is expensive (as-of join, image decode);
-        disable when the input is already materialized or too large to
-        cache, in which case the plan is simply evaluated twice.
+        ``precision='float32'`` (hash mode only) computes the Gram tiles
+        in float32 with float64 accumulators; parity mode always runs
+        float64 (bit-compatibility with the reference and the pinned
+        oracles).
 
-        ``rebalance`` (scale mode) round-robin-repartitions the pruned
-        frame before caching.  The upstream point-in-time stages shuffle
-        by entity, so a hot entity leaves one partition holding a large
-        share of the rows; the Gram stage has no per-entity semantics
-        (any row subset is a valid minibatch), so inheriting that skew
-        only buys a straggler task.  The extra shuffle moves just the
-        narrow numeric frame (d+dy doubles per row), not the payloads."""
+        ``cache`` persists the column-pruned input before the two
+        passes over it (row count and standardization aggregate, then
+        sufficient stats) — vital when the upstream plan is expensive
+        (as-of join, image decode); disable when the input is already
+        materialized or too large to cache, in which case the plan is
+        simply evaluated twice."""
+        if mode not in ("hash", "parity"):
+            raise ValueError(f"mode must be 'hash' or 'parity', "
+                             f"not {mode!r}")
+        if mode == "parity" and order_col is None:
+            raise ValueError("parity mode needs order_col")
         needed = list(dict.fromkeys(
             [*self.feature_cols, *self.target_cols]
             + ([order_col] if order_col else [])))
         base = self.df.select(*needed)
-        if rebalance and mode == "scale":
-            spark = base.sparkSession
-            base = base.repartition(spark.sparkContext.defaultParallelism)
         if cache:
             base = base.persist()
         try:
-            df = self._standardized(base)
-            if mode == "scale":
-                return [compute_sufficient_stats_scale(
-                    df, self.feature_cols, self.target_cols,
-                    self.x_kind, self.y_kind, self.cat_split,
-                    minibatch_size, precision=precision)]
+            n, moments = self._moments(base)
             if mode == "hash":
-                return self._hash_stats(df, minibatch_size, order_col,
-                                        epochs, seed, precision)
-            if mode == "parity":
-                if order_col is None:
-                    raise ValueError("parity mode needs order_col")
-                return self._parity_stats(df, minibatch_size, order_col,
-                                          batch_size, epochs, seed)
-            raise ValueError(mode)
+                return self._hash_stats(base, n, moments, minibatch_size,
+                                        order_col, epochs, seed, precision)
+            return self._parity_stats(self._standardized(base, moments), n,
+                                      minibatch_size, order_col,
+                                      batch_size, epochs, seed)
         finally:
             if cache:
                 base.unpersist()
 
-    def _hash_stats(self, df, minibatch_size, order_col, epochs, seed,
-                    precision: str = "float64"):
+    def _hash_stats(self, df, n, moments, minibatch_size, order_col,
+                    epochs, seed, precision: str = "float64"):
         """Deterministic *production* batching: every row is assigned to
         a minibatch by a seeded content hash (``pmod(xxhash64(...),
-        num_mb)``) — no global sort, no single-task stage, and the batch
-        membership (hence the per-batch delta-kernel counts) is
-        independent of partition layout, so results are bit-reproducible
-        across cluster sizes.  One shuffle of the narrow numeric frame.
+        num_mb)``) of ``order_col``, or else of the raw feature and
+        target values — taken before standardization, whose Spark float
+        sums vary in the last bit with the partitioning.  No global
+        sort, no single-task stage, and the batch membership (hence the
+        per-batch delta-kernel counts) is independent of partition
+        layout.  One shuffle of the narrow numeric frame.
 
         ``epochs > 1`` replicates each row into ``epochs`` copies whose
         hashes differ by epoch id, so every epoch lands in a different
-        minibatch grouping — the scale-mode equivalent of the
+        minibatch grouping — the hash-mode equivalent of the
         reference's shuffled-concatenation augmentation
         (``select.py:384-389``): more minibatch diversity per LARS run.
+        The copies are made after the standardization aggregate, so the
+        centres are those of the input rows.
 
-        The stats rows are reduced in two levels grouped by minibatch-id
-        ranges and summed in sorted key order at both levels, so the
-        float accumulation order is fixed at any scale."""
+        The per-minibatch blocks are collected and summed on the driver
+        in minibatch-key order, so the float fold order is fixed at any
+        layout.  The driver holds ``n * epochs / minibatch_size`` rows of
+        ``d*d + d`` doubles — about 25 MB at the 2M-image scaling
+        corpus; past ``spark.driver.maxResultSize`` the collect fails
+        with an error instead of truncating."""
         hash_cols = [order_col] if order_col else [
             *self.feature_cols, *self.target_cols]
-        n = df.count()
         b = max(8, minibatch_size)
         num_mb = max(1, (n * epochs) // b)
         if epochs > 1:
@@ -420,8 +321,8 @@ class SparkHSICSelector:
             h = F.xxhash64(F.lit(seed), F.col("__epoch"), *hash_cols)
         else:
             h = F.xxhash64(F.lit(seed), *hash_cols)
-        df = (df.withColumn("__h", h)
-                .withColumn("__mb", F.pmod("__h", F.lit(num_mb))))
+        df = (self._standardized(df.withColumn("__h", h), moments)
+              .withColumn("__mb", F.pmod("__h", F.lit(num_mb))))
 
         d = len(self.feature_cols)
         dy = len(self.target_cols)
@@ -439,47 +340,25 @@ class SparkHSICSelector:
                 pdf[fc].to_numpy(), pdf[tc].to_numpy(), **kw)
             return _make_stats_row(key[0], bx, by, len(pdf), 1)
 
-        stats = df.groupBy("__mb").applyInPandas(per_minibatch,
-                                                 _STAT_SCHEMA)
-        # two-level deterministic reduce: group minibatch ids into
-        # contiguous ranges, sum each range in key order, then sum the
-        # (at most reduce_groups) range rows in key order on the driver
-        reduce_groups = 64
-        span = max(1, -(-num_mb // reduce_groups))
-
-        def sum_range(key: Tuple[Any, ...],
-                      pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("group_key")
-            xtx = np.sum(np.stack(pdf["xtx"].map(np.asarray)), axis=0)
-            xty = np.sum(np.stack(pdf["xty"].map(np.asarray)), axis=0)
-            return _make_stats_row(int(key[0]), xtx, xty,
-                                   int(pdf["n_rows"].sum()),
-                                   int(pdf["n_batches"].sum()))
-
-        reduced = (stats
-                   .withColumn("__rg",
-                               (F.col("group_key") / F.lit(span))
-                               .cast("long"))
-                   .groupBy("__rg")
-                   .applyInPandas(sum_range, _STAT_SCHEMA)
+        stats = (df.groupBy("__mb")
+                   .applyInPandas(per_minibatch, _STAT_SCHEMA)
                    .toPandas()
                    .sort_values("group_key"))
-        if reduced.empty or int(reduced["n_batches"].sum()) == 0:
+        if stats.empty or int(stats["n_batches"].sum()) == 0:
             raise ValueError("no complete minibatch in hash mode")
-        xtx = np.sum(np.stack(reduced["xtx"].map(np.asarray)),
+        xtx = np.sum(np.stack(stats["xtx"].map(np.asarray)),
                      axis=0).reshape(d, d)
-        xty = np.sum(np.stack(reduced["xty"].map(np.asarray)), axis=0)
-        return [(xtx, xty, int(reduced["n_rows"].sum()),
-                 int(reduced["n_batches"].sum()))]
+        xty = np.sum(np.stack(stats["xty"].map(np.asarray)), axis=0)
+        return [(xtx, xty, int(stats["n_rows"].sum()),
+                 int(stats["n_batches"].sum()))]
 
-    def _parity_stats(self, df, minibatch_size, order_col, batch_size,
+    def _parity_stats(self, df, n, minibatch_size, order_col, batch_size,
                       epochs, seed):
         """Reference-exact batching: global row order → outer batches of
         ``batch_size`` rows (remainder dropped) → optional seeded epoch
         shuffles within each outer batch → minibatches of
         ``minibatch_size`` rows (remainder dropped)."""
         from pyspark.sql import Window
-        n = df.count()
         bs = min(n, batch_size or n)
         num_outer = n // bs
         w = Window.orderBy(order_col)
@@ -553,14 +432,13 @@ class SparkHSICSelector:
         self,
         number_of_features: Optional[int] = None,
         minibatch_size: int = 250,
-        mode: str = "scale",
+        mode: str = "hash",
         order_col: Optional[str] = None,
         batch_size: Optional[int] = None,
         epochs: int = 1,
         seed: int = 0,
         threshold: float = 0.01,
         cache: bool = True,
-        rebalance: bool = True,
         precision: str = "float64",
     ) -> SelectionResult:
         """Full selection.  With ``number_of_features`` set, performs the
@@ -574,7 +452,7 @@ class SparkHSICSelector:
         per_outer = self.sufficient_stats(
             minibatch_size=minibatch_size, mode=mode, order_col=order_col,
             batch_size=batch_size, epochs=epochs, seed=seed, cache=cache,
-            rebalance=rebalance, precision=precision)
+            precision=precision)
         return assemble_selection_result(
             per_outer, self.feature_cols, number_of_features, threshold)
 
@@ -675,7 +553,7 @@ def select_features_by_segment(
     in-kernel NumPy fold over sorted rows is deterministic and free.
     The two shuffles move only the narrow numeric frame and d x d
     blocks — feature payloads never shuffle, exactly like the global
-    scale path.
+    hash path.
 
     Returns a pandas DataFrame ``(segment, rank, feature,
     hsic_score)`` — one row per selected feature per segment, rank by

@@ -203,8 +203,8 @@ def _twin_hash_stats(pdf: pd.DataFrame, fc: List[str], tc: List[str],
                      ) -> Tuple[np.ndarray, np.ndarray, int, int]:
     """Replica of ``SparkHSICSelector._hash_stats``: xxhash64-keyed
     minibatches, per-minibatch ``batch_sufficient_stats`` on rows
-    sorted by (hash, features), two-level reduce summed in sorted key
-    order — identical fold order, no Spark."""
+    sorted by (hash, features), blocks summed in sorted key order —
+    identical fold order, no Spark."""
     d = len(fc)
     dy = len(tc)
     n = len(pdf)
@@ -235,27 +235,12 @@ def _twin_hash_stats(pdf: pd.DataFrame, fc: List[str], tc: List[str],
             g[fc].to_numpy(), g[tc].to_numpy(), **kw)
         blocks[int(mb)] = (bx, by, len(g))
 
-    # two-level reduce in sorted key order (selection.py:461-490)
-    reduce_groups = 64
-    span = max(1, -(-num_mb // reduce_groups))
-    ranges: Dict[int, List[int]] = {}
-    for mb in blocks:
-        rg = int(mb / span)           # double division + cast, as Spark
-        ranges.setdefault(rg, []).append(mb)
-    reduced = []
-    for rg in ranges:
-        mbs = sorted(ranges[rg])
-        xtx = np.sum(np.stack([blocks[m][0].ravel() for m in mbs]),
-                     axis=0)
-        xty = np.sum(np.stack([blocks[m][1] for m in mbs]), axis=0)
-        n_rows = sum(blocks[m][2] for m in mbs)
-        n_batches = sum(1 for m in mbs if blocks[m][2] >= 2)
-        reduced.append((rg, xtx, xty, n_rows, n_batches))
-    reduced.sort(key=lambda t: t[0])
-    xtx = np.sum(np.stack([r[1] for r in reduced]), axis=0).reshape(d, d)
-    xty = np.sum(np.stack([r[2] for r in reduced]), axis=0)
-    return (xtx, xty, sum(r[3] for r in reduced),
-            sum(r[4] for r in reduced))
+    mbs = sorted(blocks)
+    xtx = np.sum(np.stack([blocks[m][0].ravel() for m in mbs]),
+                 axis=0).reshape(d, d)
+    xty = np.sum(np.stack([blocks[m][1] for m in mbs]), axis=0)
+    return (xtx, xty, sum(blocks[m][2] for m in mbs),
+            sum(1 for m in mbs if blocks[m][2] >= 2))
 
 
 def _twin_selector_run(pdf: pd.DataFrame, fc: List[str], tc: List[str],

@@ -116,7 +116,7 @@ def main(argv=None) -> int:
         *[F.col(c).cast("double").alias(c) for c in cols])
     sel = SparkHSICSelector(matrix, cols, ["y"])
     res = sel.run(number_of_features=args.features,
-                  minibatch_size=args.minibatch, mode="scale")
+                  minibatch_size=args.minibatch)
 
     result = {
         "selected": res.features,

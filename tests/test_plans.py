@@ -101,9 +101,10 @@ def test_tpch_q1_partial_aggregation(spark):
 def test_flagship_hash_mode_plan_no_global_sort(spark):
     """The production (hash-mode) batching the flagship entry runs must
     contain NO global sort or single-partition exchange: one hash
-    shuffle on the minibatch key, one tiny shuffle of partial-sum rows.
-    (The old parity path planned a rangepartitioning Sort for the global
-    row_number — the scale-killer this test pins against.)"""
+    shuffle on the minibatch key; the per-minibatch blocks are then
+    collected and summed on the driver.  (The old parity path planned
+    a rangepartitioning Sort for the global row_number — the
+    scale-killer this test pins against.)"""
     from pyspark.sql import Window  # noqa: F401
     from hiselspark.selection import SparkHSICSelector
     import hiselspark.selection as S
@@ -150,28 +151,6 @@ def test_hash_mode_epochs_augment_batches(spark):
     assert r1.features == ["x0"] and r2.features == ["x0"]
     assert r2.n_rows_used >= int(1.9 * r1.n_rows_used)
     assert r2.n_minibatches >= 2 * r1.n_minibatches - 2
-
-
-def test_stats_stage_has_no_feature_row_shuffle(spark):
-    """The sufficient-statistics plan shuffles only the tiny partial-sum
-    rows (one per task), never the feature rows: the mapInPandas stage
-    must sit directly on the scan side with no exchange below it."""
-    from hiselspark.selection import SparkHSICSelector
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    wide = emb.select(
-        F.col("label").cast("double").alias("y"),
-        *[F.col("embedding")[i].cast("double").alias(f"e{i}")
-          for i in range(8)])
-    sel = SparkHSICSelector(wide, [f"e{i}" for i in range(8)], ["y"],
-                            standardize="none")
-    # build the stats DataFrame without executing it
-    from hiselspark.selection import _STAT_SCHEMA  # noqa: F401
-    import hiselspark.selection as S
-    df = wide.select(*sel.feature_cols, "y")
-    stats = df.mapInPandas(
-        lambda it: iter([]), S._STAT_SCHEMA)
-    txt = plan_str(stats, "simple")
-    assert "Exchange" not in txt.split("MapInPandas")[-1]
 
 
 def test_bucketed_join_no_shuffle(spark, tmp_path):

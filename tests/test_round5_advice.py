@@ -136,6 +136,39 @@ def test_bradley_terry_driver_path_equals_distributed(spark):
             == (slow[p]["rating"], slow[p]["wins"], slow[p]["games"])
 
 
+def test_bradley_terry_driver_sums_do_not_wrap(spark):
+    """An arena whose single products c*S and W*S stay under 2^62 but
+    whose per-player sums do not: one player meets seven others once
+    each at S = 2^61 and scale 1, so collapsed ratings make the int64
+    accumulation of D wrap.  The driver path must take the Python-int
+    route and match the formulas evaluated in Python ints."""
+    from hiselspark.operators.rank_eval import bradley_terry
+    s, k_scale, iterations = 2 ** 61, 1, 5
+    games = [("p0", "p1")] + [(f"p{o}", "p0") for o in range(2, 8)]
+    players = sorted({p for g in games for p in g})
+    wins = {p: sum(w == p for w, _ in games) for p in players}
+    c = {}
+    for w, l in games:
+        for a, b in ((w, l), (l, w)):
+            c[a, b] = c.get((a, b), 0) + 1
+    assert max(c.values()) * s < 2 ** 62
+    assert max(wins.values()) * s < 2 ** 62
+    rating = {p: k_scale for p in players}
+    for _ in range(iterations):
+        d = {p: 0 for p in players}
+        for (a, b), n in c.items():
+            d[a] += (n * s) // max(rating[a] + rating[b], 1)
+        raw = {p: (wins[p] * s) // max(d[p], 1) for p in players}
+        den = max(sum(raw.values()) // (len(players) * k_scale), 1)
+        rating = {p: raw[p] // den for p in players}
+
+    df = spark.createDataFrame(games, "w string, l string")
+    got = {r["player"]: r["rating"] for r in
+           bradley_terry(df, "w", "l", iterations=iterations,
+                         scale=k_scale, term_scale=s).collect()}
+    assert got == rating
+
+
 def test_hard_negative_pairs_planted_clusters(spark):
     """Planted two-cluster geometry: positives come from the anchor's
     own cluster, hard negatives from the other; margins positive."""

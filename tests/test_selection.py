@@ -78,22 +78,42 @@ def test_parity_discrete_features(hisel, spark, no_shuffle):
     assert set(res.features) == {"f0", "f3"}
 
 
-def test_scale_mode_recovers_planted_features(spark):
+def test_hash_mode_recovers_planted_features_on_any_layout(spark):
+    """Hash minibatches follow the rows, not the partitioning: the same
+    frame split 3, 7 or 16 ways uses the same rows and minibatches and
+    selects the same features.  Scores may differ only in the last bits
+    of the Spark float sums inside the standardization."""
     x, y = _planted_continuous(n=2000, d=10)
     sdf, cols, ycols = _to_sdf(spark, x, y)
-    sdf = sdf.repartition(8)
-    res = hsic_lasso_select(sdf, cols, ycols, number_of_features=3,
-                            minibatch_size=100, mode="scale")
-    assert set(res.features) == {"f1", "f4", "f6"}
-    assert res.n_minibatches >= 15
-    # HSIC scores of planted features dominate
-    scores = res.hsic_scores
-    planted = scores[["f1", "f4", "f6"]].min()
-    rest = scores.drop(["f1", "f4", "f6"]).max()
-    assert planted > rest
+    runs = [hsic_lasso_select(sdf.repartition(p), cols, ycols,
+                              number_of_features=3, minibatch_size=100)
+            for p in (3, 7, 16)]
+    first = runs[0]
+    for res in runs:
+        assert set(res.features) == {"f1", "f4", "f6"}
+        assert res.n_minibatches >= 15
+        # HSIC scores of planted features dominate
+        scores = res.hsic_scores
+        planted = scores[["f1", "f4", "f6"]].min()
+        rest = scores.drop(["f1", "f4", "f6"]).max()
+        assert planted > rest
+        assert res.features == first.features
+        assert res.n_rows_used == first.n_rows_used
+        assert res.n_minibatches == first.n_minibatches
+        np.testing.assert_allclose(res.hsic_scores.values,
+                                   first.hsic_scores.values,
+                                   rtol=1e-12, atol=0)
 
 
-def test_scale_mode_mixed_types(spark):
+def test_only_hash_and_parity_modes(spark):
+    x, y = _planted_continuous(n=50)
+    sdf, cols, ycols = _to_sdf(spark, x, y)
+    sel = SparkHSICSelector(sdf, cols, ycols)
+    with pytest.raises(ValueError, match="'hash' or 'parity'"):
+        sel.run(number_of_features=2, mode="scale")
+
+
+def test_hash_mode_mixed_types(spark):
     rng = np.random.default_rng(3)
     n = 1500
     xc = rng.integers(0, 4, size=(n, 2))
@@ -117,7 +137,7 @@ def test_autoselect_threshold_cut(spark):
     x, y = _planted_continuous(n=1000)
     sdf, cols, ycols = _to_sdf(spark, x, y)
     res = hsic_lasso_select(sdf, cols, ycols, minibatch_size=250,
-                            mode="scale", threshold=0.01)
+                            threshold=0.01)
     assert set(res.features) >= {"f1", "f6"}
     assert len(res.features) <= 5
 

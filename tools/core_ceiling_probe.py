@@ -1,5 +1,5 @@
 """Hardware-ceiling probe for the CORE stage: the exact per-minibatch
-sufficient-statistics kernel the Spark scale path runs
+sufficient-statistics kernel the Spark selector runs
 (``kernels.batch_sufficient_stats`` on 200-row minibatches of the
 staged feature frame) under bare ``multiprocessing`` — no Spark, no
 JVM, no scheduler — at 8 vs 32 processes.

@@ -1,5 +1,4 @@
-"""Per-sf pin generator for the deterministic non-SQL gate queries —
-round 5's replacement for tools/pin_oracles.py + tools/pin_constants.py.
+"""Per-sf pin generator for the deterministic non-SQL gate queries.
 
 For EVERY sf directory given, each of the 11 pin-family queries gets
 three pieces of evidence before its pins are written:

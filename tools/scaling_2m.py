@@ -51,7 +51,7 @@ def load(which):
     return f"{{corpus}}/{{which}}images", lbl
 pi, pl = load("pilot_")
 select_features_pointintime(pi, pl, number_of_features=4,
-                            minibatch_size=200, mode="scale")
+                            minibatch_size=200)
 release_chunk_caches()
 images, labels = load("")
 walls = []
@@ -59,7 +59,7 @@ for _ in range(2):
     t0 = time.perf_counter()
     res = select_features_pointintime(images, labels,
                                       number_of_features=4,
-                                      minibatch_size=200, mode="scale")
+                                      minibatch_size=200)
     walls.append(time.perf_counter() - t0)
     release_chunk_caches()
 wall = min(walls)

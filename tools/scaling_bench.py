@@ -97,7 +97,7 @@ def load(which):
 from hiselspark.operators.chunked import release_chunk_caches
 pi, pl = load("pilot_")
 select_features_pointintime(pi, pl, number_of_features=4,
-                            minibatch_size=200, mode="scale")
+                            minibatch_size=200)
 release_chunk_caches()
 images, labels = load("")
 # best of 2: host-level neighbors on this VM swing single runs by 2x
@@ -106,7 +106,7 @@ for _ in range(2):
     t0 = time.perf_counter()
     res = select_features_pointintime(images, labels,
                                       number_of_features=4,
-                                      minibatch_size=200, mode="scale")
+                                      minibatch_size=200)
     walls.append(time.perf_counter() - t0)
     release_chunk_caches()
 wall = min(walls)
@@ -124,13 +124,12 @@ with assemble_training_frame(images, labels,
                          *[F.col(c).cast("double").alias(c) for c in fcols])
     frame = frame.persist(); n_core = frame.count()
 sel = SparkHSICSelector(frame, fcols, ["y"], standardize="none")
-sel.run(number_of_features=4, minibatch_size=2000, mode="scale",
+sel.run(number_of_features=4, minibatch_size=2000,
         cache=False)   # warm
 core_wall = []
 for _ in range(3):
     t0 = time.perf_counter()
-    sel.run(number_of_features=4, minibatch_size=2000, mode="scale",
-            cache=False)
+    sel.run(number_of_features=4, minibatch_size=2000, cache=False)
     core_wall.append(time.perf_counter() - t0)
 cw = min(core_wall)
 print(json.dumps({{"cpus": cpus, "wall_sec": wall,

@@ -116,7 +116,7 @@ def run_core():
     frame = spark.read.parquet(f"{{inter}}/frame")
     fcols = [c for c in frame.columns if c != "y"]
     SparkHSICSelector(frame, fcols, ["y"]).run(
-        number_of_features=4, minibatch_size=200, mode="scale")
+        number_of_features=4, minibatch_size=200)
 
 FN = {{"scan": run_scan, "timeline": run_timeline,
       "asof": run_asof, "core": run_core}}
