@@ -7,13 +7,13 @@ feature rows/sec through the full point-in-time pipeline (as-of join +
 windowed features + HSIC selection) on the deterministic synthetic
 image+caption corpus; ``queries`` carries per-query wall seconds.
 The north pipeline is timed at steady state after one untimed warm
-pass (same protocol as tools/scaling_bench.py): one-time session
+pass (same protocol as tools/scaling.py): one-time session
 costs — codegen compilation, JIT, Python-worker spawn — are paid once
 per cluster lifetime, not per job, and measuring them per-run would
 benchmark the JVM bootstrap instead of the engine.
 
 Scaling-efficiency evidence (local[8] vs local[32]) is produced by
-``tools/scaling_bench.py`` (separate sessions needed) and recorded in
+``tools/scaling.py`` (separate sessions needed) and recorded in
 BASELINE.md / BENCH_SCALING.json.
 """
 from __future__ import annotations
@@ -161,16 +161,14 @@ def main() -> None:
          .write.mode("overwrite").parquet(img_path))
     lbls = datagen.labels(spark, N_IMAGES, n_labels=n_labels, seed=42,
                           partitions=max(CPUS // 4, 1))
-    # warm pass (untimed), same protocol as tools/scaling_bench.py: the
+    # warm pass (untimed), same protocol as tools/scaling.py: the
     # first execution of this plan pays one-time session costs (whole-
     # stage-codegen compilation, JIT, Python-worker spawn, shuffle-
     # service setup — measured ~2 min cold vs ~13 s steady-state at
     # sf0.1) that a long-lived cluster amortizes across jobs.  The
     # north metric is steady-state throughput.
-    from hiselspark.operators.chunked import release_chunk_caches
     select_features_pointintime(img_path, lbls, number_of_features=4,
                                 minibatch_size=200)
-    release_chunk_caches()
     # best of two timed reps: this sandbox shares the host with other
     # tenants whose load spikes skew single-shot walls by 2-3x (observed
     # 10s vs 35s for the identical plan minutes apart); the minimum of
@@ -191,7 +189,6 @@ def main() -> None:
         w = time.perf_counter() - t0
         north_sec = min(north_sec, w)
         raw_walls.setdefault("north_pipeline", []).append(round(w, 3))
-        release_chunk_caches()
         t0 = time.perf_counter()
         res32 = select_features_pointintime(img_path, lbls,
                                             number_of_features=4,
@@ -200,7 +197,6 @@ def main() -> None:
         w = time.perf_counter() - t0
         north32_sec = min(north32_sec, w)
         raw_walls.setdefault("north_pipeline_f32", []).append(round(w, 3))
-        release_chunk_caches()
     timings["north_pipeline"] = round(north_sec, 3)
     rows_per_sec = res.n_rows_used / north_sec if north_sec > 0 else 0.0
     timings["north_pipeline_f32"] = round(north32_sec, 3)

@@ -8,9 +8,9 @@ Stages (each a documented operator elsewhere in the package):
    expressions), decoded-pixel statistics (Arrow ``mapInPandas``),
    caption length/token counts (JVM expressions);
 2. entity-timeline engineering — sessionize + lags + trailing rolling
-   aggregates, all sharing ONE ``(entity, ts)`` shuffle;
+   aggregates, all sharing ONE ``(entity, time-bucket)`` shuffle;
 3. leakage-free as-of join of labels onto the feature timeline
-   (backward, strict ``feature_ts <= label_ts``);
+   (backward, ``feature_ts <= label_ts``), clustered the same way;
 4. distributed HSIC-Lasso: per-minibatch sufficient statistics inside
    ``applyInPandas``/``mapInPandas``, sum-reduce, driver LARS.
 """
@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from .functions.image import (phash_bit_columns, phash_hamming_weight,
                               with_pixel_stats)
 from .functions.text import with_caption_features
-from .operators.asof import asof_join
-from .operators.windows import rolling_aggregates, sessionize, with_lags
+from .operators.chunked import chunked_asof_join, chunked_timeline_features
 from .selection import SelectionResult, SparkHSICSelector
 
 
@@ -49,28 +48,15 @@ def engineer_timeline(
     rolling_col: str = "px_mean_g",
     rolling_window_s: float = 6 * 3600.0,
     session_gap_s: float = 1800.0,
-    bucket_seconds: Optional[float] = None,
+    bucket_seconds: float = 7 * 86400.0,
 ) -> DataFrame:
-    """Windowed features over the entity timeline.
-
-    With ``bucket_seconds=None`` every operator shares one entity-key
-    clustering (one shuffle) — simplest plan, but a hot entity's whole
-    timeline lands in one task.  With ``bucket_seconds`` set, the
-    skew-proof chunked twins (operators/chunked.py) cluster by
-    (entity, time-bucket): bit-identical results, straggler-free —
-    the production setting for skewed corpora."""
+    """Sessionize, lag 1 and a trailing rolling mean/count in one pass
+    of the skew-proof chunked operator, clustered by (entity,
+    ``bucket_seconds`` time-bucket), which must cover the rolling
+    window.  Values are bit-identical to the plain
+    ``operators/windows.py`` operators'; the columns come in another
+    order."""
     lag_present = [c for c in lag_cols if c in feats.columns]
-    if bucket_seconds is None:
-        df = sessionize(feats, entity_col, ts_col,
-                        gap_seconds=session_gap_s)
-        df = with_lags(df, entity_col, ts_col, lag_present, lags=(1,))
-        df = rolling_aggregates(df, entity_col, ts_col,
-                                {rolling_col: ["mean", "count"]},
-                                window_seconds=rolling_window_s)
-        return df
-    from .operators.chunked import chunked_timeline_features
-    if rolling_window_s > bucket_seconds:
-        raise ValueError("bucket_seconds must cover the rolling window")
     return chunked_timeline_features(
         feats, entity_col, ts_col,
         lag_cols=lag_present, lags=(1,),
@@ -86,7 +72,7 @@ def assemble_training_frame(
     labels: DataFrame,
     n_phash_bits: int = 16,
     tolerance_seconds: Optional[float] = None,
-    bucket_seconds: Optional[float] = None,
+    bucket_seconds: float = 7 * 86400.0,
 ) -> Iterator[Tuple[DataFrame, List[str]]]:
     """Full point-in-time feature matrix: one row per label
     ``(entity_id, label_ts)`` with the feature vector as of that
@@ -96,8 +82,8 @@ def assemble_training_frame(
         with assemble_training_frame(images, labels) as (frame, cols):
             ...  # every action on ``frame`` goes here
 
-    ``bucket_seconds`` routes the timeline windows AND the as-of join
-    through the skew-proof chunked operators.
+    The timeline windows and the as-of join both run as chunked
+    operators clustered by (entity, ``bucket_seconds`` time-bucket).
 
     Two intermediates fan out to more than one consumer: the featurized
     scan (timeline big side + summary branch) and the timeline (as-of
@@ -136,24 +122,17 @@ def assemble_training_frame(
 
 def _join_labels(labels: DataFrame, feats: DataFrame,
                  tolerance_seconds: Optional[float],
-                 bucket_seconds: Optional[float],
+                 bucket_seconds: float,
                  ) -> Tuple[DataFrame, List[str]]:
     feature_cols = [c for c in feats.columns
                     if c not in ("entity_id", "ts")]
-    if bucket_seconds is None:
-        join_fn = asof_join
-        join_kw = {}
-    else:
-        from .operators.chunked import chunked_asof_join
-        join_fn = chunked_asof_join
-        join_kw = {"bucket_seconds": bucket_seconds}
-    joined = join_fn(
+    joined = chunked_asof_join(
         labels.withColumnRenamed("label_ts", "ts"),
         feats,
         on="entity_id", left_ts="ts", right_ts="ts",
         value_cols=feature_cols,
         tolerance_seconds=tolerance_seconds,
-        **join_kw,
+        bucket_seconds=bucket_seconds,
     )
     # drop label rows with no (complete) feature vector: pre-history
     # labels and first-of-entity rows with null lags
@@ -168,7 +147,7 @@ def select_features_pointintime(
     n_phash_bits: int = 16,
     minibatch_size: int = 200,
     mode: str = "hash",
-    bucket_seconds: Optional[float] = 7 * 86400.0,
+    bucket_seconds: float = 7 * 86400.0,
     precision: str = "float64",
 ) -> SelectionResult:
     """The north-star query: which point-in-time features carry

@@ -76,8 +76,11 @@ def stream_winnow_df(
     ('fingerprint').count()`` — the equivalence the gate asserts.
 
     ``docs`` must be a streaming DataFrame with ``id_col``/
-    ``text_col``.  Returns the streaming aggregate (fingerprint,
-    doc_freq).
+    ``text_col``, and each document must arrive exactly once: the
+    batch table counts DISTINCT ``(id, fingerprint)`` pairs, while the
+    stream counts arrivals, so a re-ingested or updated document
+    counts twice in ``doc_freq``.  Returns the streaming aggregate
+    (fingerprint, doc_freq).
     """
     from ..operators.dedup import winnow_mapper
     run, schema = winnow_mapper(id_col, text_col, k, window)

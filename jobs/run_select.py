@@ -43,26 +43,17 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--buckets", type=int, default=8,
                    help="checkpoint partitions (entity-hash buckets)")
     p.add_argument("--phash-bits", type=int, default=16)
-    p.add_argument("--fused-scan", action="store_true",
-                   help="featurize images via the scan-fused reader "
-                        "(tasks read their parquet row groups directly; "
-                        "image bytes never cross the JVM)")
     return p
 
 
-def load_side(spark, path, as_scan_path: bool = False):
+def open_snapshot(path):
+    """``(table, current snapshot)`` of the SnapshotTable at ``path``,
+    or ``(None, None)`` for a plain parquet path."""
     from hiselspark.sources.snapshots import SnapshotTable
     if os.path.isdir(os.path.join(path, "_snapshots")):
         t = SnapshotTable(path)
-        snap = t.current()
-        if as_scan_path:
-            # hand the snapshot's committed FILE LIST to the fused
-            # scan: same time-travel state, zero JVM blob traffic
-            return list(snap.files), snap.snapshot_id
-        return t.read(spark), snap.snapshot_id
-    if as_scan_path:
-        return path, None
-    return spark.read.parquet(path), None
+        return t, t.current()
+    return None, None
 
 
 def main(argv=None) -> int:
@@ -86,10 +77,15 @@ def main(argv=None) -> int:
         labels = datagen.labels(spark, args.synthetic, seed=42)
         snapshot = f"synthetic-{args.synthetic}-seed42"
     else:
-        images, snap_i = load_side(spark, args.images,
-                                   as_scan_path=args.fused_scan)
-        labels, snap_l = load_side(spark, args.labels)
-        snapshot = f"images:{snap_i} labels:{snap_l}"
+        _, snap_i = open_snapshot(args.images)
+        t_l, snap_l = open_snapshot(args.labels)
+        # images go to the fused scan as a path or as the snapshot's
+        # committed file list (same time-travel state): image bytes
+        # never cross the JVM
+        images = list(snap_i.files) if snap_i else args.images
+        labels = t_l.read(spark) if t_l else spark.read.parquet(args.labels)
+        snapshot = (f"images:{snap_i and snap_i.snapshot_id} "
+                    f"labels:{snap_l and snap_l.snapshot_id}")
 
     run = PartitionedRun(args.output, input_snapshot=snapshot)
     # the bucket jobs share one scan + timeline: the cached upstream
