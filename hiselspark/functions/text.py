@@ -16,13 +16,6 @@ STOPWORDS = [
     "for", "on", "with", "as", "this", "by", "at", "be", "are",
 ]
 
-TOKEN_PATTERN = r"[A-Za-z0-9_]+|[^\sA-Za-z0-9_]"  # BPE-ish word/punct split
-
-
-def caption_length(col: str = "caption") -> Column:
-    return F.length(col)
-
-
 def tokens(col) -> Column:
     """Whitespace token array (split on runs of whitespace; empty or
     all-whitespace text yields an EMPTY array, not ['']).  The single
@@ -40,19 +33,6 @@ def token_count(col: str = "caption") -> Column:
     """Whitespace token count (split on runs of whitespace)."""
     c = F.trim(F.col(col))
     return F.when(c == "", 0).otherwise(F.size(F.split(c, r"\s+")))
-
-
-def regex_token_count(col: str = "caption") -> Column:
-    """BPE-ish token count: words and punctuation counted separately."""
-    return F.size(F.regexp_extract_all(F.col(col), F.lit(TOKEN_PATTERN), 0))
-
-
-def with_caption_features(df: DataFrame,
-                          col: str = "caption") -> DataFrame:
-    return (df
-            .withColumn("caption_len", caption_length(col).cast("int"))
-            .withColumn("caption_tokens", token_count(col).cast("int"))
-            .withColumn("caption_rtokens", regex_token_count(col).cast("int")))
 
 
 def with_quality_score(df: DataFrame, col: str = "text",

@@ -19,7 +19,8 @@ current through** (``source_version``).  A call:
    compact in the range is skipped, an upsert/overwrite raises rather
    than silently corrupting the derived table);
 2. applies the row-wise ``transform`` (e.g.
-   :func:`hiselspark.pipeline.featurize_images`) to the delta ONLY;
+   :func:`hiselspark.sources.fused_scan.featurize_images_fused` on
+   the delta DataFrame) to the delta ONLY;
 3. appends the result in one atomic commit stamped with the new
    ``source_version``.
 

@@ -20,9 +20,11 @@ filters are pushed below the clustering repartition, so its exchange
 never matches the big side's and is not reused — each branch
 re-evaluates the operator's input (measured on the pipeline's
 training frame without its caches: the fused image scan ran 3 times
-and the timeline twice).  The operators do not persist; a caller whose
-input is expensive (image decode, an upstream timeline) materializes
-it first, as ``pipeline.assemble_training_frame`` does.  (No
+and the timeline twice).  One cache rule holds for every chunked
+operator, here and in ``operators/encoding.py``: operators never
+persist; a caller whose input is expensive (image decode, an upstream
+timeline) materializes it first and unpersists it when done, as
+``pipeline.assemble_training_frame`` does.  (No
 broadcast hints: a per-(entity, bucket) table grows with the corpus,
 and the driver-side broadcast build measurably dominated the stage
 wall even at 500k rows; AQE may still choose broadcast when a summary
@@ -58,60 +60,24 @@ from .windows import ts_seconds
 _B = "__bucket"
 _CTX = "__ctx"
 
-# persisted intermediates of chunked-operator calls; a long-lived
-# session releases them with release_chunk_caches() once the returned
-# frames are materialized (they are tiny relative to executor memory,
-# but unbounded accumulation across many calls eventually evicts)
-_LIVE_CACHES: list = []
-
-
-def _remember(df: DataFrame) -> DataFrame:
-    _LIVE_CACHES.append(df)
-    return df
-
-
-def release_chunk_caches() -> int:
-    """Unpersist every cached intermediate created by chunked operators
-    so far.  Call after materializing their outputs (count/write/
-    collect); returns the number of frames released.  Safe to call any
-    time — an unpersisted upstream only means recomputation if the
-    output is re-evaluated later."""
-    n = 0
-    while _LIVE_CACHES:
-        df = _LIVE_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
-
-
 def _bucket_of(ts_col, bucket_seconds: float) -> Column:
     us = (ts_seconds(ts_col) * 1_000_000).cast("long")
     return F.floor(us / F.lit(int(bucket_seconds * 1_000_000)))
 
 
-def _cluster(df: DataFrame, entity_col: str,
-             materialize: bool = True) -> DataFrame:
+def _cluster(df: DataFrame, entity_col: str) -> DataFrame:
     """THE one full-frame shuffle: hash-cluster on (entity, bucket).
     Downstream windows/groupBys on these keys reuse the partitioning.
 
-    ``materialize=True`` persists the clustered frame and registers it
-    for :func:`release_chunk_caches` (``encoding._chunked_before_stats``
-    uses it).  The operators in this module pass ``False``: each of
-    their branches (summary table, join big side) then re-evaluates
-    the input, because the branches' exchanges differ in columns and
-    pushed-down filters and Spark does not reuse one for the other.
-    Persisting here measured slower than that re-evaluation on a
-    cheap input (same-day A/B at 2M images: no-persist plan 1.5×
-    faster end-to-end, ``plan_cost_ab`` in BENCH_SCALING.json); a
-    caller with an expensive input materializes it instead, as
-    ``pipeline.assemble_training_frame`` does."""
-    out = df.repartition(F.col(entity_col), F.col(_B))
-    if materialize:
-        out = _remember(out.persist())
-    return out
+    Never persisted: each branch of the caller (summary table, join
+    big side) re-evaluates the input, because the branches' exchanges
+    differ in columns and pushed-down filters and Spark does not reuse
+    one for the other.  Persisting here measured slower than that
+    re-evaluation on a cheap input (same-day A/B at 2M images:
+    no-persist plan 1.5× faster end-to-end, ``plan_cost_ab`` in
+    BENCH_SCALING.json); a caller with an expensive input materializes
+    it instead, as ``pipeline.assemble_training_frame`` does."""
+    return df.repartition(F.col(entity_col), F.col(_B))
 
 
 # ---------------------------------------------------------------------------
@@ -163,8 +129,7 @@ def chunked_lags(
     k = max(lags)
     cols = list(cols)
     clustered = _cluster(
-        df.withColumn(_B, _bucket_of(ts_col, bucket_seconds)), entity_col,
-        materialize=False)
+        df.withColumn(_B, _bucket_of(ts_col, bucket_seconds)), entity_col)
     sort_struct = F.struct(F.col(ts_col).alias("__t"),
                            *[F.col(c).alias(c) for c in cols])
     carries = _carry_arrays(
@@ -239,7 +204,7 @@ def chunked_rolling(
     tagged = df.withColumn(_B, _bucket_of(ts_col, bucket_seconds))
     clustered = _cluster(
         _overlap_context(tagged, ts_col, bucket_seconds, window_seconds),
-        entity_col, materialize=False)
+        entity_col)
     upper = 0 if include_current else -1
     w = (Window.partitionBy(entity_col, _B)
                .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
@@ -303,8 +268,7 @@ def chunked_sessionize(
     """Exact twin of ``windows.sessionize`` without the per-entity
     straggler (two-level scan, see module docstring)."""
     clustered = _cluster(
-        df.withColumn(_B, _bucket_of(ts_col, bucket_seconds)), entity_col,
-        materialize=False)
+        df.withColumn(_B, _bucket_of(ts_col, bucket_seconds)), entity_col)
     flagged, summary = _session_pieces(clustered, entity_col, ts_col,
                                        gap_seconds)
     joined = flagged.join(summary, [entity_col, _B])
@@ -346,7 +310,7 @@ def chunked_timeline_features(
     tagged = df.withColumn(_B, _bucket_of(ts_col, bucket_seconds))
     clustered = _cluster(
         _overlap_context(tagged, ts_col, bucket_seconds, rolling_window_s),
-        entity_col, materialize=False)
+        entity_col)
 
     # rolling first — the only op that needs the context rows
     w_range = (Window.partitionBy(entity_col, _B)
@@ -491,7 +455,7 @@ def chunked_asof_join(
     )
     unioned = (f_tagged.unionByName(l_tagged)
                .withColumn(_B, _bucket_of("__t", bucket_seconds)))
-    clustered = _cluster(unioned, "__k", materialize=False)
+    clustered = _cluster(unioned, "__k")
 
     # per-bucket last feature struct ("last" in (t, side) order — the
     # same order the running window uses).  ONE aggregation pass over
@@ -654,7 +618,7 @@ def chunked_rolling_quantile(
     tagged = df.withColumn(_B, _bucket_of(ts_col, bucket_seconds))
     clustered = _cluster(
         _overlap_context(tagged, ts_col, bucket_seconds, window_seconds),
-        entity_col, materialize=False)
+        entity_col)
     w = (Window.partitionBy(entity_col, _B)
                .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
                .rangeBetween(-int(window_seconds * 1_000_000), 0))
@@ -706,7 +670,7 @@ def chunked_rolling_distinct(
     tagged = df.withColumn(_B, _bucket_of(ts_col, bucket_seconds))
     clustered = _cluster(
         _overlap_context(tagged, ts_col, bucket_seconds, window_seconds),
-        entity_col, materialize=False)
+        entity_col)
     withus = clustered.withColumn(
         "__us", (ts_seconds(ts_col) * 1_000_000).cast("long"))
 

@@ -116,6 +116,8 @@ def _chunked_before_stats(
     shuffle) are prefix-scanned per category, and the prior-bucket
     offsets joined back on the clustering keys — one full-frame
     shuffle total, hot categories split across ``span/bucket`` tasks.
+    Nothing is persisted: the local-frame branch and the totals branch
+    each re-evaluate the (cheap) input, as in every chunked operator.
 
     Rows with equal timestamps always share a bucket (the bucket is a
     function of the timestamp), so the bucket split can never divide a

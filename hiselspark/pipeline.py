@@ -4,9 +4,10 @@ feature selection.
 
 Stages (each a documented operator elsewhere in the package):
 
-1. featurize images — phash→64 bit features + hamming weight (JVM
-   expressions), decoded-pixel statistics (Arrow ``mapInPandas``),
-   caption length/token counts (JVM expressions);
+1. featurize images (``sources/fused_scan.py``) — decoded-pixel
+   statistics and caption length/token counts in one pandas body per
+   Arrow batch, then phash bit features + hamming weight (JVM
+   expressions);
 2. entity-timeline engineering — sessionize + lags + trailing rolling
    aggregates, all sharing ONE ``(entity, time-bucket)`` shuffle;
 3. leakage-free as-of join of labels onto the feature timeline
@@ -21,23 +22,9 @@ from typing import Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from .functions.image import (phash_bit_columns, phash_hamming_weight,
-                              with_pixel_stats)
-from .functions.text import with_caption_features
 from .operators.chunked import chunked_asof_join, chunked_timeline_features
 from .selection import SelectionResult, SparkHSICSelector
-
-
-def featurize_images(images: DataFrame, n_phash_bits: int = 16) -> DataFrame:
-    """Image rows -> numeric/categorical feature columns (payload
-    dropped after pixel stats — blobs never cross a shuffle)."""
-    df = phash_hamming_weight(images)
-    df = phash_bit_columns(df, n_bits=n_phash_bits)
-    df = with_caption_features(df)
-    df = with_pixel_stats(df)
-    # raw phash is near-unique per image — useless (and harmful) as a
-    # delta-kernel feature; its information rides in the bit columns
-    return df.drop("caption", "fmt", "image_id", "phash")
+from .sources.fused_scan import featurize_images_fused
 
 
 def engineer_timeline(
@@ -93,18 +80,14 @@ def assemble_training_frame(
     exits, also when it raises.  ``frame`` stays valid after the block
     but recomputes from the sources.
 
-    ``images`` is either a DataFrame (blobs cross the Arrow socket into
-    the pixel-stats worker) or a parquet directory path / explicit file
-    list (e.g. a snapshot's committed files), which routes through the
-    scan-fused featurizer (``sources/fused_scan.py``): tasks open their
-    row groups directly, so image bytes never touch the JVM — the
-    production setting for payload-heavy corpora."""
-    if isinstance(images, (str, list, tuple)):
-        from .sources.fused_scan import featurize_images_fused
-        featurized = featurize_images_fused(labels.sparkSession, images,
-                                            n_phash_bits)
-    else:
-        featurized = featurize_images(images, n_phash_bits)
+    ``images`` is a parquet directory path, an explicit file list
+    (e.g. a snapshot's committed files) or a DataFrame; all three run
+    the one featurizer, :func:`featurize_images_fused`.  With a path
+    or file list its tasks open their row groups directly, so image
+    bytes never touch the JVM — the production setting for
+    payload-heavy corpora."""
+    featurized = featurize_images_fused(labels.sparkSession, images,
+                                        n_phash_bits)
     featurized = featurized.persist()
     try:
         feats = engineer_timeline(

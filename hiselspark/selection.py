@@ -30,7 +30,6 @@ Two batching modes:
 """
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence, Tuple
 
@@ -61,6 +60,29 @@ def _classify_columns(df: DataFrame, cols: Sequence[str]) -> Dict[str, str]:
         else:
             raise TypeError(f"column {c}: unsupported feature type {dt}")
     return out
+
+
+def _kernel_routing(df: DataFrame, feature_cols: Sequence[str],
+                    target_cols: Sequence[str]
+                    ) -> Tuple[List[str], int, KernelKind, KernelKind]:
+    """``(features with categorical columns first, cat_split, x_kind,
+    y_kind)`` from the Spark schema — the reference's ``catcont_split``
+    convention (``select.py:365-371``)."""
+    kinds = _classify_columns(df, feature_cols)
+    cat = [c for c in feature_cols if kinds[c] == "discrete"]
+    cont = [c for c in feature_cols if kinds[c] == "continuous"]
+    if not cat:
+        x_kind = KernelKind.RBF
+    elif not cont:
+        x_kind = KernelKind.DELTA
+    else:
+        x_kind = KernelKind.MIXED
+    y_kinds = set(_classify_columns(df, target_cols).values())
+    if len(y_kinds) > 1:
+        raise TypeError("target columns must share one type family")
+    y_kind = (KernelKind.DELTA if y_kinds == {"discrete"}
+              else KernelKind.RBF)
+    return cat + cont, len(cat), x_kind, y_kind
 
 
 @dataclass
@@ -101,11 +123,11 @@ def _make_stats_row(group_key, xtx, xty, n_rows, n_batches):
     })
 
 
-def _stats_kwargs(x_kind: KernelKind, cat_split: int, dy: int,
-                  precision: str = "float64") -> dict:
+def _stats_kwargs(x_kind: KernelKind, y_kind: KernelKind, cat_split: int,
+                  dy: int, precision: str = "float64") -> dict:
     return dict(
         x_kind=x_kind,
-        y_kind=KernelKind.RBF,   # y kind resolved per-call below
+        y_kind=y_kind,
         x_bandwidth=1.0,                      # reference select.py:432
         y_bandwidth=float(np.sqrt(dy)),       # reference select.py:433
         cat_split=cat_split,
@@ -178,27 +200,11 @@ class SparkHSICSelector:
         df: DataFrame,
         feature_cols: Sequence[str],
         target_cols: Sequence[str],
-        standardize: str = "hisel",   # 'hisel' | 'zscore' | 'none'
     ):
-        kinds = _classify_columns(df, feature_cols)
-        cat = [c for c in feature_cols if kinds[c] == "discrete"]
-        cont = [c for c in feature_cols if kinds[c] == "continuous"]
-        self.feature_cols = cat + cont
-        self.cat_split = len(cat)
-        if self.cat_split == 0:
-            self.x_kind = KernelKind.RBF
-        elif self.cat_split == len(self.feature_cols):
-            self.x_kind = KernelKind.DELTA
-        else:
-            self.x_kind = KernelKind.MIXED
-        y_kinds = set(_classify_columns(df, target_cols).values())
-        if len(y_kinds) > 1:
-            raise TypeError("target columns must share one type family")
-        self.y_kind = (KernelKind.DELTA if y_kinds == {"discrete"}
-                       else KernelKind.RBF)
+        (self.feature_cols, self.cat_split, self.x_kind,
+         self.y_kind) = _kernel_routing(df, feature_cols, target_cols)
         self.target_cols = list(target_cols)
         self.df = df
-        self.standardize = standardize
         self._paths: List[np.ndarray] = []
 
     # -- preprocessing ----------------------------------------------------
@@ -206,19 +212,15 @@ class SparkHSICSelector:
     def _moments(self, df: DataFrame
                  ) -> Tuple[int, Dict[str, Tuple[float, float]]]:
         """One aggregate over the input rows: the row count and each
-        standardized column's ``(centre, scale)``.  'hisel' replicates
+        continuous column's ``(centre, scale)``.  The centre replicates
         the reference's quirk of subtracting the column SUM, not the
-        mean (``select.py:379-383``) — kept for parity; 'zscore' is the
-        sane variant recommended at scale.  Discrete columns pass
-        through."""
-        cols: List[str] = []
-        if self.standardize != "none":
-            cols = self.feature_cols[self.cat_split:] + (
-                self.target_cols if self.y_kind == KernelKind.RBF else [])
+        mean (``select.py:379-383``) — kept for parity.  Discrete
+        columns pass through."""
+        cols = self.feature_cols[self.cat_split:] + (
+            self.target_cols if self.y_kind == KernelKind.RBF else [])
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in cols:
-            center = F.sum(c) if self.standardize == "hisel" else F.mean(c)
-            aggs += [center.alias(f"{c}__center"),
+            aggs += [F.sum(c).alias(f"{c}__center"),
                      F.stddev_pop(c).alias(f"{c}__scale")]
         row = df.agg(*aggs).collect()[0].asDict()
         return int(row["__n"]), {
@@ -243,7 +245,6 @@ class SparkHSICSelector:
         batch_size: Optional[int] = None,
         epochs: int = 1,
         seed: int = 0,
-        cache: bool = True,
         precision: str = "float64",
     ) -> List[Tuple[np.ndarray, np.ndarray, int, int]]:
         """Compute per-outer-batch ``(X^T X, X^T y, rows, minibatches)``.
@@ -256,12 +257,10 @@ class SparkHSICSelector:
         float64 (bit-compatibility with the reference and the pinned
         oracles).
 
-        ``cache`` persists the column-pruned input before the two
-        passes over it (row count and standardization aggregate, then
-        sufficient stats) — vital when the upstream plan is expensive
-        (as-of join, image decode); disable when the input is already
-        materialized or too large to cache, in which case the plan is
-        simply evaluated twice."""
+        The column-pruned input is persisted for the two passes over
+        it (row count and standardization aggregate, then sufficient
+        stats) — vital when the upstream plan is expensive (as-of
+        join, image decode) — and unpersisted on return."""
         if mode not in ("hash", "parity"):
             raise ValueError(f"mode must be 'hash' or 'parity', "
                              f"not {mode!r}")
@@ -270,9 +269,7 @@ class SparkHSICSelector:
         needed = list(dict.fromkeys(
             [*self.feature_cols, *self.target_cols]
             + ([order_col] if order_col else [])))
-        base = self.df.select(*needed)
-        if cache:
-            base = base.persist()
+        base = self.df.select(*needed).persist()
         try:
             n, moments = self._moments(base)
             if mode == "hash":
@@ -282,8 +279,7 @@ class SparkHSICSelector:
                                       minibatch_size, order_col,
                                       batch_size, epochs, seed)
         finally:
-            if cache:
-                base.unpersist()
+            base.unpersist()
 
     def _hash_stats(self, df, n, moments, minibatch_size, order_col,
                     epochs, seed, precision: str = "float64"):
@@ -327,8 +323,8 @@ class SparkHSICSelector:
         d = len(self.feature_cols)
         dy = len(self.target_cols)
         fc, tc = list(self.feature_cols), list(self.target_cols)
-        kw = _stats_kwargs(self.x_kind, self.cat_split, dy, precision)
-        kw["y_kind"] = self.y_kind
+        kw = _stats_kwargs(self.x_kind, self.y_kind, self.cat_split, dy,
+                           precision)
 
         def per_minibatch(key: Tuple[Any, ...],
                           pdf: pd.DataFrame) -> pd.DataFrame:
@@ -399,8 +395,7 @@ class SparkHSICSelector:
         d = len(self.feature_cols)
         dy = len(self.target_cols)
         fc, tc = list(self.feature_cols), list(self.target_cols)
-        kw = _stats_kwargs(self.x_kind, self.cat_split, dy)
-        kw["y_kind"] = self.y_kind
+        kw = _stats_kwargs(self.x_kind, self.y_kind, self.cat_split, dy)
 
         def per_minibatch(key: Tuple[Any, ...],
                           pdf: pd.DataFrame) -> pd.DataFrame:
@@ -438,7 +433,6 @@ class SparkHSICSelector:
         epochs: int = 1,
         seed: int = 0,
         threshold: float = 0.01,
-        cache: bool = True,
         precision: str = "float64",
     ) -> SelectionResult:
         """Full selection.  With ``number_of_features`` set, performs the
@@ -451,7 +445,7 @@ class SparkHSICSelector:
             raise ValueError("need at least 2 features")
         per_outer = self.sufficient_stats(
             minibatch_size=minibatch_size, mode=mode, order_col=order_col,
-            batch_size=batch_size, epochs=epochs, seed=seed, cache=cache,
+            batch_size=batch_size, epochs=epochs, seed=seed,
             precision=precision)
         return assemble_selection_result(
             per_outer, self.feature_cols, number_of_features, threshold)
@@ -516,9 +510,8 @@ def hsic_lasso_select(
     **kwargs,
 ) -> SelectionResult:
     """Functional facade (reference top-level ``select.select``)."""
-    return SparkHSICSelector(df, feature_cols, target_cols,
-                             standardize=kwargs.pop("standardize", "hisel")
-                             ).run(number_of_features, **kwargs)
+    return SparkHSICSelector(df, feature_cols, target_cols).run(
+        number_of_features, **kwargs)
 
 
 def select_features_by_segment(
@@ -542,18 +535,20 @@ def select_features_by_segment(
     n_minibatches))`` -> one ``applyInPandas`` computing each
     minibatch's ``(d, d)``/``(d,)`` blocks (rows sorted by
     ``order_col`` inside the group, so the result is bit-identical on
-    any partition layout) -> per-segment sum in minibatch order -> the
-    tiny per-segment LARS runs on the driver (O(segments * d^3), with
-    d tens and segments thousands this is milliseconds each).
+    any partition layout) -> the driver collects the blocks and sums
+    each segment's in minibatch order, as hash mode does -> the tiny
+    per-segment LARS runs on the driver (O(segments * d^3), with d
+    tens and segments thousands this is milliseconds each).
 
     Standardization is PER MINIBATCH (each minibatch z-scores its own
     rows inside the kernel, batch-norm style): a Spark aggregate for
     per-segment means would be a layout-dependent float sum, breaking
     bit-reproducibility, and would cost an extra shuffle — while the
     in-kernel NumPy fold over sorted rows is deterministic and free.
-    The two shuffles move only the narrow numeric frame and d x d
-    blocks — feature payloads never shuffle, exactly like the global
-    hash path.
+    The one shuffle moves only the narrow numeric frame — feature
+    payloads never shuffle, exactly like the global hash path.  The
+    driver holds ``segments * n_minibatches`` blocks of ``d*d + d``
+    doubles.
 
     Returns a pandas DataFrame ``(segment, rank, feature,
     hsic_score)`` — one row per selected feature per segment, rank by
@@ -570,36 +565,20 @@ def select_features_by_segment(
     if order_col is None:
         raise ValueError("order_col is required: it keys the "
                          "deterministic minibatch hash")
-    kinds = _classify_columns(df, feature_cols)
-    cat = [c for c in feature_cols if kinds[c] == "discrete"]
-    cont = [c for c in feature_cols if kinds[c] == "continuous"]
-    fc = cat + cont
-    cat_split = len(cat)
-    if cat_split == 0:
-        x_kind = KernelKind.RBF
-    elif cat_split == len(fc):
-        x_kind = KernelKind.DELTA
-    else:
-        x_kind = KernelKind.MIXED
-    y_kinds = set(_classify_columns(df, target_cols).values())
-    if len(y_kinds) > 1:
-        raise TypeError("target columns must share one type family")
-    y_kind = (KernelKind.DELTA if y_kinds == {"discrete"}
-              else KernelKind.RBF)
+    fc, cat_split, x_kind, y_kind = _kernel_routing(
+        df, feature_cols, target_cols)
     tc = list(target_cols)
     d, dy = len(fc), len(tc)
     k = min(number_of_features, d - 1)
 
     base = df.select(segment_col, order_col, *fc, *tc)
     z_y = y_kind == KernelKind.RBF
-    kw = _stats_kwargs(x_kind, cat_split, dy, precision)
-    kw["y_kind"] = y_kind
+    kw = _stats_kwargs(x_kind, y_kind, cat_split, dy, precision)
     schema = T.StructType([
         T.StructField("segment", T.LongType()),
         T.StructField("mb", T.IntegerType()),
         T.StructField("xtx", T.ArrayType(T.DoubleType())),
         T.StructField("xty", T.ArrayType(T.DoubleType())),
-        T.StructField("n_rows", T.LongType()),
     ])
 
     def group_stats(key: Tuple[Any, ...],
@@ -610,9 +589,8 @@ def select_features_by_segment(
         y = pdf[tc].to_numpy(dtype=np.float64)
         if len(x) < 8:      # degenerate minibatch: no Gram to center
             return pd.DataFrame(
-                {"segment": [], "mb": [], "xtx": [], "xty": [],
-                 "n_rows": []}).astype(
-                {"segment": "int64", "mb": "int32", "n_rows": "int64"})
+                {"segment": [], "mb": [], "xtx": [], "xty": []}).astype(
+                {"segment": "int64", "mb": "int32"})
         if cat_split < d:       # z-score the continuous block in-batch
             xc = x[:, cat_split:]
             x[:, cat_split:] = ((xc - xc.mean(axis=0))
@@ -622,8 +600,7 @@ def select_features_by_segment(
         bx, by = batch_sufficient_stats(x, y, **kw)
         return pd.DataFrame({
             "segment": [int(seg)], "mb": [int(mb)],
-            "xtx": [bx.ravel().tolist()], "xty": [by.ravel().tolist()],
-            "n_rows": [len(x)]})
+            "xtx": [bx.ravel().tolist()], "xty": [by.ravel().tolist()]})
 
     mb = F.pmod(F.xxhash64(F.col(order_col)),
                 F.lit(n_minibatches)).cast("int")
@@ -631,36 +608,17 @@ def select_features_by_segment(
              .withColumn("__mb", mb)
              .groupBy(F.col(segment_col).cast("long").alias("__seg"),
                       F.col("__mb"))
-             .applyInPandas(group_stats, schema))
-
-    red_schema = T.StructType([
-        T.StructField("segment", T.LongType()),
-        T.StructField("xtx", T.ArrayType(T.DoubleType())),
-        T.StructField("xty", T.ArrayType(T.DoubleType())),
-        T.StructField("n_rows", T.LongType()),
-    ])
-
-    def sum_segment(pdf):
-        pdf = pdf.sort_values("mb")     # fixed fold order across layouts
-        xtx = np.sum(np.stack(pdf["xtx"].map(np.asarray)), axis=0)
-        xty = np.sum(np.stack(pdf["xty"].map(np.asarray)), axis=0)
-        return pd.DataFrame({
-            "segment": [int(pdf["segment"].iloc[0])],
-            "xtx": [xtx.tolist()], "xty": [xty.tolist()],
-            "n_rows": [int(pdf["n_rows"].sum())]})
-
-    per_seg = (stats.groupBy("segment")
-                    .applyInPandas(sum_segment, red_schema)
-                    .toPandas())
+             .applyInPandas(group_stats, schema)
+             .toPandas()
+             .sort_values(["segment", "mb"]))   # fixed fold order
 
     out_rows = []
-    for r in per_seg.itertuples():
-        xtx = np.asarray(r.xtx).reshape(d, d)
-        xty = np.asarray(r.xty)
-        active, _ = lar.solve_gram(xtx, xty, k)
+    for seg, blocks in stats.groupby("segment", sort=True):
+        xtx = np.sum(np.stack(blocks["xtx"].map(np.asarray)), axis=0)
+        xty = np.sum(np.stack(blocks["xty"].map(np.asarray)), axis=0)
+        active, _ = lar.solve_gram(xtx.reshape(d, d), xty, k)
         for rank, idx in enumerate(active[:k], start=1):
-            out_rows.append((int(r.segment), rank, fc[idx],
-                             float(xty[idx])))
+            out_rows.append((int(seg), rank, fc[idx], float(xty[idx])))
     return pd.DataFrame(
         out_rows, columns=["segment", "rank", "feature", "hsic_score"]
     ).sort_values(["segment", "rank"]).reset_index(drop=True)

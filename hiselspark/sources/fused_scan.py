@@ -1,55 +1,71 @@
-"""Scan-fused image featurization: decode inside the scan task.
+"""The image featurizer: one pandas body per Arrow batch.
 
-The DataFrame route (``pipeline.featurize_images``) reads the parquet
-scan in the JVM, ships every image blob over the Arrow socket into a
-Python worker, and ships the features back.  That JVM->Python byte-pump
-is pure overhead: the Python worker is going to be the one looking at
-the bytes anyway.  Measured on this box it is THE bottleneck of the
-full pipeline at high core counts — payload movement over one memory
-bus does not scale with cores.
+:func:`featurize_images_fused` is the package's only image featurizer.
+Every input type runs the same per-batch body — pixel statistics
+(``functions.image._pixel_stats_frame``), then caption features
+(:func:`_caption_features_pandas`) — so the routes cannot drift apart:
 
-This module removes the round trip: the work items are (parquet file,
-row-group) pairs — a tiny DataFrame — and each Spark task opens its
-row group DIRECTLY with pyarrow, decodes, reduces the pixels to
-statistics, computes the caption features, and emits only the narrow
-numeric frame.  Image bytes flow disk -> Python worker, touching
-neither the JVM heap nor the worker socket.  On a real cluster this is
-the standard payload-scan pattern (Petastorm-style data loading,
-`binaryFile`-source feature extraction): Catalyst still owns everything
-downstream of the narrow frame — the windows, joins and aggregation
-plans are unchanged.
+* a parquet directory or an explicit file list (e.g. a snapshot's
+  committed files) — the work items are (parquet file, row-group)
+  pairs, a tiny DataFrame, and each Spark task opens its row group
+  directly with pyarrow, decodes, reduces the pixels to statistics,
+  computes the caption features and emits only the narrow numeric
+  frame.  Image bytes flow disk -> Python worker, touching neither the
+  JVM heap nor the worker socket.  This is the production route: the
+  JVM->Python byte-pump of a DataFrame scan was THE bottleneck of the
+  full pipeline at high core counts (payload movement over one memory
+  bus does not scale with cores).  It is the standard payload-scan
+  pattern (Petastorm-style data loading, `binaryFile`-source feature
+  extraction); Catalyst still owns everything downstream of the
+  narrow frame.  Trade-offs: no Catalyst pushdown INTO this scan
+  (row-group granularity only) — fine for full-corpus featurization,
+  wrong for selective queries; the row-group listing happens on the
+  driver (file footers only — the same metadata an Iceberg manifest
+  read would touch).
+* a DataFrame (a synthetic corpus, an incremental delta) —
+  ``mapInPandas`` over the same body; blobs cross the JVM->Python
+  boundary once.  Columns outside the image schema pass through (e.g.
+  a row key the caller wants back).
 
-Trade-offs vs the DataFrame route (both kept on purpose):
-* no Catalyst pushdown INTO this scan (row-group granularity only) —
-  fine for full-corpus featurization, wrong for selective queries;
-* the row-group listing happens on the driver (file footers only —
-  the same metadata an Iceberg manifest read would touch).
-
-Row-for-row equality with ``pipeline.featurize_images`` is asserted in
-``tests/test_pipeline.py``.
+The phash bit unpack and hamming weight stay JVM expressions
+downstream of both (free there, and they would bloat the narrow
+frame).  ``tests/test_pipeline.py`` asserts that path and DataFrame
+inputs give identical output, also on whitespace/Unicode edge captions.
 """
 from __future__ import annotations
 
 import os
 import re
-from typing import Iterator, List, Optional
+from typing import Iterator, Optional
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from ..functions.image import PIXEL_STAT_FIELDS, _pixel_stats_frame
-from ..functions.text import TOKEN_PATTERN
+
+TOKEN_PATTERN = r"[A-Za-z0-9_]+|[^\sA-Za-z0-9_]"  # BPE-ish word/punct split
 
 _SOURCE_COLS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash",
                 "entity_id", "ts"]
+# source columns the featurizer keeps, ahead of the feature columns
+_KEPT_COLS = ["entity_id", "ts", "w", "h", "phash"]
+
+_CAPTION_FIELDS = [
+    T.StructField("caption_len", T.IntegerType()),
+    T.StructField("caption_tokens", T.IntegerType()),
+    T.StructField("caption_rtokens", T.IntegerType()),
+]
 
 
 def _caption_features_pandas(out: pd.DataFrame,
                              col: str = "caption") -> pd.DataFrame:
-    """Vectorized pandas twins of functions.text.with_caption_features
-    (caption_len / caption_tokens / caption_rtokens) — computed worker-
-    side so the caption strings never cross into the JVM."""
+    """The featurizer's one tokenizer: ``caption_len`` (code points),
+    ``caption_tokens`` (runs of Unicode whitespace split the stripped
+    caption; empty or all-whitespace text counts 0) and
+    ``caption_rtokens`` (BPE-ish ``TOKEN_PATTERN`` matches: words and
+    punctuation counted separately).  Computed worker-side, so the
+    caption strings never cross into the JVM."""
     s = out[col].astype(str)
     out["caption_len"] = s.str.len().astype("int32")
     stripped = s.str.strip()
@@ -87,9 +103,7 @@ def image_feature_scan(spark: SparkSession, images_path,
     statistics + caption features + passthrough metadata, one Spark
     task per (file, row-group).  Returns columns
     ``(entity_id, ts, w, h, phash, caption_len, caption_tokens,
-    caption_rtokens, px_*)`` — everything ``pipeline.featurize_images``
-    yields except the phash bit unpack, which stays a JVM expression
-    downstream (it is free there and would bloat this frame here)."""
+    caption_rtokens, px_*)``."""
     items = list_row_groups(images_path)
     n = num_tasks or min(len(items), 512)
     work = (spark.createDataFrame(items)
@@ -129,14 +143,45 @@ def image_feature_scan(spark: SparkSession, images_path,
     return work.mapInPandas(scan, out_schema)
 
 
-def featurize_images_fused(spark: SparkSession, images_path,
+def _frame_feature_scan(images: DataFrame) -> DataFrame:
+    """The same narrow frame from an image DataFrame: ``mapInPandas``
+    over the scan's per-batch body.  Kept source columns keep their
+    input types; columns outside the image schema pass through after
+    them."""
+    src = images.schema
+    out_schema = T.StructType(
+        [src[c] for c in _KEPT_COLS]
+        + [f for f in src.fields if f.name not in _SOURCE_COLS]
+        + _CAPTION_FIELDS + PIXEL_STAT_FIELDS)
+    out_cols = out_schema.fieldNames()
+
+    def featurize(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            out = _pixel_stats_frame(pdf)
+            out = _caption_features_pandas(out)
+            yield out[out_cols]
+
+    return images.mapInPandas(featurize, out_schema)
+
+
+def featurize_images_fused(spark: SparkSession, images,
                            n_phash_bits: int = 16) -> DataFrame:
-    """Drop-in twin of ``pipeline.featurize_images`` reading the corpus
-    via the fused scan: same columns, same values, no JVM->Python blob
-    round trip."""
+    """Image rows -> feature columns: ``phash_weight``,
+    ``pbit0..pbit{n_phash_bits-1}``, caption length/token counts and
+    pixel statistics, plus ``entity_id``, ``ts``, ``w``, ``h``.  The
+    payload, caption, format, image id and raw phash are dropped (a
+    near-unique phash is a harmful delta-kernel feature; its
+    information rides in the bit columns).
+
+    ``images`` is a parquet directory, an explicit parquet file list,
+    or a DataFrame with the image schema (whose extra columns pass
+    through)."""
     from ..functions.image import phash_bit_columns, phash_hamming_weight
 
-    df = image_feature_scan(spark, images_path)
+    if isinstance(images, DataFrame):
+        df = _frame_feature_scan(images)
+    else:
+        df = image_feature_scan(spark, images)
     df = phash_hamming_weight(df)
     df = phash_bit_columns(df, n_bits=n_phash_bits)
     return df.drop("phash")

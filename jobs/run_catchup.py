@@ -11,12 +11,12 @@ Usage (cluster; run from cron / an orchestrator after each ingest)::
 Each invocation reads ONLY the image rows appended to ``--source``
 since the previous invocation (Iceberg-style incremental append scan),
 featurizes that delta (phash bits, caption stats, decoded-pixel stats
-— ``hiselspark.pipeline.featurize_images``), and appends the result to
-``--features`` in one atomic snapshot stamped with the processed
-source version.  A crashed run resumes by re-reading the same delta;
-an up-to-date table is a metadata-only no-op — at 10^12 source rows
-the cost of a follow step is proportional to the ingest batch, never
-to the table.
+— ``hiselspark.sources.fused_scan.featurize_images_fused``), and
+appends the result to ``--features`` in one atomic snapshot stamped
+with the processed source version.  A crashed run resumes by
+re-reading the same delta; an up-to-date table is a metadata-only
+no-op — at 10^12 source rows the cost of a follow step is proportional
+to the ingest batch, never to the table.
 
 ``--demo N`` seeds the loop end-to-end on a synthetic corpus: commits
 N deterministic image rows to the source table in two appends, then
@@ -65,19 +65,20 @@ def main(argv=None) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from hiselspark.incremental import catchup, processed_source_version
-    from hiselspark.pipeline import featurize_images
+    from hiselspark.sources.fused_scan import featurize_images_fused
     from hiselspark.sources.snapshots import SnapshotTable
 
     src = SnapshotTable(args.source)
     drv = SnapshotTable(args.features)
 
     def feat(df):
-        # the pipeline featurizer drops image_id (the selection layer
-        # keys on entity/ts); the derived TABLE keeps it so consumers
-        # can join features back to the corpus
+        # the featurizer drops image_id (the selection layer keys on
+        # entity/ts); the derived TABLE keeps it, as a passthrough
+        # column, so consumers can join features back to the corpus
         from pyspark.sql import functions as F
-        out = featurize_images(df.withColumn("__iid", F.col("image_id")),
-                               n_phash_bits=args.phash_bits)
+        out = featurize_images_fused(
+            spark, df.withColumn("__iid", F.col("image_id")),
+            n_phash_bits=args.phash_bits)
         return out.withColumnRenamed("__iid", "image_id")
 
     if args.demo:

@@ -143,8 +143,7 @@ def test_chunked_clustering_bounds_partition_size(spark, skewed):
 
 
 def test_chunked_rolling_corr_equals_plain(spark):
-    from hiselspark.operators.chunked import (chunked_rolling_corr,
-                                              release_chunk_caches)
+    from hiselspark.operators.chunked import chunked_rolling_corr
     from hiselspark.operators.windows import rolling_corr
     rng = np.random.default_rng(21)
     n = 3000
@@ -166,13 +165,11 @@ def test_chunked_rolling_corr_equals_plain(spark):
                                     86400.0, bucket_seconds=7 * 86400.0)
                .select("event_id", "roll_corr").toPandas()
                .sort_values("event_id").reset_index(drop=True))
-    release_chunk_caches()
     pd.testing.assert_frame_equal(plain, chunked)
 
 
 def test_chunked_ewma_equals_plain(spark):
-    from hiselspark.operators.chunked import (chunked_ewma,
-                                              release_chunk_caches)
+    from hiselspark.operators.chunked import chunked_ewma
     from hiselspark.operators.windows import ewma
     rng = np.random.default_rng(23)
     n = 2000
@@ -194,13 +191,11 @@ def test_chunked_ewma_equals_plain(spark):
                             bucket_seconds=7 * 86400.0)
                .select("event_id", "x_ewma").toPandas()
                .sort_values("event_id").reset_index(drop=True))
-    release_chunk_caches()
     pd.testing.assert_frame_equal(plain, chunked)
 
 
 def test_chunked_rolling_quantile_equals_plain(spark):
-    from hiselspark.operators.chunked import (chunked_rolling_quantile,
-                                              release_chunk_caches)
+    from hiselspark.operators.chunked import chunked_rolling_quantile
     from hiselspark.operators.windows import rolling_quantile
     rng = np.random.default_rng(29)
     n = 2500
@@ -223,5 +218,4 @@ def test_chunked_rolling_quantile_equals_plain(spark):
                                         out_col="m")
                .select("event_id", "m").toPandas()
                .sort_values("event_id").reset_index(drop=True))
-    release_chunk_caches()
     pd.testing.assert_frame_equal(plain, chunked)

@@ -88,34 +88,69 @@ def test_selection_recovers_planted_features(spark, corpus):
     assert _cache_entries(spark) == before
 
 
-def test_fused_scan_equals_dataframe_featurizer(spark, tmp_path_factory):
-    """The scan-fused featurizer (tasks read their parquet row groups
-    directly, blobs never enter the JVM) must produce row-for-row the
-    same features as the DataFrame route."""
-    import pandas as pd
-    from hiselspark.pipeline import featurize_images
+def _featurize_both_inputs(spark, path, n_phash_bits):
+    """The featurizer over a parquet path and over the same rows as a
+    DataFrame, as pandas frames sorted into one row order."""
     from hiselspark.sources.fused_scan import featurize_images_fused
+
+    by_path = featurize_images_fused(spark, path, n_phash_bits).toPandas()
+    by_frame = featurize_images_fused(spark, spark.read.parquet(path),
+                                      n_phash_bits).toPandas()
+    key = ["entity_id", "ts", "caption_len", "phash_weight", "px_mean_r"]
+    return [f.sort_values(key).reset_index(drop=True)
+            for f in (by_path, by_frame)]
+
+
+def test_fused_scan_equals_dataframe_featurizer(spark, tmp_path_factory):
+    """A parquet path (tasks read their row groups directly, blobs
+    never enter the JVM) and a DataFrame input run the same per-batch
+    body: identical columns and values, row for row."""
+    import pandas as pd
 
     path = str(tmp_path_factory.mktemp("fused") / "images")
     datagen.images(spark, 1200, seed=7, partitions=5).write.parquet(path)
+    by_path, by_frame = _featurize_both_inputs(spark, path, 8)
+    assert list(by_path.columns) == list(by_frame.columns)
+    assert {"pbit7", "phash_weight", "caption_rtokens",
+            "px_q75"} <= set(by_path.columns)
+    assert len(by_path) == 1200
+    pd.testing.assert_frame_equal(by_path, by_frame)
 
-    df_route = featurize_images(spark.read.parquet(path)
-                                .withColumn("ts", F.col("ts")
-                                            .cast("timestamp")),
-                                n_phash_bits=8).toPandas()
-    fused = featurize_images_fused(spark, path, n_phash_bits=8).toPandas()
-    assert set(df_route.columns) == set(fused.columns)
-    key = ["entity_id", "ts", "caption_len", "phash_weight", "px_mean_r"]
-    a = (df_route[sorted(df_route.columns)]
-         .sort_values(key).reset_index(drop=True))
-    b = (fused[sorted(fused.columns)]
-         .sort_values(key).reset_index(drop=True))
-    for c in a.columns:
-        if a[c].dtype.kind == "f":
-            np.testing.assert_allclose(a[c], b[c], rtol=0, atol=0,
-                                       err_msg=c)
-        else:
-            assert a[c].astype(str).equals(b[c].astype(str)), c
+
+def test_featurizer_edge_captions_path_equals_dataframe(spark,
+                                                        tmp_path_factory):
+    """Whitespace and Unicode edge captions tokenize the same on path
+    and DataFrame inputs (there is one tokenizer), with Unicode
+    whitespace semantics."""
+    import pandas as pd
+
+    captions = {"\t": (1, 0, 0), "\tfoo bar": (8, 2, 2),
+                "\t\t\t": (3, 0, 0), "a\u00a0b": (3, 2, 2),
+                "x\u2003y": (3, 2, 2), "e\u0301 x": (4, 2, 3)}
+    images = datagen.images(spark, len(captions), seed=3)
+    pdf = images.toPandas()
+    pdf["caption"] = list(captions)
+    path = str(tmp_path_factory.mktemp("edge") / "images")
+    spark.createDataFrame(pdf, images.schema).write.parquet(path)
+    by_path, by_frame = _featurize_both_inputs(spark, path, 4)
+    pd.testing.assert_frame_equal(by_path, by_frame)
+    got = sorted(zip(by_frame["caption_len"], by_frame["caption_tokens"],
+                     by_frame["caption_rtokens"]))
+    assert got == sorted(captions.values())
+
+
+def test_dataframe_featurizer_keeps_passthrough_columns(spark):
+    """Columns outside the image schema pass through the DataFrame
+    input (``jobs/run_catchup.py`` keys its derived table on one)."""
+    from hiselspark.sources.fused_scan import featurize_images_fused
+
+    images = datagen.images(spark, 300, seed=9, partitions=3)
+    out = featurize_images_fused(
+        spark, images.withColumn("__iid", F.col("image_id")), 4)
+    assert "__iid" in out.columns and "image_id" not in out.columns
+    got = sorted(r["__iid"] for r in out.select("__iid").collect())
+    assert got == sorted(r["image_id"]
+                         for r in images.select("image_id").collect())
 
 
 def test_raw6_lossy_codec_psnr_contract(spark):

@@ -115,7 +115,7 @@ def test_flagship_hash_mode_plan_no_global_sort(spark):
         *[F.col("embedding")[i].cast("double").alias(f"e{i}")
           for i in range(8)])
     cols = [f"e{i}" for i in range(8)]
-    sel = SparkHSICSelector(wide, cols, ["y"], standardize="none")
+    sel = SparkHSICSelector(wide, cols, ["y"])
     # reproduce the hash-mode stats frame (pre-reduce) without running
     num_mb = 5
     h = F.xxhash64(F.lit(0), F.col("vec_id"))

@@ -280,7 +280,6 @@ def test_chunked_encodings_match_plain(spark):
     """Skew-proof (category, time-bucket) encodings are bit-identical
     to the plain single-clustering twins on a hot category with
     timestamp collisions, null targets, and bucket-boundary rows."""
-    from hiselspark.operators.chunked import release_chunk_caches
     from hiselspark.operators.encoding import (
         chunked_count_encode, chunked_expanding_zscore,
         chunked_target_encode, count_encode_pit, expanding_zscore_pit,
@@ -316,8 +315,32 @@ def test_chunked_encodings_match_plain(spark):
          for r in plain.select(*cols).collect()}
     b = {r["id"]: (r["te"], r["ce"], r["z"])
          for r in ch.select(*cols).collect()}
-    release_chunk_caches()
     assert a == b   # bit-identical, nulls included
+
+
+def test_chunked_encodings_leave_cache_entries_unchanged(spark):
+    """The chunked encodings never persist (the caller materializes):
+    building and running them leaves the session's cache-manager
+    entries as they were."""
+    from hiselspark.operators.encoding import (
+        chunked_count_encode, chunked_expanding_zscore,
+        chunked_target_encode)
+    from .test_pipeline import _cache_entries
+    rng = np.random.default_rng(5)
+    n = 200
+    df = spark.createDataFrame(pd.DataFrame({
+        "k": rng.choice(["a", "b"], n),
+        "ts": pd.to_datetime(rng.integers(0, 20 * 86400, n), unit="s",
+                             origin="2024-01-01"),
+        "v": rng.integers(0, 100, n).astype("int64"),
+    }))
+    before = _cache_entries(spark)
+    out = chunked_target_encode(df, "k", "v", bucket_seconds=5 * 86400.0)
+    out = chunked_count_encode(out, "k", bucket_seconds=5 * 86400.0)
+    out = chunked_expanding_zscore(out, "k", "v",
+                                   bucket_seconds=5 * 86400.0)
+    assert out.count() == n
+    assert _cache_entries(spark) == before
 
 
 def test_scd2_join_period_semantics(spark):

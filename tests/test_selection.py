@@ -35,7 +35,7 @@ def no_shuffle(monkeypatch):
 def test_parity_with_reference_selector(hisel, spark, no_shuffle):
     x, y = _planted_continuous()
     sdf, cols, ycols = _to_sdf(spark, x, y)
-    sel = SparkHSICSelector(sdf, cols, ycols, standardize="hisel")
+    sel = SparkHSICSelector(sdf, cols, ycols)
     res = sel.run(number_of_features=3, minibatch_size=200, mode="parity",
                   order_col="_idx", batch_size=600)
 
@@ -52,7 +52,7 @@ def test_parity_with_reference_selector(hisel, spark, no_shuffle):
 def test_parity_multiple_outer_batches(hisel, spark, no_shuffle):
     x, y = _planted_continuous(n=800)
     sdf, cols, ycols = _to_sdf(spark, x, y)
-    sel = SparkHSICSelector(sdf, cols, ycols, standardize="hisel")
+    sel = SparkHSICSelector(sdf, cols, ycols)
     res = sel.run(number_of_features=3, minibatch_size=100, mode="parity",
                   order_col="_idx", batch_size=400)
     ref = hisel.select.HSICSelector(x.copy(), y.copy(), feature_names=cols)
@@ -152,7 +152,7 @@ def test_parity_epoch_augmentation_matches_reference(hisel, spark,
     x, y = _planted_continuous(n=600, d=8, seed=21)
     sdf, cols, ycols = _to_sdf(spark, x, y)
     seed = 123
-    sel = SparkHSICSelector(sdf, cols, ycols, standardize="hisel")
+    sel = SparkHSICSelector(sdf, cols, ycols)
     res = sel.run(number_of_features=3, minibatch_size=100, mode="parity",
                   order_col="_idx", batch_size=300, epochs=2, seed=seed)
     assert res.n_rows_used == 2 * 600  # 2 outer batches x 300 x 2 epochs

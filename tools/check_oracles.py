@@ -65,13 +65,17 @@ PINNED_AT_GATE_SF = {
 # wrong contract at scale.  These are graded like the ANN family:
 # every returned row must appear in the oracle result with identical
 # values (soundness — zero false positives, exact arithmetic), and
-# recall = got/oracle must clear the floor.
+# recall = matched oracle rows / oracle rows must clear the floor.
 APPROX_SUBSET = {"minhash_neardup": 0.90}
 
 
-def _subset_check(got: pd.DataFrame, exp: pd.DataFrame) -> bool:
-    """True iff every row of ``got`` appears in ``exp`` (exact string/
-    repr match on all columns, multiset semantics)."""
+def approx_subset_grade(got: pd.DataFrame, exp: pd.DataFrame,
+                        floor: float) -> tuple:
+    """``(ok, sound, recall)``.  ``sound``: every row of ``got``
+    appears in ``exp`` (exact string/repr match on all columns,
+    multiset semantics).  ``recall``: rows of ``got`` matched in
+    ``exp`` over ``len(exp)`` — 0.0 for an empty oracle, so an empty
+    ``exp`` with a non-empty ``got`` fails."""
     def canon(df: pd.DataFrame) -> pd.Series:
         cols = sorted(df.columns)
         parts = []
@@ -79,12 +83,17 @@ def _subset_check(got: pd.DataFrame, exp: pd.DataFrame) -> bool:
             v = df[c]
             parts.append(v.map(repr) if pd.api.types.is_float_dtype(v)
                          else v.astype(str))
-        return pd.Series(["|".join(t) for t in zip(*parts)])
+        return pd.Series(["|".join(t) for t in zip(*parts)],
+                         dtype=object)
 
     gc = canon(got).value_counts()
     ec = canon(exp).value_counts()
     merged = gc.to_frame("g").join(ec.to_frame("e"), how="left")
-    return bool((merged["e"].fillna(0) >= merged["g"]).all())
+    e = merged["e"].fillna(0)
+    sound = bool((e >= merged["g"]).all())
+    matched = int(np.minimum(e, merged["g"]).sum())
+    recall = matched / len(exp) if len(exp) else 0.0
+    return sound and recall >= floor, sound, recall
 
 
 def _pins_cover(sf_dir: str) -> bool:
@@ -300,9 +309,8 @@ def main():
         problems = compare(name, got, exp)
         if problems and name in APPROX_SUBSET:
             floor = APPROX_SUBSET[name]
-            recall = len(got) / max(1, len(exp))
-            sound = _subset_check(got, exp)
-            if sound and recall >= floor:
+            ok, sound, recall = approx_subset_grade(got, exp, floor)
+            if ok:
                 print(f"ok   {name}: approx-recall subset — "
                       f"{len(got)}/{len(exp)} rows (recall "
                       f"{recall:.3f} >= floor {floor}), every "
