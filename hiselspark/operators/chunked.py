@@ -30,6 +30,15 @@ and the driver-side broadcast build measurably dominated the stage
 wall even at 500k rows; AQE may still choose broadcast when a summary
 is genuinely small.)
 
+Plan discipline: a rolling operator materializes the µs order key once
+(``__us``) and derives the bucket and the overlap test from it; window
+expressions that share a spec go in one ``select``, so each spec is one
+window operator (and one sort); a prefix list read more than once is
+its own column.  Every operator adds generated classes that Spark
+compiles and caches, and a call that generates more classes than the
+codegen cache holds (``spark.sql.codegen.cache.maxEntries``, 100 by
+default) recompiles some of them on every call.
+
 Exactness mechanisms, per operator:
 
 * rolling (time-range): rows within ``window_seconds`` of a bucket end
@@ -51,7 +60,7 @@ plain operators on hot, sparse, and boundary-heavy inputs.
 """
 from __future__ import annotations
 
-from typing import Dict, Optional, Sequence
+from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -59,10 +68,21 @@ from .windows import ts_seconds
 
 _B = "__bucket"
 _CTX = "__ctx"
+_US = "__us"
+
+
+def _micros(ts_col) -> Column:
+    """Epoch microseconds as a long: the bucket's source and the range
+    windows' order key."""
+    return (ts_seconds(ts_col) * 1_000_000).cast("long")
+
+
+def _bucket(us: Column, bucket_seconds: float) -> Column:
+    return F.floor(us / F.lit(int(bucket_seconds * 1_000_000)))
+
 
 def _bucket_of(ts_col, bucket_seconds: float) -> Column:
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
-    return F.floor(us / F.lit(int(bucket_seconds * 1_000_000)))
+    return _bucket(_micros(ts_col), bucket_seconds)
 
 
 def _cluster(df: DataFrame, entity_col: str) -> DataFrame:
@@ -84,15 +104,20 @@ def _cluster(df: DataFrame, entity_col: str) -> DataFrame:
 # lags
 # ---------------------------------------------------------------------------
 
+def _last_k(arr: Column, k: int) -> Column:
+    """The last ``k`` elements of ``arr``.  NB ``slice`` with a
+    negative start returns EMPTY for arrays shorter than k, so shorter
+    arrays are kept whole."""
+    return F.when(F.size(arr) <= k, arr).otherwise(F.slice(arr, -k, k))
+
+
 def _tail_arrays(clustered: DataFrame, entity_col: str, k: int,
                  sort_struct) -> DataFrame:
     """Per-(entity, bucket) array of the last ``k`` rows (ascending).
-    No shuffle: the groupBy keys match the clustering.  NB ``slice``
-    with a negative start returns EMPTY for arrays shorter than k, so
-    small buckets keep their whole array."""
-    arr = F.sort_array(F.collect_list(sort_struct))
-    tail = F.when(F.size(arr) <= k, arr).otherwise(F.slice(arr, -k, k))
-    return clustered.groupBy(entity_col, _B).agg(tail.alias("__tail"))
+    No shuffle: the groupBy keys match the clustering."""
+    return clustered.groupBy(entity_col, _B).agg(
+        _last_k(F.sort_array(F.collect_list(sort_struct)), k)
+        .alias("__tail"))
 
 
 def _carry_arrays(tails: DataFrame, entity_col: str, k: int) -> DataFrame:
@@ -100,16 +125,53 @@ def _carry_arrays(tails: DataFrame, entity_col: str, k: int) -> DataFrame:
     k rows preceding it across all earlier buckets.  Pure window
     expressions — concatenate every EARLIER bucket's tail (each already
     holds that bucket's last <= k rows, so the flattened prefix is
-    exactly the candidate pool) and keep the last k.  An earlier
-    ``applyInPandas`` fold computed the same thing 10x slower: with one
-    summary row per (entity, bucket) the per-group pandas construction
-    overhead dominated (measured ~1.5 ms x 10k entities = the whole
-    stage), and it put a Python stage in an otherwise codegen'd plan."""
+    exactly the candidate pool) and keep the last k.  The prefix is
+    its own column, so its ``collect_list`` runs once, not once per
+    reference in ``_last_k``.  An earlier ``applyInPandas`` fold
+    computed the same thing 10x slower: with one summary row per
+    (entity, bucket) the per-group pandas construction overhead
+    dominated (measured ~1.5 ms x 10k entities = the whole stage), and
+    it put a Python stage in an otherwise codegen'd plan."""
     w_prev = (Window.partitionBy(entity_col).orderBy(_B)
               .rowsBetween(Window.unboundedPreceding, -1))
-    prev = F.flatten(F.collect_list("__tail").over(w_prev))
-    carry = F.when(F.size(prev) <= k, prev).otherwise(F.slice(prev, -k, k))
-    return tails.select(entity_col, _B, carry.alias("__carry"))
+    prev = tails.select(
+        entity_col, _B,
+        F.flatten(F.collect_list("__tail").over(w_prev)).alias("__prev"))
+    return prev.select(entity_col, _B,
+                       _last_k(F.col("__prev"), k).alias("__carry"))
+
+
+def _with_lags(clustered: DataFrame, entity_col: str, ts_col: str,
+               cols: Sequence[str], lags: Sequence[int]) -> DataFrame:
+    """Lags of ``cols`` on a frame clustered by (entity, bucket): the
+    local ``lag`` inside the bucket, and the bucket's carry-in for its
+    first ``max(lags)`` rows.  Ties in ``ts`` are ordered by the value
+    columns.  The row number and every lag share one window spec, so
+    they run in one window operator.  Drops the bucket column."""
+    k = max(lags)
+    sort_struct = F.struct(F.col(ts_col).alias("__t"),
+                           *[F.col(c).alias(c) for c in cols])
+    carries = _carry_arrays(
+        _tail_arrays(clustered, entity_col, k, sort_struct), entity_col, k)
+
+    joined = clustered.join(carries, [entity_col, _B], "left")
+    w_local = Window.partitionBy(entity_col, _B).orderBy(
+        F.col(ts_col), *[F.col(c) for c in cols])
+    rn = F.row_number().over(w_local)
+    size = F.coalesce(F.size("__carry"), F.lit(0))
+    lagged = []
+    for c in cols:
+        for j in lags:
+            need = F.lit(j) - rn + 1                 # rows missing locally
+            idx = size - need + 1                    # 1-based from end
+            from_carry = F.when(
+                (need >= 1) & (idx >= 1),
+                F.element_at("__carry", idx.cast("int"))[c])
+            lagged.append(
+                F.when(rn > j, F.lag(c, j).over(w_local))
+                .otherwise(from_carry).alias(f"{c}_lag{j}"))
+    keep = [c for c in joined.columns if c not in (_B, "__carry")]
+    return joined.select(*keep, *lagged)
 
 
 def chunked_lags(
@@ -126,34 +188,9 @@ def chunked_lags(
     Ties in ``ts`` are ordered by the value columns — the same rule as
     the plain operator (``windows.with_lags``), so the two paths agree
     row-for-row even on tied timestamps."""
-    k = max(lags)
-    cols = list(cols)
     clustered = _cluster(
         df.withColumn(_B, _bucket_of(ts_col, bucket_seconds)), entity_col)
-    sort_struct = F.struct(F.col(ts_col).alias("__t"),
-                           *[F.col(c).alias(c) for c in cols])
-    carries = _carry_arrays(
-        _tail_arrays(clustered, entity_col, k, sort_struct),
-        entity_col, k)
-
-    joined = clustered.join(carries, [entity_col, _B], "left")
-    w_local = Window.partitionBy(entity_col, _B).orderBy(
-        F.col(ts_col), *[F.col(c) for c in cols])
-    joined = joined.withColumn("__rn", F.row_number().over(w_local))
-    out = joined
-    for c in cols:
-        for j in lags:
-            local = F.lag(c, j).over(w_local)
-            need = F.lit(j) - F.col("__rn") + 1      # rows missing locally
-            size = F.coalesce(F.size("__carry"), F.lit(0))
-            idx = size - need + 1                    # 1-based from end
-            from_carry = F.when(
-                (need >= 1) & (idx >= 1),
-                F.element_at("__carry", idx.cast("int"))[c])
-            out = out.withColumn(
-                f"{c}_lag{j}",
-                F.when(F.col("__rn") > j, local).otherwise(from_carry))
-    return out.drop(_B, "__carry", "__rn")
+    return _with_lags(clustered, entity_col, ts_col, list(cols), lags)
 
 
 # ---------------------------------------------------------------------------
@@ -161,16 +198,15 @@ def chunked_lags(
 # ---------------------------------------------------------------------------
 
 def _rolling_exprs(aggs: Dict[str, Sequence[str]], window_seconds: float,
-                   w) -> Dict[str, Column]:
+                   w) -> List[Column]:
     fns = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
            "count": F.count, "std": F.stddev_samp}
-    return {
-        f"{c}_roll_{name}_{window_seconds:g}s": fns[name](c).over(w)
-        for c, names in aggs.items() for name in names
-    }
+    return [fns[name](c).over(w)
+            .alias(f"{c}_roll_{name}_{window_seconds:g}s")
+            for c, names in aggs.items() for name in names]
 
 
-def _overlap_context(tagged: DataFrame, ts_col: str, bucket_seconds: float,
+def _overlap_context(tagged: DataFrame, bucket_seconds: float,
                      overlap_seconds: float) -> DataFrame:
     """Narrow (pre-shuffle) duplication of each bucket's last
     ``overlap_seconds`` of rows into the next bucket, flagged __ctx=1.
@@ -179,13 +215,33 @@ def _overlap_context(tagged: DataFrame, ts_col: str, bucket_seconds: float,
     plus its next-bucket context copy, so this step reads its input
     once (an earlier two-branch union scanned it twice)."""
     bucket_us = int(bucket_seconds * 1_000_000)
-    row_us = (ts_seconds(ts_col) * 1_000_000).cast("long")
-    in_tail = (row_us >= (F.col(_B) + 1) * bucket_us
+    in_tail = (F.col(_US) >= (F.col(_B) + 1) * bucket_us
                - F.lit(int(overlap_seconds * 1_000_000)))
     dup = F.explode(F.when(in_tail, F.array(F.lit(0), F.lit(1)))
                     .otherwise(F.array(F.lit(0))))
     out = tagged.withColumn(_CTX, dup)
     return out.withColumn(_B, F.col(_B) + F.col(_CTX))
+
+
+def _clustered_with_context(df: DataFrame, entity_col: str, ts_col: str,
+                            bucket_seconds: float,
+                            window_seconds: float) -> DataFrame:
+    """The rolling operators' input: the µs key materialized once as
+    ``__us`` (the bucket, the overlap test and the range window all
+    read it), the overlap context rows, clustered on (entity, bucket).
+    Needs ``window_seconds <= bucket_seconds``."""
+    if window_seconds > bucket_seconds:
+        raise ValueError("rolling window must fit in one bucket")
+    keyed = df.withColumn(_US, _micros(ts_col))
+    tagged = keyed.withColumn(_B, _bucket(F.col(_US), bucket_seconds))
+    return _cluster(_overlap_context(tagged, bucket_seconds, window_seconds),
+                    entity_col)
+
+
+def _range_window(entity_col: str, window_seconds: float, upper: int = 0):
+    """Trailing time range per (entity, bucket), ordered by ``__us``."""
+    return (Window.partitionBy(entity_col, _B).orderBy(_US)
+            .rangeBetween(-int(window_seconds * 1_000_000), upper))
 
 
 def chunked_rolling(
@@ -199,20 +255,12 @@ def chunked_rolling(
 ) -> DataFrame:
     """Exact twin of ``windows.rolling_aggregates`` clustered by
     (entity, bucket); needs ``window_seconds <= bucket_seconds``."""
-    if window_seconds > bucket_seconds:
-        raise ValueError("rolling window must fit in one bucket")
-    tagged = df.withColumn(_B, _bucket_of(ts_col, bucket_seconds))
-    clustered = _cluster(
-        _overlap_context(tagged, ts_col, bucket_seconds, window_seconds),
-        entity_col)
-    upper = 0 if include_current else -1
-    w = (Window.partitionBy(entity_col, _B)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
-               .rangeBetween(-int(window_seconds * 1_000_000), upper))
-    out = clustered
-    for name, expr in _rolling_exprs(aggs, window_seconds, w).items():
-        out = out.withColumn(name, expr)
-    return out.filter(F.col(_CTX) == 0).drop(_CTX, _B)
+    clustered = _clustered_with_context(df, entity_col, ts_col,
+                                        bucket_seconds, window_seconds)
+    w = _range_window(entity_col, window_seconds,
+                      0 if include_current else -1)
+    out = clustered.select("*", *_rolling_exprs(aggs, window_seconds, w))
+    return out.filter(F.col(_CTX) == 0).drop(_CTX, _B, _US)
 
 
 # ---------------------------------------------------------------------------
@@ -295,115 +343,27 @@ def chunked_timeline_features(
     lags: Sequence[int],
     rolling_aggs: Dict[str, Sequence[str]],
     rolling_window_s: float,
-    session_gap_s: float,
-    session_col: str = "session_id",
     bucket_seconds: float = 7 * 86400.0,
 ) -> DataFrame:
-    """sessionize + lags + trailing rolling aggregates in ONE clustered
-    pass: a single full-frame shuffle (including the rolling context
-    rows), tiny broadcast summaries for everything cross-bucket."""
-    if rolling_window_s > bucket_seconds:
-        raise ValueError("rolling window must fit in one bucket")
-    k = max(lags)
-    lag_cols = list(lag_cols)
-
-    tagged = df.withColumn(_B, _bucket_of(ts_col, bucket_seconds))
-    clustered = _cluster(
-        _overlap_context(tagged, ts_col, bucket_seconds, rolling_window_s),
-        entity_col)
-
+    """Lags + trailing rolling aggregates in ONE clustered pass: a
+    single full-frame shuffle (including the rolling context rows) and
+    one per-(entity, bucket) summary for the lag carries.  Three window
+    specs — the rolling range, the summary's per-entity prefix, the
+    lags' per-bucket order — and one window operator each.  Values are
+    bit-identical to ``windows.rolling_aggregates`` + ``with_lags``;
+    the entity column comes first."""
+    clustered = _clustered_with_context(df, entity_col, ts_col,
+                                        bucket_seconds, rolling_window_s)
     # rolling first — the only op that needs the context rows
-    w_range = (Window.partitionBy(entity_col, _B)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
-               .rangeBetween(-int(rolling_window_s * 1_000_000), 0))
-    out = clustered
-    for name, expr in _rolling_exprs(rolling_aggs, rolling_window_s,
-                                     w_range).items():
-        out = out.withColumn(name, expr)
-    # no persist: the summary branch below and the join's big side
-    # each re-evaluate ``df`` (their exchanges differ, so neither is
-    # reused), which a caller with an expensive input avoids by
-    # materializing it (pipeline.assemble_training_frame)
-    real = out.filter(F.col(_CTX) == 0).drop(_CTX)
-
-    # ONE summary pass for sessionize AND lag carries: both aggregate
-    # per (entity, bucket) and prefix-scan per entity, so they share a
-    # single groupBy (reuses the clustering), a single tiny per-entity
-    # window stage, and a single join back — at small scale this halves
-    # the fixed per-stage cost of the two-branch version (measured
-    # ~1.5s of the sf0.1 stage wall), at corpus scale it halves the
-    # summary-side shuffles.
-    # order by the SAME µs expression as the rolling range window: the
-    # µs long is a monotone image of ts (identical tie groups, so
-    # results are bit-identical), and the matching sort order lets
-    # Catalyst elide this stage's re-sort entirely
-    w_local = (Window.partitionBy(entity_col, _B)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long")))
-    prev_local = F.lag(F.col(ts_col)).over(w_local)
-    inner_new = (prev_local.isNotNull()
-                 & ((ts_seconds(ts_col) - ts_seconds(prev_local))
-                    > F.lit(float(session_gap_s)))).cast("long")
-    flagged = (real
-               .withColumn("__inner_new", inner_new)
-               .withColumn("__is_first",
-                           (F.row_number().over(w_local) == 1)
-                           .cast("long")))
-    sort_struct = F.struct(F.col(ts_col).alias("__t"),
-                           *[F.col(c).alias(c) for c in lag_cols])
-    arr = F.sort_array(F.collect_list(sort_struct))
-    tail = F.when(F.size(arr) <= k, arr).otherwise(F.slice(arr, -k, k))
-    summary = (flagged.groupBy(entity_col, _B)
-               .agg(F.min(ts_col).alias("__first_ts"),
-                    F.max(ts_col).alias("__last_ts"),
-                    F.sum("__inner_new").alias("__inner_starts"),
-                    tail.alias("__tail")))
-    w_b = Window.partitionBy(entity_col).orderBy(_B)
-    carry_last = F.lag("__last_ts").over(w_b)
-    first_new = F.when(
-        carry_last.isNull()
-        | ((ts_seconds(F.col("__first_ts")) - ts_seconds(carry_last))
-           > F.lit(float(session_gap_s))),
-        F.lit(1)).otherwise(F.lit(0))
-    summary = summary.withColumn("__first_new", first_new)
-    starts = F.col("__first_new") + F.col("__inner_starts")
-    w_prev = w_b.rowsBetween(Window.unboundedPreceding, -1)
-    prev_tails = F.flatten(F.collect_list("__tail").over(w_prev))
-    carry = F.when(F.size(prev_tails) <= k, prev_tails) \
-             .otherwise(F.slice(prev_tails, -k, k))
-    summary = (summary
-               .withColumn("__base",
-                           F.coalesce(F.sum(starts).over(w_prev),
-                                      F.lit(0)))
-               .withColumn("__carry", carry)
-               .select(entity_col, _B, "__first_new", "__base",
-                       "__carry"))
-
-    joined = flagged.join(summary, [entity_col, _B], "left")
-    local_flag = (F.col("__inner_new")
-                  + F.col("__is_first") * F.col("__first_new"))
-    joined = joined.withColumn(
-        session_col,
-        F.col("__base")
-        + F.sum(local_flag).over(
-            w_local.rowsBetween(Window.unboundedPreceding, 0)) - 1)
-    joined = joined.drop("__inner_new", "__is_first", "__first_new",
-                         "__base")
-    w_sorted = Window.partitionBy(entity_col, _B).orderBy(
-        F.col(ts_col), *[F.col(c) for c in lag_cols])
-    joined = joined.withColumn("__rn", F.row_number().over(w_sorted))
-    for c in lag_cols:
-        for j in lags:
-            local = F.lag(c, j).over(w_sorted)
-            need = F.lit(j) - F.col("__rn") + 1
-            size = F.coalesce(F.size("__carry"), F.lit(0))
-            idx = size - need + 1
-            from_carry = F.when(
-                (need >= 1) & (idx >= 1),
-                F.element_at("__carry", idx.cast("int"))[c])
-            joined = joined.withColumn(
-                f"{c}_lag{j}",
-                F.when(F.col("__rn") > j, local).otherwise(from_carry))
-    return joined.drop(_B, "__carry", "__rn")
+    w = _range_window(entity_col, rolling_window_s)
+    rolled = clustered.select(
+        "*", *_rolling_exprs(rolling_aggs, rolling_window_s, w))
+    # no persist: the summary branch and the join's big side each
+    # re-evaluate ``df`` (their exchanges differ, so neither is reused),
+    # which a caller with an expensive input avoids by materializing it
+    # (pipeline.assemble_training_frame)
+    real = rolled.filter(F.col(_CTX) == 0).drop(_CTX, _US)
+    return _with_lags(real, entity_col, ts_col, list(lag_cols), lags)
 
 
 # ---------------------------------------------------------------------------
@@ -612,19 +572,13 @@ def chunked_rolling_quantile(
     the cross-edge history.  (The EXPANDING quantile — winsorize_pit —
     is deliberately NOT chunkable this way: it reads the entity's full
     history, which no bounded context can carry.)"""
-    if window_seconds > bucket_seconds:
-        raise ValueError("rolling window must fit in one bucket")
     out_col = out_col or f"{col}_roll_q{q:g}"
-    tagged = df.withColumn(_B, _bucket_of(ts_col, bucket_seconds))
-    clustered = _cluster(
-        _overlap_context(tagged, ts_col, bucket_seconds, window_seconds),
-        entity_col)
-    w = (Window.partitionBy(entity_col, _B)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+    clustered = _clustered_with_context(df, entity_col, ts_col,
+                                        bucket_seconds, window_seconds)
     out = clustered.withColumn(
-        out_col, F.percentile(col, F.lit(float(q))).over(w))
-    return out.filter(F.col(_CTX) == 0).drop(_CTX, _B)
+        out_col, F.percentile(col, F.lit(float(q))).over(
+            _range_window(entity_col, window_seconds)))
+    return out.filter(F.col(_CTX) == 0).drop(_CTX, _B, _US)
 
 
 def chunked_rolling_distinct(
@@ -664,15 +618,9 @@ def chunked_rolling_distinct(
     import pandas as pd
     import pyspark.sql.types as T
 
-    if window_seconds > bucket_seconds:
-        raise ValueError("rolling window must fit in one bucket")
     win_us = int(window_seconds * 1_000_000)
-    tagged = df.withColumn(_B, _bucket_of(ts_col, bucket_seconds))
-    clustered = _cluster(
-        _overlap_context(tagged, ts_col, bucket_seconds, window_seconds),
-        entity_col)
-    withus = clustered.withColumn(
-        "__us", (ts_seconds(ts_col) * 1_000_000).cast("long"))
+    clustered = _clustered_with_context(df, entity_col, ts_col,
+                                        bucket_seconds, window_seconds)
 
     out_fields = list(df.schema.fields) + [
         T.StructField(out_col, T.LongType(), True)]
@@ -682,8 +630,8 @@ def chunked_rolling_distinct(
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return pd.DataFrame(columns=keep)
-        pdf = pdf.sort_values("__us", kind="mergesort").reset_index(drop=True)
-        us = pdf["__us"].to_numpy(np.int64)
+        pdf = pdf.sort_values(_US, kind="mergesort").reset_index(drop=True)
+        us = pdf[_US].to_numpy(np.int64)
         vals = pdf[col].to_numpy()
         n = len(pdf)
         j = np.searchsorted(us, us - win_us, side="left")
@@ -701,4 +649,5 @@ def chunked_rolling_distinct(
         pdf[out_col] = (k - j + 1) - pairs
         return pdf.loc[pdf[_CTX] == 0, keep]
 
-    return withus.groupBy(entity_col, _B).applyInPandas(kernel, out_schema)
+    return clustered.groupBy(entity_col, _B).applyInPandas(kernel,
+                                                           out_schema)

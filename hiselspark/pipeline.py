@@ -8,8 +8,9 @@ Stages (each a documented operator elsewhere in the package):
    statistics and caption length/token counts in one pandas body per
    Arrow batch, then phash bit features + hamming weight (JVM
    expressions);
-2. entity-timeline engineering — sessionize + lags + trailing rolling
-   aggregates, all sharing ONE ``(entity, time-bucket)`` shuffle;
+2. entity-timeline engineering — lags + trailing rolling aggregates,
+   sharing ONE ``(entity, time-bucket)`` shuffle and one window
+   operator per window spec;
 3. leakage-free as-of join of labels onto the feature timeline
    (backward, ``feature_ts <= label_ts``), clustered the same way;
 4. distributed HSIC-Lasso: per-minibatch sufficient statistics inside
@@ -34,22 +35,20 @@ def engineer_timeline(
     lag_cols: Tuple[str, ...] = ("px_mean_r", "caption_tokens"),
     rolling_col: str = "px_mean_g",
     rolling_window_s: float = 6 * 3600.0,
-    session_gap_s: float = 1800.0,
     bucket_seconds: float = 7 * 86400.0,
 ) -> DataFrame:
-    """Sessionize, lag 1 and a trailing rolling mean/count in one pass
-    of the skew-proof chunked operator, clustered by (entity,
+    """Lag 1 and a trailing rolling mean/count in one pass of the
+    skew-proof chunked operator, clustered by (entity,
     ``bucket_seconds`` time-bucket), which must cover the rolling
-    window.  Values are bit-identical to the plain
-    ``operators/windows.py`` operators'; the columns come in another
-    order."""
+    window.  Returns the input columns (entity first), the rolling
+    columns, then the lag columns.  Values are bit-identical to the
+    plain ``operators/windows.py`` operators'."""
     lag_present = [c for c in lag_cols if c in feats.columns]
     return chunked_timeline_features(
         feats, entity_col, ts_col,
         lag_cols=lag_present, lags=(1,),
         rolling_aggs={rolling_col: ["mean", "count"]},
         rolling_window_s=rolling_window_s,
-        session_gap_s=session_gap_s,
         bucket_seconds=bucket_seconds)
 
 
@@ -144,13 +143,13 @@ def select_features_pointintime(
     inherits the same asymmetry; its tests never mix informative
     families).  Low-cardinality integer features (hash bits, token
     counts) are therefore cast to double and routed through the RBF
-    kernel, and near-unique identifier-like columns (session_id) are
-    excluded — identity-shaped Grams carry spuriously large HSIC mass.
+    kernel.  Near-unique identifier-like columns (a session id, say)
+    do not belong in the feature set: identity-shaped Grams carry
+    spuriously large HSIC mass.
     """
     with assemble_training_frame(
             images, labels, n_phash_bits=n_phash_bits,
             bucket_seconds=bucket_seconds) as (frame, feature_cols):
-        feature_cols = [c for c in feature_cols if c != "session_id"]
         frame = frame.select(
             F.col("y").cast("double").alias("y"),
             *[F.col(c).cast("double").alias(c) for c in feature_cols])

@@ -7,11 +7,12 @@ Every input type runs the same per-batch body — pixel statistics
 
 * a parquet directory or an explicit file list (e.g. a snapshot's
   committed files) — the work items are (parquet file, row-group)
-  pairs, a tiny DataFrame, and each Spark task opens its row group
-  directly with pyarrow, decodes, reduces the pixels to statistics,
-  computes the caption features and emits only the narrow numeric
-  frame.  Image bytes flow disk -> Python worker, touching neither the
-  JVM heap nor the worker socket.  This is the production route: the
+  pairs, a tiny DataFrame split into at most one slice per core, and
+  each Spark task opens its row groups directly with pyarrow,
+  decodes, reduces the pixels to statistics, computes the caption
+  features and emits only the narrow numeric frame.  Image bytes flow
+  disk -> Python worker, touching neither the JVM heap nor the worker
+  socket.  This is the production route: the
   JVM->Python byte-pump of a DataFrame scan was THE bottleneck of the
   full pipeline at high core counts (payload movement over one memory
   bus does not scale with cores).  It is the standard payload-scan
@@ -36,7 +37,7 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 
@@ -64,9 +65,10 @@ def _caption_features_pandas(out: pd.DataFrame,
     ``caption_tokens`` (runs of Unicode whitespace split the stripped
     caption; empty or all-whitespace text counts 0) and
     ``caption_rtokens`` (BPE-ish ``TOKEN_PATTERN`` matches: words and
-    punctuation counted separately).  Computed worker-side, so the
-    caption strings never cross into the JVM."""
-    s = out[col].astype(str)
+    punctuation counted separately).  A null caption counts like the
+    empty string: 0, 0, 0.  Computed worker-side, so the caption
+    strings never cross into the JVM."""
+    s = out[col].fillna("").astype(str)
     out["caption_len"] = s.str.len().astype("int32")
     stripped = s.str.strip()
     out["caption_tokens"] = stripped.str.split(r"\s+", regex=True).map(
@@ -97,17 +99,19 @@ def list_row_groups(path) -> pd.DataFrame:
 
 
 def image_feature_scan(spark: SparkSession, images_path,
-                       batch_rows: int = 1024,
-                       num_tasks: Optional[int] = None) -> DataFrame:
+                       batch_rows: int = 1024) -> DataFrame:
     """Narrow feature frame straight from the image parquet: pixel
-    statistics + caption features + passthrough metadata, one Spark
-    task per (file, row-group).  Returns columns
-    ``(entity_id, ts, w, h, phash, caption_len, caption_tokens,
-    caption_rtokens, px_*)``."""
-    items = list_row_groups(images_path)
-    n = num_tasks or min(len(items), 512)
-    work = (spark.createDataFrame(items)
-            .repartition(n, "file", "rg"))
+    statistics + caption features + passthrough metadata.  Returns
+    columns ``(entity_id, ts, w, h, phash, caption_len, caption_tokens,
+    caption_rtokens, px_*)``.
+
+    The (file, row-group) list runs as at most ``defaultParallelism``
+    contiguous slices — one Python task per core, no shuffle.  Each
+    task pays a fixed Python-worker cost (PySpark's worker setup runs
+    ``importlib.invalidate_caches()`` on every task; ~0.2 core-s per
+    task on a 4-vCPU host), so more tasks than cores buy nothing but
+    that cost."""
+    work = spark.createDataFrame(list_row_groups(images_path))
 
     out_fields = [
         T.StructField("entity_id", T.StringType()),

@@ -30,15 +30,19 @@ import os
 import sys
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
-# Python WORKERS import the package too (the featurizer runs in
-# mapInPandas): put the repo on their path as --py-files would on a
-# cluster, so the job runs from any cwd
-os.environ["PYTHONPATH"] = (
-    _ROOT + os.pathsep + os.environ.get("PYTHONPATH", ""))
 
-for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
-    os.environ.setdefault(_v, "1")
+
+def _prepare_process() -> None:
+    """Put the checkout on the driver's and the Python workers' import
+    paths (workers import the package too: the featurizer runs in
+    mapInPandas), as --py-files would on a cluster, so the job runs
+    from any cwd; one BLAS thread per worker.  Run by :func:`main`,
+    not at import, so importing the job changes nothing."""
+    sys.path.insert(0, _ROOT)
+    os.environ["PYTHONPATH"] = (
+        _ROOT + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
+        os.environ.setdefault(v, "1")
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -56,6 +60,7 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv=None) -> int:
     args = build_parser().parse_args(argv)
+    _prepare_process()
     from pyspark.sql import SparkSession
 
     spark = (SparkSession.builder.appName("hiselspark-catchup")

@@ -106,11 +106,10 @@ def main(argv=None) -> int:
         run.run([str(b) for b in range(args.buckets)], job)
     matrix = run.read_output(spark)
 
-    cols = [c for c in feature_cols if c != "session_id"]
     matrix = matrix.select(
         F.col("y").cast("double").alias("y"),
-        *[F.col(c).cast("double").alias(c) for c in cols])
-    sel = SparkHSICSelector(matrix, cols, ["y"])
+        *[F.col(c).cast("double").alias(c) for c in feature_cols])
+    sel = SparkHSICSelector(matrix, feature_cols, ["y"])
     res = sel.run(number_of_features=args.features,
                   minibatch_size=args.minibatch)
 

@@ -10,15 +10,28 @@ _JOB = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
     __file__))), "jobs", "run_catchup.py")
 
 
-def test_run_catchup_demo(spark, tmp_path, capsys, monkeypatch):
-    from hiselspark.sources.snapshots import SnapshotTable
-
-    # the job edits sys.path and PYTHONPATH on import: undo both after
-    monkeypatch.setattr(sys, "path", list(sys.path))
-    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+def _import_job():
     spec = importlib.util.spec_from_file_location("run_catchup", _JOB)
     job = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(job)
+    return job
+
+
+def test_run_catchup_import_changes_no_paths():
+    path, env = list(sys.path), dict(os.environ)
+    _import_job()
+    assert sys.path == path
+    assert os.environ.get("PYTHONPATH") == env.get("PYTHONPATH")
+    assert dict(os.environ) == env
+
+
+def test_run_catchup_demo(spark, tmp_path, capsys, monkeypatch):
+    from hiselspark.sources.snapshots import SnapshotTable
+
+    # main() edits sys.path and PYTHONPATH: undo both after
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+    job = _import_job()
     src, feats = str(tmp_path / "src"), str(tmp_path / "feats")
     try:
         assert job.main(["--source", src, "--features", feats,

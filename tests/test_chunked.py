@@ -109,22 +109,20 @@ def test_chunked_asof_equal_plain(spark, skewed, strict, tol):
 
 
 def test_chunked_timeline_combined_equals_plain(spark, skewed):
-    """The single-shuffle combined pass == plain sessionize+lags+
-    rolling composed."""
+    """The single-shuffle combined pass == plain lags+rolling
+    composed."""
     from hiselspark.operators.chunked import chunked_timeline_features
-    from hiselspark.operators.windows import (rolling_aggregates,
-                                              sessionize, with_lags)
+    from hiselspark.operators.windows import rolling_aggregates, with_lags
 
-    plain = sessionize(skewed, "entity_id", "ts", gap_seconds=900.0)
-    plain = with_lags(plain, "entity_id", "ts", ["val"], lags=(1,))
+    plain = with_lags(skewed, "entity_id", "ts", ["val"], lags=(1,))
     plain = rolling_aggregates(plain, "entity_id", "ts",
                                {"val": ["mean", "count"]},
                                window_seconds=1800.0)
     chunk = chunked_timeline_features(
         skewed, "entity_id", "ts", lag_cols=["val"], lags=(1,),
         rolling_aggs={"val": ["mean", "count"]}, rolling_window_s=1800.0,
-        session_gap_s=900.0, bucket_seconds=BUCKET)
-    cols = ["rid", "session_id", "val_lag1", "val_roll_mean_1800s",
+        bucket_seconds=BUCKET)
+    cols = ["rid", "val_lag1", "val_roll_mean_1800s",
             "val_roll_count_1800s"]
     pd.testing.assert_frame_equal(_collect(chunk)[cols],
                                   _collect(plain)[cols])

@@ -139,6 +139,24 @@ def test_featurizer_edge_captions_path_equals_dataframe(spark,
     assert got == sorted(captions.values())
 
 
+def test_featurizer_null_caption_counts_zero(spark, tmp_path_factory):
+    """A null caption counts like the empty string — length, tokens
+    and BPE tokens 0 — on path and DataFrame inputs alike."""
+    import pandas as pd
+
+    captions = [None, "", "two words", None]
+    images = datagen.images(spark, len(captions), seed=5)
+    pdf = images.toPandas()
+    pdf["caption"] = pd.Series(captions, dtype=object)
+    path = str(tmp_path_factory.mktemp("nullcap") / "images")
+    spark.createDataFrame(pdf, images.schema).write.parquet(path)
+    by_path, by_frame = _featurize_both_inputs(spark, path, 4)
+    pd.testing.assert_frame_equal(by_path, by_frame)
+    got = sorted(zip(by_frame["caption_len"], by_frame["caption_tokens"],
+                     by_frame["caption_rtokens"]))
+    assert got == [(0, 0, 0)] * 3 + [(9, 2, 2)]
+
+
 def test_dataframe_featurizer_keeps_passthrough_columns(spark):
     """Columns outside the image schema pass through the DataFrame
     input (``jobs/run_catchup.py`` keys its derived table on one)."""

@@ -772,3 +772,78 @@ def test_round4d_burrows_vocab_is_topk_not_sort(spark):
     txt = plan_str(burrows_delta(docs, "doc_id", "text", top_v=5),
                    "simple")
     assert "TakeOrderedAndProject" in txt
+
+
+def _final_plan_nodes(df):
+    """Physical operators of ``df``'s executed plan after an action,
+    through the adaptive final plan and its query stages."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        out.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+@pytest.fixture(scope="module")
+def small_timeline(spark):
+    from hiselspark import datagen
+    from hiselspark.pipeline import engineer_timeline
+    from hiselspark.sources.fused_scan import featurize_images_fused
+
+    images = datagen.images(spark, 400, seed=11, partitions=4)
+    tl = engineer_timeline(featurize_images_fused(spark, images))
+    tl.collect()
+    return tl
+
+
+def test_timeline_one_window_operator_per_spec(small_timeline):
+    """The timeline's three window specs (rolling range, summary
+    prefix, lag order) run as three window operators and three sorts,
+    and the prefix tail list is collected once."""
+    nodes = _final_plan_nodes(small_timeline)
+    names = [n.getClass().getSimpleName() for n in nodes]
+    windows = [n for n in nodes if n.getClass().getSimpleName()
+               == "WindowExec"]
+    assert len(windows) <= 3, names
+    assert names.count("SortExec") <= 3, names
+    collects = [e for w in windows
+                for e in (w.windowExpression().apply(i)
+                          for i in range(w.windowExpression().size()))
+                if "collect_list(" in e.toString()]
+    assert len(collects) == 1, [e.toString() for e in collects]
+
+
+def test_timeline_output_columns(small_timeline):
+    """Hash minibatches hash the feature columns in order, so the
+    timeline's column order is part of the selection's result."""
+    assert small_timeline.columns == [
+        "entity_id", "ts", "w", "h", "caption_len", "caption_tokens",
+        "caption_rtokens", "px_mean_r", "px_mean_g", "px_mean_b",
+        "px_std_r", "px_std_g", "px_std_b", "px_q25", "px_q50", "px_q75",
+        "phash_weight", *[f"pbit{i}" for i in range(16)],
+        "px_mean_g_roll_mean_21600s", "px_mean_g_roll_count_21600s",
+        "px_mean_r_lag1", "caption_tokens_lag1"]
+
+
+def test_image_scan_one_task_per_core_no_shuffle(spark, tmp_path):
+    """The (file, row-group) work list runs as at most one slice per
+    core, with no exchange."""
+    from hiselspark import datagen
+    from hiselspark.sources.fused_scan import image_feature_scan
+
+    path = str(tmp_path / "images")
+    datagen.images(spark, 240, seed=4, partitions=8).write.parquet(path)
+    scan = image_feature_scan(spark, path)
+    assert "Exchange" not in plan_str(scan, "simple")
+    parallelism = spark.sparkContext.defaultParallelism
+    assert scan.rdd.getNumPartitions() <= parallelism
+    assert scan.count() == 240

@@ -95,7 +95,6 @@ def _stage(n: int, corpus: str, inter: str, cpus: int, memory: str,
             .write.mode("overwrite").parquet(f"{inter}/timeline")
         with assemble_training_frame(f"{corpus}/images",
                                      _labels(spark, corpus)) as (frame, cols):
-            cols = [c for c in cols if c != "session_id"]
             frame.select(F.col("y").cast("double").alias("y"),
                          *[F.col(c).cast("double").alias(c) for c in cols]) \
                 .write.mode("overwrite").parquet(f"{inter}/frame")
