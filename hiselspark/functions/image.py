@@ -20,6 +20,15 @@ Images ride as opaque ``binary`` columns with typed metadata
   same registry.  The Spark-side plumbing (schema, batching, UDF
   signatures) is identical for every codec and is what the tests
   exercise.
+
+Every per-image featurizer is a per-batch body ``_<name>_frame(pdf)``
+built on two helpers: :func:`_each_image`, the one shape-grouped batch
+loop (same-shape ``raw`` payloads as chunked uint8 cubes, other codecs
+decoded one image at a time), and :func:`_map_images`, the one
+``mapInPandas`` shell (input schema minus the payload, plus the
+features).  The payload transforms (``augment_images``,
+``resize_images``) keep the payload, so they share
+:func:`_transform_images` instead.
 """
 from __future__ import annotations
 
@@ -164,6 +173,57 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
 
 
 # ---------------------------------------------------------------------------
+# per-image batching: one shape-grouped loop, one mapInPandas shell
+# ---------------------------------------------------------------------------
+
+
+def _each_image(pdf: pd.DataFrame,
+                fill: Callable[[np.ndarray, np.ndarray], None]) -> None:
+    """Call ``fill(rows, cube)`` for every image of the batch ``pdf``
+    (columns ``bytes``, ``w``, ``h`` and ``fmt``; no ``fmt`` column
+    means all ``raw``): same-shape ``raw`` payloads as ONE
+    ``(m, h, w, 3)`` uint8 cube per chunk (no per-row decode), every
+    image of another codec decoded through :func:`decode_image` as a
+    ``(1, h, w, 3)`` cube.  ``rows`` are the
+    cube's positions in ``pdf``.  A chunk bounds the int32 working set
+    of a call to ~16 MB (at least 8 images).  Every ``fill`` writes
+    only its own ``rows``, so neither grouping nor chunking shows in
+    its output."""
+    bufs = pdf["bytes"].to_numpy()
+    ws = pdf["w"].to_numpy()
+    hs = pdf["h"].to_numpy()
+    fmts = (pdf["fmt"].to_numpy() if "fmt" in pdf
+            else np.full(len(pdf), "raw"))
+    raw = fmts == "raw"
+    shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
+    for key in np.unique(shape_key[raw]):
+        all_rows = np.nonzero(raw & (shape_key == key))[0]
+        w, h = int(key >> 32), int(key & 0xFFFFFFFF)
+        m_cap = max(int(16e6 // (max(w * h, 1) * 3 * 4)), 8)
+        for s in range(0, len(all_rows), m_cap):
+            rows = all_rows[s:s + m_cap]
+            cube = np.frombuffer(
+                b"".join(bufs[r] for r in rows),
+                dtype=np.uint8).reshape(len(rows), h, w, 3)
+            fill(rows, cube)
+    for r in np.nonzero(~raw)[0]:
+        img = decode_image(bufs[r], int(ws[r]), int(hs[r]), str(fmts[r]))
+        fill(np.array([r]), img[None, ...])
+
+
+def _map_images(df: DataFrame,
+                frame_fn: Callable[[pd.DataFrame], pd.DataFrame],
+                fields: Sequence[T.StructField]) -> DataFrame:
+    """The ``mapInPandas`` shell of every per-image featurizer:
+    ``frame_fn`` turns each Arrow batch into its feature frame.  The
+    output schema is the input's without the ``bytes`` payload (blobs
+    never reach a shuffle), plus ``fields``."""
+    out_schema = T.StructType(
+        [f for f in df.schema.fields if f.name != "bytes"] + list(fields))
+    return df.mapInPandas(lambda pdfs: map(frame_fn, pdfs), out_schema)
+
+
+# ---------------------------------------------------------------------------
 # pixel statistics (Arrow-batched; no per-row Python at the Spark level)
 # ---------------------------------------------------------------------------
 
@@ -211,59 +271,65 @@ def _fill_from_hist(stats: np.ndarray, rows: np.ndarray,
 
 
 def _pixel_stats_frame(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-channel stats, vectorized over all SAME-SHAPE raw images in
-    the batch at once.  The uint8 payload is reduced through per-value
-    HISTOGRAMS (one fused bincount per chunk), never widened to float64
-    — the pixel stage is memory-bandwidth-bound, and the 8x traffic of
-    a float tensor was the measured 32-core bottleneck.  Non-raw codecs
-    fall back to per-row decode_image + the same histogram reduction."""
+    """Per-channel stats, vectorized over each cube of
+    :func:`_each_image`.  The uint8 payload is reduced through
+    per-value HISTOGRAMS (one fused bincount per channel), never
+    widened to float64 — the pixel stage is memory-bandwidth-bound, and
+    the 8x traffic of a float tensor was the measured 32-core
+    bottleneck."""
     stats = np.empty((len(pdf), 9), dtype=np.float64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
-    def hist_of(block: np.ndarray, m: int, npix: int) -> np.ndarray:
-        # block: (m * npix * 3,) uint8, channel-interleaved.  One fused
-        # bincount per channel: values offset into per-row slots; the
-        # only temp is a (m, npix) int32 — the payload itself is never
-        # widened, so the stage streams ~5 bytes/pixel instead of the
-        # 8-byte float tensor + sort the old implementation paid.
-        cube = block.reshape(m, npix, 3)
+    def fill(rows, cube):
+        # values offset into per-row slots; the only temp is a (m, npix)
+        # int32 — the payload itself is never widened, so the stage
+        # streams ~5 bytes/pixel instead of the 8-byte float tensor +
+        # sort the old implementation paid
+        m, h, w, _ = cube.shape
+        npix = h * w
+        px = cube.reshape(m, npix, 3)
         row_off = (np.arange(m, dtype=np.int32) * 256)[:, None]
         hist = np.empty((m, 3, 256), dtype=np.int64)
         for c in range(3):
-            idx = cube[:, :, c].astype(np.int32)
+            idx = px[:, :, c].astype(np.int32)
             idx += row_off
             hist[:, c, :] = np.bincount(
                 idx.ravel(), minlength=m * 256).reshape(m, 256)
-        return hist
+        _fill_from_hist(stats, rows, hist, npix)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            all_rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            npix = w * h
-            # bound the int32 index working set to ~16MB per chunk
-            m_cap = max(int(16e6 // (npix * 3 * 4)), 8)
-            for s in range(0, len(all_rows), m_cap):
-                rows = all_rows[s:s + m_cap]
-                block = np.frombuffer(
-                    b"".join(bufs[r] for r in rows), dtype=np.uint8)
-                _fill_from_hist(stats, rows,
-                                hist_of(block, len(rows), npix), npix)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]), str(fmts[r]))
-        npix = img.shape[0] * img.shape[1]
-        _fill_from_hist(stats, np.array([r]),
-                        hist_of(img.reshape(-1), 1, npix), npix)
-
+    _each_image(pdf, fill)
     out = pdf.drop(columns=["bytes"])
     for i, f in enumerate(PIXEL_STAT_FIELDS):
         out[f.name] = stats[:, i]
     return out
+
+
+def _transform_images(df: DataFrame,
+                      transform: Callable[[np.ndarray], np.ndarray]
+                      ) -> DataFrame:
+    """Map every payload through ``transform`` — an ``(m, h, w, 3)`` →
+    ``(m, h', w', 3)`` uint8 cube function fed by :func:`_each_image`
+    — and re-emit it as ``raw`` with the new ``(w, h)``.  The output
+    keeps its payload column, so this is not a :func:`_map_images`
+    featurizer."""
+    out_schema = T.StructType([
+        T.StructField(f.name, T.IntegerType()) if f.name in ("w", "h")
+        else f for f in df.schema.fields])
+
+    def frame(pdf: pd.DataFrame) -> pd.DataFrame:
+        bufs = [None] * len(pdf)
+        ws = np.empty(len(pdf), dtype=np.int32)
+        hs = np.empty(len(pdf), dtype=np.int32)
+
+        def fill(rows, cube):
+            out = transform(cube)
+            for i, r in enumerate(rows):
+                bufs[r] = out[i].tobytes()
+            hs[rows], ws[rows] = out.shape[1], out.shape[2]
+
+        _each_image(pdf, fill)
+        return pdf.assign(bytes=bufs, w=ws, h=hs, fmt="raw")
+
+    return df.mapInPandas(lambda pdfs: map(frame, pdfs), out_schema)
 
 
 def augment_raw(img: np.ndarray, ops: Sequence) -> np.ndarray:
@@ -292,78 +358,39 @@ def augment_raw(img: np.ndarray, ops: Sequence) -> np.ndarray:
     return np.ascontiguousarray(img)
 
 
-def augment_images(df: DataFrame, ops: Sequence,
-                   bytes_col: str = "bytes") -> DataFrame:
+def augment_images(df: DataFrame, ops: Sequence) -> DataFrame:
     """Deterministic geometric augmentation of every image payload
     (flip / rotate / crop chains) — the training-data staple that at
     corpus scale must run as a pure map stage: Arrow-batched
-    ``mapInPandas``, same-shape raw images in a batch transformed as
-    ONE (m, h, w, 3) NumPy gather, non-raw payloads decoded per the
-    codec registry first.  Output is re-emitted as 'raw' with updated
-    ``(w, h)``.  Random per-image augmentation belongs in the training
-    loader; the PIPELINE's job is the deterministic variants, which
-    stay reproducible and oracle-checkable."""
+    ``mapInPandas``, each :func:`_each_image` cube (same-shape raw
+    images, or one decoded non-raw image) transformed as ONE
+    (m, h, w, 3) NumPy gather.  Output is re-emitted as 'raw' with
+    updated ``(w, h)``.  Random per-image augmentation belongs in the
+    training loader; the PIPELINE's job is the deterministic variants,
+    which stay reproducible and oracle-checkable."""
     ops = [tuple(op) for op in ops]
-    fields = []
-    for f in df.schema.fields:
-        if f.name in ("w", "h"):
-            fields.append(T.StructField(f.name, T.IntegerType()))
-        else:
-            fields.append(f)
-    out_schema = T.StructType(fields)
 
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            bufs = pdf[bytes_col].to_numpy()
-            ws = pdf["w"].to_numpy()
-            hs = pdf["h"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            out_bufs = [None] * len(pdf)
-            out_w = np.empty(len(pdf), dtype=np.int32)
-            out_h = np.empty(len(pdf), dtype=np.int32)
-            raw = fmts == "raw"
-            shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-            for key in np.unique(shape_key[raw]):
-                rows = np.nonzero(raw & (shape_key == key))[0]
-                w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-                block = np.frombuffer(
-                    b"".join(bufs[r] for r in rows),
-                    dtype=np.uint8).reshape(len(rows), h, w, 3)
-                for op in ops:
-                    kind = op[0]
-                    if kind == "hflip":
-                        block = block[:, :, ::-1]
-                    elif kind == "vflip":
-                        block = block[:, ::-1]
-                    elif kind == "rot90":
-                        block = np.rot90(block, axes=(1, 2))
-                    elif kind == "crop":
-                        _, x0, y0, cw, ch = op
-                        bh, bw = block.shape[1:3]
-                        if not (0 <= x0 and x0 + cw <= bw and 0 <= y0
-                                and y0 + ch <= bh):
-                            raise ValueError(
-                                f"crop {op} outside {bw}x{bh}")
-                        block = block[:, y0:y0 + ch, x0:x0 + cw]
-                    else:
-                        raise ValueError(f"unknown op {op!r}")
-                block = np.ascontiguousarray(block)
-                for i, r in enumerate(rows):
-                    out_bufs[r] = block[i].tobytes()
-                    out_h[r], out_w[r] = block.shape[1], block.shape[2]
-            for r in np.nonzero(~raw)[0]:
-                img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                                   str(fmts[r]))
-                img = augment_raw(img, ops)
-                out_bufs[r] = img.tobytes()
-                out_h[r], out_w[r] = img.shape[0], img.shape[1]
-            out = pdf.copy()
-            out[bytes_col] = out_bufs
-            out["w"] = out_w
-            out["h"] = out_h
-            out["fmt"] = "raw"
-            yield out
-    return df.mapInPandas(run, out_schema)
+    def chain(block: np.ndarray) -> np.ndarray:
+        for op in ops:
+            kind = op[0]
+            if kind == "hflip":
+                block = block[:, :, ::-1]
+            elif kind == "vflip":
+                block = block[:, ::-1]
+            elif kind == "rot90":
+                block = np.rot90(block, axes=(1, 2))
+            elif kind == "crop":
+                _, x0, y0, cw, ch = op
+                bh, bw = block.shape[1:3]
+                if not (0 <= x0 and x0 + cw <= bw and 0 <= y0
+                        and y0 + ch <= bh):
+                    raise ValueError(f"crop {op} outside {bw}x{bh}")
+                block = block[:, y0:y0 + ch, x0:x0 + cw]
+            else:
+                raise ValueError(f"unknown op {op!r}")
+        return block
+
+    return _transform_images(df, chain)
 
 
 _CHECKSUM_MOD = 2_147_483_647
@@ -408,55 +435,24 @@ def resize_raw(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return img[ys[:, None], xs[None, :]]
 
 
-def resize_images(df: DataFrame, out_w: int, out_h: int,
-                  bytes_col: str = "bytes") -> DataFrame:
+def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Resize every image payload to (out_w, out_h): decode per the
     codec registry, nearest-neighbor resample, re-emit as 'raw'.
-    Arrow-batched ``mapInPandas``; same-shape raw images in a batch are
+    Arrow-batched ``mapInPandas``; each :func:`_each_image` cube is
     resampled as ONE (m, h, w, 3) gather (per-row NumPy overhead would
-    dominate for thumbnails).  The standard preprocessing step of an
-    image training pipeline — uniform shapes downstream."""
-    fields = []
-    for f in df.schema.fields:
-        if f.name in ("w", "h"):
-            fields.append(T.StructField(f.name, T.IntegerType()))
-        else:
-            fields.append(f)
-    out_schema = T.StructType(fields)
+    dominate for thumbnails), with :func:`resize_raw`'s pixel-center
+    rule.  The standard preprocessing step of an image training
+    pipeline — uniform shapes downstream."""
 
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            bufs = pdf[bytes_col].to_numpy()
-            ws = pdf["w"].to_numpy()
-            hs = pdf["h"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            out_bufs = [None] * len(pdf)
-            raw = fmts == "raw"
-            shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-            for key in np.unique(shape_key[raw]):
-                rows = np.nonzero(raw & (shape_key == key))[0]
-                w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-                block = np.frombuffer(
-                    b"".join(bufs[r] for r in rows),
-                    dtype=np.uint8).reshape(len(rows), h, w, 3)
-                ys = np.minimum(((np.arange(out_h) + 0.5) * h / out_h)
-                                .astype(np.int64), h - 1)
-                xs = np.minimum(((np.arange(out_w) + 0.5) * w / out_w)
-                                .astype(np.int64), w - 1)
-                resized = block[:, ys[:, None], xs[None, :]]
-                for i, r in enumerate(rows):
-                    out_bufs[r] = resized[i].tobytes()
-            for r in np.nonzero(~raw)[0]:
-                img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                                   str(fmts[r]))
-                out_bufs[r] = resize_raw(img, out_w, out_h).tobytes()
-            out = pdf.copy()
-            out[bytes_col] = out_bufs
-            out["w"] = np.int32(out_w)
-            out["h"] = np.int32(out_h)
-            out["fmt"] = "raw"
-            yield out
-    return df.mapInPandas(run, out_schema)
+    def gather(block: np.ndarray) -> np.ndarray:
+        _, h, w, _ = block.shape
+        ys = np.minimum(((np.arange(out_h) + 0.5) * h / out_h)
+                        .astype(np.int64), h - 1)
+        xs = np.minimum(((np.arange(out_w) + 0.5) * w / out_w)
+                        .astype(np.int64), w - 1)
+        return block[:, ys[:, None], xs[None, :]]
+
+    return _transform_images(df, gather)
 
 
 def with_pixel_stats(df: DataFrame) -> DataFrame:
@@ -464,30 +460,18 @@ def with_pixel_stats(df: DataFrame) -> DataFrame:
     payload column afterwards (never carry multi-KB blobs through a
     shuffle you don't have to).  Arrow-batched ``mapInPandas``; the
     per-image loop is inside the batch, vectorized over pixels."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + PIXEL_STAT_FIELDS)
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _pixel_stats_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(df, _pixel_stats_frame, PIXEL_STAT_FIELDS)
 
 
 def _spatial_frame(pdf: pd.DataFrame, grid: int) -> pd.DataFrame:
-    """Tile-grid means + gradient energy, vectorized per shape group
-    (same batching discipline as :func:`_pixel_stats_frame`): tile
-    sums by integer reshape-reduce, |∇x|/|∇y| by int16 diffs — all
-    sums exact integers before ONE division each."""
+    """Tile-grid means + gradient energy, vectorized per
+    :func:`_each_image` cube: tile sums by integer reshape-reduce,
+    |∇x|/|∇y| by int16 diffs — all sums exact integers before ONE
+    division each."""
     m = len(pdf)
     tiles = [None] * m
     edx = np.empty(m, dtype=np.float64)
     edy = np.empty(m, dtype=np.float64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         _, h, w, _ = cube.shape
@@ -507,27 +491,10 @@ def _spatial_frame(pdf: pd.DataFrame, grid: int) -> pd.DataFrame:
         edx[rows] = sdx / float(h * (w - 1) * 3)
         edy[rows] = sdy / float((h - 1) * w * 3)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-
-    out = pdf.drop(columns=["bytes"])
-    out["tile_means"] = tiles
-    out["edge_dx"] = edx
-    out["edge_dy"] = edy
-    out["edge_energy"] = (edx + edy) / 2.0
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        tile_means=tiles, edge_dx=edx, edge_dy=edy,
+        edge_energy=(edx + edy) / 2.0)
 
 
 def with_spatial_features(df: DataFrame, grid: int = 2) -> DataFrame:
@@ -539,23 +506,17 @@ def with_spatial_features(df: DataFrame, grid: int = 2) -> DataFrame:
     blurred or flat image scores low, making this the standard blur /
     junk filter in an image-corpus curation pass).
 
-    Arrow-batched ``mapInPandas`` over shape-grouped raw payloads
+    Arrow-batched ``mapInPandas`` over shape-grouped payloads
     (uint8 → int16/int64 integer sums, one division per statistic —
     engine-exact); blobs are dropped before anything shuffles.  Images
     not divisible by ``grid`` use the top-left ``grid·⌊dim/grid⌋``
     crop for tiles (edges use the full frame)."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("tile_means", T.ArrayType(T.DoubleType())),
-           T.StructField("edge_dx", T.DoubleType()),
-           T.StructField("edge_dy", T.DoubleType()),
-           T.StructField("edge_energy", T.DoubleType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _spatial_frame(pdf, grid)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, lambda pdf: _spatial_frame(pdf, grid),
+        [T.StructField("tile_means", T.ArrayType(T.DoubleType())),
+         T.StructField("edge_dx", T.DoubleType()),
+         T.StructField("edge_dy", T.DoubleType()),
+         T.StructField("edge_energy", T.DoubleType())])
 
 
 def _conv_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -571,10 +532,6 @@ def _conv_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     amean = np.empty(m, dtype=np.float64)
     rmax = np.empty(m, dtype=np.int64)
     npos = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         _, h, w, _ = cube.shape
@@ -588,25 +545,9 @@ def _conv_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         rmax[rows] = r.max(axis=(1, 2))
         npos[rows] = (r > 0).sum(axis=(1, 2), dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["conv_abs_mean"] = amean
-    out["conv_max"] = rmax
-    out["conv_n_pos"] = npos
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        conv_abs_mean=amean, conv_max=rmax, conv_n_pos=npos)
 
 
 def with_conv_features(df: DataFrame) -> DataFrame:
@@ -616,20 +557,14 @@ def with_conv_features(df: DataFrame) -> DataFrame:
     sees what the first-difference ``edge_energy`` misses: a smooth
     ramp has high gradient but zero Laplacian), ``conv_max`` (peak
     response — impulse-noise / hot-pixel detector) and ``conv_n_pos``.
-    Arrow-batched ``mapInPandas`` over shape-grouped raw payloads —
+    Arrow-batched ``mapInPandas`` over shape-grouped payloads —
     images needing >= 3x3; integer arithmetic end to end (one division
     for the mean), blobs dropped before anything shuffles."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("conv_abs_mean", T.DoubleType()),
-           T.StructField("conv_max", T.LongType()),
-           T.StructField("conv_n_pos", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _conv_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, _conv_frame,
+        [T.StructField("conv_abs_mean", T.DoubleType()),
+         T.StructField("conv_max", T.LongType()),
+         T.StructField("conv_n_pos", T.LongType())])
 
 
 def _equalize_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -650,10 +585,6 @@ def _equalize_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     eq_sum = np.empty(m, dtype=np.int64)
     eq_mean = np.empty(m, dtype=np.float64)
     eq_distinct = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -677,25 +608,9 @@ def _equalize_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         eq_mean[rows] = eq_sum[rows] / float(npix)
         eq_distinct[rows] = [len(np.unique(r)) for r in eq]
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["eq_sum"] = eq_sum
-    out["eq_mean"] = eq_mean
-    out["eq_distinct"] = eq_distinct
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        eq_sum=eq_sum, eq_mean=eq_mean, eq_distinct=eq_distinct)
 
 
 def with_equalized_stats(df: DataFrame) -> DataFrame:
@@ -706,19 +621,12 @@ def with_equalized_stats(df: DataFrame) -> DataFrame:
     banded / posterized / synthetic images that raw pixel stats rate
     as normal — a curation filter orthogonal to blur (``edge_energy``,
     ``conv_abs_mean``) and exposure (``px_mean``) checks.  Same
-    Arrow-batched shape-grouped ``mapInPandas`` discipline as the
-    other payload operators."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("eq_sum", T.LongType()),
-           T.StructField("eq_mean", T.DoubleType()),
-           T.StructField("eq_distinct", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _equalize_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    :func:`_each_image` batching as the other payload operators."""
+    return _map_images(
+        df, _equalize_frame,
+        [T.StructField("eq_sum", T.LongType()),
+         T.StructField("eq_mean", T.DoubleType()),
+         T.StructField("eq_distinct", T.LongType())])
 
 
 def _dhash_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -731,10 +639,6 @@ def _dhash_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     m = len(pdf)
     lo = np.empty(m, dtype=np.int64)
     hi = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         _, h, w, _ = cube.shape
@@ -751,25 +655,8 @@ def _dhash_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         hi[rows] = (bits[:, 4:, :].reshape(len(rows), 32)
                     * weights).sum(axis=1)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-
-    out = pdf.drop(columns=["bytes"])
-    out["dhash_lo"] = lo
-    out["dhash_hi"] = hi
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(dhash_lo=lo, dhash_hi=hi)
 
 
 def with_dhash(df: DataFrame) -> DataFrame:
@@ -787,16 +674,10 @@ def with_dhash(df: DataFrame) -> DataFrame:
     sampling), so every bit is engine-reproducible — the driver gate
     recomputes the sampled pixels, the gradient signs and the packed
     halves arithmetically in SQL.  Blobs dropped before any shuffle."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("dhash_lo", T.LongType()),
-           T.StructField("dhash_hi", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _dhash_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, _dhash_frame,
+        [T.StructField("dhash_lo", T.LongType()),
+         T.StructField("dhash_hi", T.LongType())])
 
 
 def _otsu_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -819,10 +700,6 @@ def _otsu_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     t_star = np.full(m, -1, dtype=np.int64)
     fg_count = np.zeros(m, dtype=np.int64)
     fg_sum = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -853,25 +730,9 @@ def _otsu_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         fg_sum[rows] = np.where(
             ok, s_tot[:, 0] - s0[np.arange(n), best], 0)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["otsu_t"] = t_star
-    out["fg_count"] = fg_count
-    out["fg_sum"] = fg_sum
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        otsu_t=t_star, fg_count=fg_count, fg_sum=fg_sum)
 
 
 def with_otsu_stats(df: DataFrame) -> DataFrame:
@@ -882,17 +743,11 @@ def with_otsu_stats(df: DataFrame) -> DataFrame:
     over shape-grouped payloads; exact integer cumulative sums and one
     exact sub-2⁵³ division, so the gate's SQL oracle replays every
     histogram count, every candidate score and the argmax."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("otsu_t", T.LongType()),
-           T.StructField("fg_count", T.LongType()),
-           T.StructField("fg_sum", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _otsu_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, _otsu_frame,
+        [T.StructField("otsu_t", T.LongType()),
+         T.StructField("fg_count", T.LongType()),
+         T.StructField("fg_sum", T.LongType())])
 
 
 def _morph_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
@@ -906,10 +761,6 @@ def _morph_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
     n_fg = np.zeros(m, dtype=np.int64)
     n_er = np.zeros(m, dtype=np.int64)
     n_di = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         g = cube.sum(axis=3, dtype=np.int64)
@@ -928,25 +779,9 @@ def _morph_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
         n_er[rows] = er.sum(axis=(1, 2), dtype=np.int64)
         n_di[rows] = di.sum(axis=(1, 2), dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["n_fg"] = n_fg
-    out["n_eroded"] = n_er
-    out["n_dilated"] = n_di
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        n_fg=n_fg, n_eroded=n_er, n_dilated=n_di)
 
 
 def with_morphology_stats(df: DataFrame, thresh: int = 380) -> DataFrame:
@@ -958,17 +793,11 @@ def with_morphology_stats(df: DataFrame, thresh: int = 380) -> DataFrame:
     Arrow-batched ``mapInPandas`` over shape-grouped payloads; pure
     boolean/integer arithmetic, so the SQL oracle replays every
     neighborhood min/max inline."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("n_fg", T.LongType()),
-           T.StructField("n_eroded", T.LongType()),
-           T.StructField("n_dilated", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _morph_frame(pdf, thresh)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, lambda pdf: _morph_frame(pdf, thresh),
+        [T.StructField("n_fg", T.LongType()),
+         T.StructField("n_eroded", T.LongType()),
+         T.StructField("n_dilated", T.LongType())])
 
 
 def _blob_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
@@ -983,10 +812,6 @@ def _blob_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
     m = len(pdf)
     n_blobs = np.zeros(m, dtype=np.int64)
     max_blob = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1014,24 +839,9 @@ def _blob_frame(pdf: pd.DataFrame, thresh: int) -> pd.DataFrame:
                 n_blobs[rows[i]] = len(counts)
                 max_blob[rows[i]] = counts.max()
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["n_blobs"] = n_blobs
-    out["max_blob"] = max_blob
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        n_blobs=n_blobs, max_blob=max_blob)
 
 
 def with_blob_stats(df: DataFrame, thresh: int = 380) -> DataFrame:
@@ -1041,16 +851,10 @@ def with_blob_stats(df: DataFrame, thresh: int = 380) -> DataFrame:
     batched ``mapInPandas`` over shape-grouped payloads; pure integer
     min-propagation, so a SQL engine replays it with recursive
     min-label CTEs."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("n_blobs", T.LongType()),
-           T.StructField("max_blob", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _blob_frame(pdf, thresh)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, lambda pdf: _blob_frame(pdf, thresh),
+        [T.StructField("n_blobs", T.LongType()),
+         T.StructField("max_blob", T.LongType())])
 
 
 def _octant(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
@@ -1078,10 +882,6 @@ def _gradhist_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     m = len(pdf)
     hog = np.zeros((m, 8), dtype=np.int64)
     n_flat = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         g = cube.sum(axis=3, dtype=np.int64)
@@ -1091,31 +891,14 @@ def _gradhist_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         flat = mag == 0
         n_flat[rows] = flat.sum(axis=(1, 2), dtype=np.int64)
         oct_ = _octant(gx, gy)
-        n = len(rows)
         for b in range(8):
             sel = (oct_ == b) & ~flat
             hog[rows, b] = (mag * sel).sum(axis=(1, 2),
                                            dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    for b in range(8):
-        out[f"hog{b}"] = hog[:, b]
-    out["n_flat"] = n_flat
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        **{f"hog{b}": hog[:, b] for b in range(8)}, n_flat=n_flat)
 
 
 def with_gradient_hist(df: DataFrame) -> DataFrame:
@@ -1126,16 +909,10 @@ def with_gradient_hist(df: DataFrame) -> DataFrame:
     batched ``mapInPandas`` over shape-grouped payloads; exact integer
     arithmetic end to end, so the SQL oracle replays every gradient,
     octant test and magnitude sum inline."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField(f"hog{b}", T.LongType()) for b in range(8)]
+    return _map_images(
+        df, _gradhist_frame,
+        [T.StructField(f"hog{b}", T.LongType()) for b in range(8)]
         + [T.StructField("n_flat", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _gradhist_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
 
 
 def _moments_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1152,10 +929,6 @@ def _moments_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     m = len(pdf)
     cols = {k: np.zeros(m, dtype=np.int64)
             for k in ("m00", "m10", "m01", "cn20", "cn11", "cn02")}
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1175,24 +948,8 @@ def _moments_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         cols["cn02"][rows] = m00 * m02 - m01 * m01
         cols["cn11"][rows] = m00 * m11 - m10 * m01
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    for k, v in cols.items():
-        out[k] = v
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(**cols)
 
 
 def with_image_moments(df: DataFrame) -> DataFrame:
@@ -1201,16 +958,10 @@ def with_image_moments(df: DataFrame) -> DataFrame:
     spread and orientation features for layout/shape curation.
     Arrow-batched ``mapInPandas``; the SQL oracle recomputes every
     moment arithmetically."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField(k, T.LongType())
-           for k in ("m00", "m10", "m01", "cn20", "cn11", "cn02")])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _moments_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, _moments_frame,
+        [T.StructField(k, T.LongType())
+         for k in ("m00", "m10", "m01", "cn20", "cn11", "cn02")])
 
 
 def _boxmax_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1224,10 +975,6 @@ def _boxmax_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     box_max = np.zeros(m, dtype=np.int64)
     box_y = np.zeros(m, dtype=np.int64)
     box_x = np.zeros(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1245,25 +992,9 @@ def _boxmax_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         box_y[rows] = idx // bw + 1
         box_x[rows] = idx % bw + 1
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["box_max"] = box_max
-    out["box_y"] = box_y
-    out["box_x"] = box_x
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        box_max=box_max, box_y=box_y, box_x=box_x)
 
 
 def with_box_peak(df: DataFrame) -> DataFrame:
@@ -1271,17 +1002,11 @@ def with_box_peak(df: DataFrame) -> DataFrame:
     through a summed-area table, with its first-occurrence interior
     position — exact integers; the oracle proves the SAT algebra by
     direct per-box addition."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("box_max", T.LongType()),
-           T.StructField("box_y", T.LongType()),
-           T.StructField("box_x", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _boxmax_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, _boxmax_frame,
+        [T.StructField("box_max", T.LongType()),
+         T.StructField("box_y", T.LongType()),
+         T.StructField("box_x", T.LongType())])
 
 
 # clockwise 8-neighborhood from the top-left corner — the standard
@@ -1309,10 +1034,6 @@ def _lbp_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     lsum = np.empty(m, dtype=np.int64)
     nuni = np.empty(m, dtype=np.int64)
     ndist = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1335,25 +1056,9 @@ def _lbp_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         ndist[rows] = 1 + (srt[:, 1:] != srt[:, :-1]).sum(
             axis=1, dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["lbp_sum"] = lsum
-    out["lbp_n_uniform"] = nuni
-    out["lbp_distinct"] = ndist
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        lbp_sum=lsum, lbp_n_uniform=nuni, lbp_distinct=ndist)
 
 
 def with_lbp_stats(df: DataFrame) -> DataFrame:
@@ -1361,17 +1066,11 @@ def with_lbp_stats(df: DataFrame) -> DataFrame:
     the payload.  Arrow-batched ``mapInPandas`` over shape-grouped raw
     payloads; integer arithmetic end to end, blobs dropped before
     anything shuffles."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("lbp_sum", T.LongType()),
-           T.StructField("lbp_n_uniform", T.LongType()),
-           T.StructField("lbp_distinct", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _lbp_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, _lbp_frame,
+        [T.StructField("lbp_sum", T.LongType()),
+         T.StructField("lbp_n_uniform", T.LongType()),
+         T.StructField("lbp_distinct", T.LongType())])
 
 
 def _median3_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1386,10 +1085,6 @@ def _median3_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     msum = np.empty(m, dtype=np.int64)
     mmax = np.empty(m, dtype=np.int64)
     nchg = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1403,42 +1098,20 @@ def _median3_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         mmax[rows] = med.max(axis=(1, 2))
         nchg[rows] = (med != c).sum(axis=(1, 2), dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["med_sum"] = msum
-    out["med_max"] = mmax
-    out["n_changed"] = nchg
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        med_sum=msum, med_max=mmax, n_changed=nchg)
 
 
 def with_median3_stats(df: DataFrame) -> DataFrame:
     """Append 3x3-median-filter statistics (see :func:`_median3_frame`)
-    and drop the payload — same mapInPandas shape-group plan as the
+    and drop the payload — same :func:`_each_image` batching as the
     other pixel operators."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("med_sum", T.LongType()),
-           T.StructField("med_max", T.LongType()),
-           T.StructField("n_changed", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _median3_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, _median3_frame,
+        [T.StructField("med_sum", T.LongType()),
+         T.StructField("med_max", T.LongType()),
+         T.StructField("n_changed", T.LongType())])
 
 
 def _ssim_sums_frame(pdf: pd.DataFrame, a_col: str, b_col: str,
@@ -1531,43 +1204,44 @@ def ssim_tiles(df: DataFrame, a_col: str = "bytes_a",
 
 
 def _color_stats_frame(pdf: pd.DataFrame, q: int) -> pd.DataFrame:
-    """Per-image quantized color-cube stats from raw RGB payloads."""
-    keep = [c for c in pdf.columns if c != "bytes"]
-    out = {c: [] for c in keep}
-    res = {"n_bins": [], "dom_bin": [], "dom_share": [],
-           "color_entropy": []}
+    """Per-image quantized color-cube stats, any codec."""
+    m = len(pdf)
+    n_bins = np.empty(m, dtype=np.int64)
+    dom_bin = np.empty(m, dtype=np.int64)
+    dom_share = np.empty(m, dtype=np.float64)
+    entropy = np.empty(m, dtype=np.float64)
     shift, nb = 256 // q, q * q * q
-    for (w, h), grp in pdf.groupby(["w", "h"], sort=False):
-        px = np.frombuffer(
-            b"".join(grp["bytes"]), dtype=np.uint8
-        ).reshape(len(grp), h * w, 3).astype(np.int64)
+
+    def fill(rows, cube):
+        n, h, w, _ = cube.shape
+        npx = h * w
+        px = cube.reshape(n, npx, 3).astype(np.int64)
         bins = ((px[:, :, 0] // shift) * q * q
                 + (px[:, :, 1] // shift) * q + px[:, :, 2] // shift)
-        m, npx = len(grp), h * w
-        counts = np.zeros((m, nb), dtype=np.int64)
-        np.add.at(counts, (np.repeat(np.arange(m), npx), bins.ravel()), 1)
+        counts = np.zeros((n, nb), dtype=np.int64)
+        np.add.at(counts, (np.repeat(np.arange(n), npx), bins.ravel()), 1)
         share = counts / float(npx)
         with np.errstate(divide="ignore", invalid="ignore"):
             terms = np.where(counts > 0, -share * np.log(share), 0.0)
         # left fold in bin order (zero bins add exactly 0.0) — the
         # same sequential order the SQL oracle's list_reduce uses
-        ent = np.zeros(m)
+        ent = np.zeros(n)
         for b in range(nb):
             ent = ent + terms[:, b]
         dom = counts.argmax(axis=1)        # ties -> lowest bin index
-        for c in keep:
-            out[c].extend(grp[c].tolist())
-        res["n_bins"].extend((counts > 0).sum(axis=1).tolist())
-        res["dom_bin"].extend(dom.tolist())
-        res["dom_share"].extend(
-            share[np.arange(m), dom].tolist())
-        res["color_entropy"].extend(ent.tolist())
-    out.update(res)
-    return pd.DataFrame(out)
+        n_bins[rows] = (counts > 0).sum(axis=1)
+        dom_bin[rows] = dom
+        dom_share[rows] = share[np.arange(n), dom]
+        entropy[rows] = ent
+
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        n_bins=n_bins, dom_bin=dom_bin, dom_share=dom_share,
+        color_entropy=entropy)
 
 
 def with_color_stats(df: DataFrame, bins_per_channel: int = 4) -> DataFrame:
-    """Quantized color-cube statistics per raw RGB image — the classic
+    """Quantized color-cube statistics per image, any codec — the classic
     color-diversity curation features: ``n_bins`` (occupied cells of
     the q×q×q cube), ``dom_bin`` / ``dom_share`` (dominant color cell,
     ties to the lowest bin index, and its pixel share — near-1 means a
@@ -1584,18 +1258,12 @@ def with_color_stats(df: DataFrame, bins_per_channel: int = 4) -> DataFrame:
     if 256 % bins_per_channel:
         raise ValueError("bins_per_channel must divide 256, got "
                          f"{bins_per_channel}")
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("n_bins", T.LongType()),
-           T.StructField("dom_bin", T.LongType()),
-           T.StructField("dom_share", T.DoubleType()),
-           T.StructField("color_entropy", T.DoubleType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _color_stats_frame(pdf, bins_per_channel)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, lambda pdf: _color_stats_frame(pdf, bins_per_channel),
+        [T.StructField("n_bins", T.LongType()),
+         T.StructField("dom_bin", T.LongType()),
+         T.StructField("dom_share", T.DoubleType()),
+         T.StructField("color_entropy", T.DoubleType())])
 
 
 def _lap_suffstats_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1608,10 +1276,6 @@ def _lap_suffstats_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     ln = np.empty(m, dtype=np.int64)
     ls = np.empty(m, dtype=np.int64)
     lss = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         _, h, w, _ = cube.shape
@@ -1623,25 +1287,9 @@ def _lap_suffstats_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         ls[rows] = r.sum(axis=(1, 2), dtype=np.int64)
         lss[rows] = (r * r).sum(axis=(1, 2), dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["lap_n"] = ln
-    out["lap_sum"] = ls
-    out["lap_sumsq"] = lss
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        lap_n=ln, lap_sum=ls, lap_sumsq=lss)
 
 
 def with_blur_score(df: DataFrame,
@@ -1673,17 +1321,11 @@ def with_blur_score(df: DataFrame,
     thr = int(var_threshold)
     if thr < 0:
         raise ValueError(f"var_threshold must be >= 0, got {thr}")
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("lap_n", T.LongType()),
-           T.StructField("lap_sum", T.LongType()),
-           T.StructField("lap_sumsq", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _lap_suffstats_frame(pdf)
-
-    out = df.mapInPandas(run, out_schema)
+    out = _map_images(
+        df, _lap_suffstats_frame,
+        [T.StructField("lap_n", T.LongType()),
+         T.StructField("lap_sum", T.LongType()),
+         T.StructField("lap_sumsq", T.LongType())])
     n = F.col("lap_n")
     num = n * F.col("lap_sumsq") - F.col("lap_sum") * F.col("lap_sum")
     return (out
@@ -1713,10 +1355,6 @@ def _harris_frame(pdf: pd.DataFrame, threshold: int) -> pd.DataFrame:
     ncor = np.empty(m, dtype=np.int64)
     rmax = np.empty(m, dtype=np.int64)
     rarg = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         g = cube.sum(axis=3, dtype=np.int64)
@@ -1743,25 +1381,9 @@ def _harris_frame(pdf: pd.DataFrame, threshold: int) -> pd.DataFrame:
         rmax[rows] = flat.max(axis=1)
         rarg[rows] = flat.argmax(axis=1)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["corner_count"] = ncor
-    out["resp_max"] = rmax
-    out["resp_argmax"] = rarg
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        corner_count=ncor, resp_max=rmax, resp_argmax=rarg)
 
 
 def with_harris_corners(df: DataFrame,
@@ -1771,19 +1393,13 @@ def with_harris_corners(df: DataFrame,
     point detector completing the spatial-feature family (gradhist,
     moments, boxpeak, LBP): corner density is a strong busy-vs-flat
     image curation signal.  Arrow-batched ``mapInPandas`` over
-    shape-grouped raw payloads; images must be >= 5x5 (Sobel then box
+    shape-grouped payloads; images must be >= 5x5 (Sobel then box
     sum each eat a 1-pixel border)."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("corner_count", T.LongType()),
-           T.StructField("resp_max", T.LongType()),
-           T.StructField("resp_argmax", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _harris_frame(pdf, int(threshold))
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, lambda pdf: _harris_frame(pdf, int(threshold)),
+        [T.StructField("corner_count", T.LongType()),
+         T.StructField("resp_max", T.LongType()),
+         T.StructField("resp_argmax", T.LongType())])
 
 
 def _glcm_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1807,10 +1423,6 @@ def _glcm_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     contrast = np.empty(m, dtype=np.int64)
     energy = np.empty(m, dtype=np.int64)
     hom840 = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1829,44 +1441,22 @@ def _glcm_frame(pdf: pd.DataFrame) -> pd.DataFrame:
             cnt = np.bincount(codes[j], minlength=64)
             energy[r] = int((cnt.astype(np.int64) ** 2).sum())
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["glcm_pairs"] = npair
-    out["glcm_contrast"] = contrast
-    out["glcm_energy_num"] = energy
-    out["glcm_hom840"] = hom840
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        glcm_pairs=npair, glcm_contrast=contrast, glcm_energy_num=energy,
+        glcm_hom840=hom840)
 
 
 def with_glcm_stats(df: DataFrame) -> DataFrame:
     """Append GLCM texture statistics (see :func:`_glcm_frame`) and
     drop the payload — Arrow-batched ``mapInPandas`` over
-    shape-grouped raw payloads, integer arithmetic end to end."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("glcm_pairs", T.LongType()),
-           T.StructField("glcm_contrast", T.LongType()),
-           T.StructField("glcm_energy_num", T.LongType()),
-           T.StructField("glcm_hom840", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _glcm_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    shape-grouped payloads, integer arithmetic end to end."""
+    return _map_images(
+        df, _glcm_frame,
+        [T.StructField("glcm_pairs", T.LongType()),
+         T.StructField("glcm_contrast", T.LongType()),
+         T.StructField("glcm_energy_num", T.LongType()),
+         T.StructField("glcm_hom840", T.LongType())])
 
 
 def _projection_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1890,10 +1480,6 @@ def _projection_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     cssq = np.empty(m, dtype=np.int64)
     comy = np.empty(m, dtype=np.int64)
     comx = np.empty(m, dtype=np.int64)
-    bufs = pdf["bytes"].to_numpy()
-    ws = pdf["w"].to_numpy()
-    hs = pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
 
     def fill(rows, cube):
         n, h, w, _ = cube.shape
@@ -1908,46 +1494,23 @@ def _projection_frame(pdf: pd.DataFrame) -> pd.DataFrame:
         comx[rows] = (np.arange(w, dtype=np.int64)[None, :]
                       * c).sum(axis=1, dtype=np.int64)
 
-    raw = fmts == "raw"
-    if raw.any():
-        shape_key = ws.astype(np.int64) << 32 | hs.astype(np.int64)
-        for key in np.unique(shape_key[raw]):
-            rows = np.nonzero(raw & (shape_key == key))[0]
-            w, h = int(key >> 32), int(key & 0xFFFFFFFF)
-            block = np.frombuffer(
-                b"".join(bufs[r] for r in rows),
-                dtype=np.uint8).reshape(len(rows), h, w, 3)
-            fill(rows, block)
-    for r in np.nonzero(~raw)[0]:
-        img = decode_image(bufs[r], int(ws[r]), int(hs[r]),
-                           str(fmts[r]))
-        fill(np.array([r]), img[None, ...])
-    out = pdf.drop(columns=["bytes"]).copy()
-    out["proj_total"] = total
-    out["proj_row_ssq"] = rssq
-    out["proj_col_ssq"] = cssq
-    out["com_y_num"] = comy
-    out["com_x_num"] = comx
-    return out
+    _each_image(pdf, fill)
+    return pdf.drop(columns=["bytes"]).assign(
+        proj_total=total, proj_row_ssq=rssq, proj_col_ssq=cssq,
+        com_y_num=comy, com_x_num=comx)
 
 
 def with_projection_stats(df: DataFrame) -> DataFrame:
     """Append projection-profile statistics (see
     :func:`_projection_frame`) and drop the payload — Arrow-batched
     ``mapInPandas``, integer arithmetic end to end."""
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != "bytes"]
-        + [T.StructField("proj_total", T.LongType()),
-           T.StructField("proj_row_ssq", T.LongType()),
-           T.StructField("proj_col_ssq", T.LongType()),
-           T.StructField("com_y_num", T.LongType()),
-           T.StructField("com_x_num", T.LongType())])
-
-    def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            yield _projection_frame(pdf)
-
-    return df.mapInPandas(run, out_schema)
+    return _map_images(
+        df, _projection_frame,
+        [T.StructField("proj_total", T.LongType()),
+         T.StructField("proj_row_ssq", T.LongType()),
+         T.StructField("proj_col_ssq", T.LongType()),
+         T.StructField("com_y_num", T.LongType()),
+         T.StructField("com_x_num", T.LongType())])
 
 
 def with_hist_cells(df: DataFrame, key_col: str = "okey") -> DataFrame:

@@ -205,7 +205,6 @@ class SparkHSICSelector:
          self.y_kind) = _kernel_routing(df, feature_cols, target_cols)
         self.target_cols = list(target_cols)
         self.df = df
-        self._paths: List[np.ndarray] = []
 
     # -- preprocessing ----------------------------------------------------
 

@@ -18,6 +18,7 @@ rule.
 """
 from __future__ import annotations
 
+import shutil
 import tempfile
 import uuid
 from typing import Dict, Sequence
@@ -77,18 +78,24 @@ def run_stream_to_batch(streaming_df: DataFrame,
     result as a batch DataFrame.  This is the bridge that lets the
     driver's oracle gate (and tests) compare a streaming query against
     an ANSI-SQL oracle: availableNow processes the full backlog then
-    stops, so 'complete' mode holds the final answer."""
+    stops, so 'complete' mode holds the final answer.  The query's
+    temporary checkpoint directory is removed when it ends."""
     spark = streaming_df.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    q = (streaming_df.writeStream
-         .format("memory")
-         .queryName(name)
-         .outputMode(output_mode)
-         .option("checkpointLocation",
-                 tempfile.mkdtemp(prefix="hiselspark_ckpt_"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    ckpt = tempfile.mkdtemp(prefix="hiselspark_ckpt_")
+    try:
+        q = (streaming_df.writeStream
+             .format("memory")
+             .queryName(name)
+             .outputMode(output_mode)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination()
+    finally:
+        # the memory sink holds the result; a checkpoint only serves a
+        # restart, and this query is never restarted
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 

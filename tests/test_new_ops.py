@@ -290,6 +290,29 @@ def test_stream_tumbling_equals_batch(spark, tmp_path):
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 
+def test_run_stream_to_batch_removes_checkpoint(spark, tmp_path,
+                                                monkeypatch):
+    """The drained query's checkpoint directory is removed; the returned
+    in-memory table keeps its rows."""
+    import tempfile
+    from hiselspark.streaming.sessions import (read_events_stream,
+                                               run_stream_to_batch,
+                                               stream_tumbling)
+
+    pdf, df = _timeline(spark, n_entities=3, n_rows=60, seed=43)
+    path = _write_stream_input(spark, pdf, tmp_path)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    stream = read_events_stream(spark, path, spark.read.parquet(path).schema)
+    out = run_stream_to_batch(
+        stream_tumbling(stream, "entity_id", "ts", {"val": ["count"]},
+                        window_seconds=3600))
+    assert list(tmp.glob("hiselspark_ckpt_*")) == []
+    exp = df.groupBy("entity_id", F.window("ts", "3600 seconds")).count()
+    assert out.count() == exp.count() > 0
+
+
 def test_stream_running_totals_across_batches(spark, tmp_path):
     """applyInPandasWithState keeps per-entity state across micro-
     batches: final cumulative row per entity == batch groupBy totals."""
