@@ -12,7 +12,7 @@ Two physical strategies, both shuffle-once:
 
 * :func:`asof_join` (default) — **union + running last**: tag both
   sides, union them, and compute ``last(value, ignoreNulls=True)`` over
-  a ``(entity)`` window ordered by ``(ts, side)``.  Pure built-in
+  a ``(entity)`` window in the match order.  Pure built-in
   operators: one hash shuffle on the entity key, whole-stage codegen,
   no Python in the hot path, and Catalyst/AQE handle partition
   coalescing.  This is the scale path — state per task is O(1) per
@@ -24,14 +24,135 @@ Two physical strategies, both shuffle-once:
   ``pd.merge_asof`` per entity group: Arrow-vectorized, useful when
   joining very many feature columns at once where the window variant
   would build one running-last state per column.
+
+One core serves :func:`asof_join` (backward, forward, nearest),
+:func:`asof_join_multi` and ``chunked.chunked_asof_join``:
+
+* :func:`_tag_sides` tags both sides as ``(__k, __t, __side, __v)``
+  plus the label passthrough columns (null on feature rows), where
+  ``__v`` packs the whole feature row (one struct per table in
+  :func:`asof_join_multi`);
+* :data:`_ORDER` is the match order ``(__t, __side, __v)``.  The side
+  rank decides whether an equal-timestamp feature row is visible
+  (non-strict) or not (strict); the packed value struct breaks ties
+  among feature rows on one ``(entity, ts)``: backward takes the
+  lexicographic-max value tuple, forward the -min.  The winner
+  therefore never depends on partition layout or shuffle arrival
+  order, and it is SQL-expressible for oracles (argmax by value within
+  ``(entity, ts)``, then a plain ASOF JOIN);
+* :func:`_in_tolerance` is the tolerance test (:func:`_drop_stale`
+  applies it to a matched struct), on the integer microsecond gap
+  (``windows.ts_micros``), so a match exactly ``tolerance_seconds``
+  away is kept whatever the timestamp;
+* :func:`_unpack` turns the matched struct ``__m`` into
+  ``{col}{suffix}`` columns and ``__matched_ts``.
+
+:func:`asof_join_cogrouped` stays independent: it is the pandas
+cross-check.
 """
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from functools import reduce
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from .windows import ts_micros
+
+_ORDER = ("__t", "__side", "__v")
+
+
+def _tag_sides(
+    labels: DataFrame,
+    sides: Dict[str, Tuple[DataFrame, Optional[Sequence[str]]]],
+    on: str,
+    left_ts: str,
+    right_ts: str,
+    features_first: bool,
+) -> Tuple[DataFrame, List[str], Dict[str, List[str]], int]:
+    """Labels and feature rows as one frame ``(__k, __t, __side,
+    *structs, *passthrough)``.
+
+    ``sides`` maps each struct column (``__v``, or one per table in
+    :func:`asof_join_multi`) to its feature frame and value columns
+    (None: all but ``on`` and ``right_ts``).  ``__side`` ranks feature
+    rows before labels at an equal ``ts`` when ``features_first``.
+    Matched values are row-atomic: the whole feature row rides in its
+    struct, so a running ``last(ignoreNulls)`` picks the latest feature
+    ROW — a null field inside the matched row stays null, exactly like
+    pandas ``merge_asof`` / DuckDB ``ASOF JOIN``.  A feature row holds
+    null in every other side's struct, and label columns ride through
+    the union (null on feature rows), so no join-back is needed.
+
+    Returns the union, the passthrough columns, each struct's value
+    columns and the label rows' side rank."""
+    feat_rank = 0 if features_first else 1
+    ltypes = {f.name: f.dataType for f in labels.schema.fields}
+    passthrough = [c for c in labels.columns if c not in (on, left_ts)]
+    vcols, packed = {}, {}
+    for v, (frame, cols) in sides.items():
+        vcols[v] = (list(cols) if cols is not None else
+                    [c for c in frame.columns if c not in (on, right_ts)])
+        packed[v] = frame.select(
+            F.col(on).alias("__k"), F.col(right_ts).alias("__t"),
+            F.struct(F.col(right_ts).alias("__mts"),
+                     *[F.col(c).alias(f"v_{c}") for c in vcols[v]]).alias(v))
+    nulls = {v: F.lit(None).cast(p.schema[v].dataType).alias(v)
+             for v, p in packed.items()}
+    tagged = [labels.select(
+        F.col(on).alias("__k"), F.col(left_ts).alias("__t"),
+        F.lit(1 - feat_rank).alias("__side"), *nulls.values(),
+        *passthrough)]
+    tagged += [p.select(
+        "__k", "__t", F.lit(feat_rank).alias("__side"),
+        *[F.col(u) if u == v else nulls[u] for u in packed],
+        *[F.lit(None).cast(ltypes[c]).alias(c) for c in passthrough])
+        for v, p in packed.items()]
+    return (reduce(DataFrame.unionByName, tagged), passthrough, vcols,
+            1 - feat_rank)
+
+
+def _match(backward: bool, *keys: str) -> Column:
+    """Each row's matched feature struct over ``keys``: the last
+    feature row at or before it in :data:`_ORDER` (backward), or the
+    first at or after it (forward)."""
+    w = Window.partitionBy(*keys).orderBy(*_ORDER)
+    if backward:
+        return F.last("__v", ignorenulls=True).over(
+            w.rowsBetween(Window.unboundedPreceding, 0))
+    return F.first("__v", ignorenulls=True).over(
+        w.rowsBetween(0, Window.unboundedFollowing))
+
+
+def _in_tolerance(gap_us: Column, tolerance_seconds: float) -> Column:
+    """The tolerance test on an integer-µs gap (null gap: no match)."""
+    return gap_us <= F.lit(int(tolerance_seconds * 1_000_000))
+
+
+def _drop_stale(filled: DataFrame, tolerance_seconds: Optional[float],
+                m: str = "__m", backward: bool = True) -> DataFrame:
+    """Null the matched struct ``m`` where it lies further than
+    ``tolerance_seconds`` from the label (no tolerance: keep all)."""
+    if tolerance_seconds is None:
+        return filled
+    gap = ts_micros("__t") - ts_micros(f"{m}.__mts")
+    ok = _in_tolerance(gap if backward else -gap, tolerance_seconds)
+    return filled.withColumn(m, F.when(ok, F.col(m)))
+
+
+def _unpack(filled: DataFrame, on: str, left_ts: str,
+            passthrough: Sequence[str], value_cols: Sequence[str],
+            suffix: str) -> DataFrame:
+    """Label rows with the matched struct ``__m`` unpacked."""
+    return filled.select(
+        F.col("__k").alias(on),
+        F.col("__t").alias(left_ts),
+        *passthrough,
+        *[F.col(f"__m.v_{c}").alias(f"{c}{suffix}") for c in value_cols],
+        F.col("__m.__mts").alias("__matched_ts"),
+    )
 
 
 def asof_join(
@@ -62,7 +183,7 @@ def asof_join(
     timestamp the value came from (null when no match — e.g. a label
     earlier than every feature row: zero temporal leakage by
     construction, since only rows ordered at-or-before the label in the
-    ``(ts, side)`` sort can ever be seen by the running window).
+    match order can ever be seen by the running window).
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unsupported direction={direction!r}")
@@ -71,92 +192,18 @@ def asof_join(
                                   right_ts, value_cols,
                                   tolerance_seconds, strict, suffix)
     backward = direction == "backward"
-    if value_cols is None:
-        value_cols = [c for c in features.columns if c not in (on, right_ts)]
-    value_cols = list(value_cols)
-
-    # side marker (backward): features sort before labels at equal ts so
-    # an equal-timestamp feature IS visible (<=); with strict=True labels
-    # sort first, so equal-timestamp features are NOT visible (<).
-    # forward mirrors this around the frame direction.
-    if backward:
-        feat_rank, label_rank = (0, 1) if not strict else (1, 0)
-    else:
-        feat_rank, label_rank = (1, 0) if not strict else (0, 1)
-
-    # label columns ride through the union (null on feature rows) so no
-    # join-back is needed — the whole operator is ONE shuffle on the
-    # entity key.
-    ltypes = {f.name: f.dataType for f in labels.schema.fields}
-    passthrough = [c for c in labels.columns if c not in (on, left_ts)]
-
-    # matched values are row-atomic: the whole feature row rides in one
-    # struct, and the running last(ignoreNulls) picks the latest feature
-    # ROW — a null field inside the matched row stays null, exactly like
-    # pandas merge_asof / DuckDB ASOF JOIN (a per-column last() would
-    # wrongly reach further back for null fields).
-    packed = F.struct(
-        F.col(right_ts).alias("__mts"),
-        *[F.col(c).alias(f"v_{c}") for c in value_cols])
-    f_tagged = features.select(
-        F.col(on).alias("__k"),
-        F.col(right_ts).alias("__t"),
-        F.lit(feat_rank).alias("__side"),
-        packed.alias("__v"),
-        *[F.lit(None).cast(ltypes[c]).alias(c) for c in passthrough],
-    )
-    null_struct = F.lit(None).cast(
-        f_tagged.schema["__v"].dataType)
-    l_tagged = labels.select(
-        F.col(on).alias("__k"),
-        F.col(left_ts).alias("__t"),
-        F.lit(label_rank).alias("__side"),
-        null_struct.alias("__v"),
-        *passthrough,
-    )
-    unioned = f_tagged.unionByName(l_tagged)
-
-    # backward: running last over the preceding frame; forward: the
-    # mirror image — first feature row in the following frame.  The
-    # packed value struct is the final sort key: among several feature
-    # rows at the SAME (entity, ts) the winner is the lexicographic-max
-    # (backward) / -min (forward) value tuple — deterministic across
-    # partition layouts (a bare (ts, side) order left the tie winner to
-    # partition order) and SQL-expressible for oracles (argmax by value
-    # within (entity, ts), then plain ASOF JOIN).
-    if backward:
-        w = (Window.partitionBy("__k")
-                   .orderBy(F.col("__t").asc(), F.col("__side").asc(),
-                            F.col("__v").asc())
-                   .rowsBetween(Window.unboundedPreceding, 0))
-        match = F.last("__v", ignorenulls=True).over(w)
-    else:
-        w = (Window.partitionBy("__k")
-                   .orderBy(F.col("__t").asc(), F.col("__side").asc(),
-                            F.col("__v").asc())
-                   .rowsBetween(0, Window.unboundedFollowing))
-        match = F.first("__v", ignorenulls=True).over(w)
+    # backward: features sort before labels at equal ts so an
+    # equal-timestamp feature IS visible (<=); strict puts labels
+    # first.  Forward mirrors this around the frame direction.
+    unioned, passthrough, vcols, label_rank = _tag_sides(
+        labels, {"__v": (features, value_cols)}, on, left_ts, right_ts,
+        features_first=backward != strict)
     filled = unioned.select(
         "__k", "__t", "__side", *passthrough,
-        match.alias("__m"),
+        _match(backward, "__k").alias("__m"),
     ).filter(F.col("__side") == label_rank)
-
-    if tolerance_seconds is not None:
-        gap = (F.col("__t").cast("timestamp").cast("double")
-               - F.col("__m.__mts").cast("timestamp").cast("double"))
-        if not backward:
-            gap = -gap
-        in_window = (F.col("__m").isNotNull()
-                     & (gap <= F.lit(float(tolerance_seconds))))
-        filled = filled.withColumn("__m", F.when(in_window, F.col("__m")))
-
-    return filled.select(
-        F.col("__k").alias(on),
-        F.col("__t").alias(left_ts),
-        *passthrough,
-        *[F.col(f"__m.v_{c}").alias(f"{c}{suffix}") for c in value_cols],
-        F.col("__m.__mts").alias("__matched_ts"),
-    )
+    filled = _drop_stale(filled, tolerance_seconds, backward=backward)
+    return _unpack(filled, on, left_ts, passthrough, vcols["__v"], suffix)
 
 
 def _asof_join_nearest(
@@ -183,73 +230,33 @@ def _asof_join_nearest(
     equal-ts features from the backward frame, and the forward match is
     additionally gated on ``gap > 0`` (the following frame does see
     equal-ts rows in that layout)."""
-    if value_cols is None:
-        value_cols = [c for c in features.columns if c not in (on, right_ts)]
-    value_cols = list(value_cols)
-    feat_rank, label_rank = (0, 1) if not strict else (1, 0)
-
-    ltypes = {f.name: f.dataType for f in labels.schema.fields}
-    passthrough = [c for c in labels.columns if c not in (on, left_ts)]
-    packed = F.struct(
-        F.col(right_ts).alias("__mts"),
-        *[F.col(c).alias(f"v_{c}") for c in value_cols])
-    f_tagged = features.select(
-        F.col(on).alias("__k"),
-        F.col(right_ts).alias("__t"),
-        F.lit(feat_rank).alias("__side"),
-        packed.alias("__v"),
-        *[F.lit(None).cast(ltypes[c]).alias(c) for c in passthrough],
-    )
-    null_struct = F.lit(None).cast(f_tagged.schema["__v"].dataType)
-    l_tagged = labels.select(
-        F.col(on).alias("__k"),
-        F.col(left_ts).alias("__t"),
-        F.lit(label_rank).alias("__side"),
-        null_struct.alias("__v"),
-        *passthrough,
-    )
-    unioned = f_tagged.unionByName(l_tagged)
-
-    order = [F.col("__t").asc(), F.col("__side").asc(), F.col("__v").asc()]
-    wb = (Window.partitionBy("__k").orderBy(*order)
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wf = (Window.partitionBy("__k").orderBy(*order)
-          .rowsBetween(0, Window.unboundedFollowing))
+    unioned, passthrough, vcols, label_rank = _tag_sides(
+        labels, {"__v": (features, value_cols)}, on, left_ts, right_ts,
+        features_first=not strict)
     cand = unioned.select(
         "__k", "__t", "__side", *passthrough,
-        F.last("__v", ignorenulls=True).over(wb).alias("__mb"),
-        F.first("__v", ignorenulls=True).over(wf).alias("__mf"),
+        _match(True, "__k").alias("__mb"),
+        _match(False, "__k").alias("__mf"),
     ).filter(F.col("__side") == label_rank)
 
-    def _us(c):
-        return (c.cast("timestamp").cast("double") * 1_000_000
-                ).cast("long")
-
-    t_us = _us(F.col("__t"))
-    gap_b = t_us - _us(F.col("__mb.__mts"))
-    gap_f = _us(F.col("__mf.__mts")) - t_us
+    t_us = ts_micros("__t")
+    gap_b = t_us - ts_micros("__mb.__mts")
+    gap_f = ts_micros("__mf.__mts") - t_us
     mb, mf = F.col("__mb"), F.col("__mf")
     if strict:
         mf = F.when(gap_f > 0, mf)
         gap_f = F.when(gap_f > 0, gap_f)
     if tolerance_seconds is not None:
-        tol_us = F.lit(int(tolerance_seconds * 1_000_000))
-        mb = F.when(gap_b <= tol_us, mb)
-        gap_b = F.when(gap_b <= tol_us, gap_b)
-        mf = F.when(gap_f <= tol_us, mf)
-        gap_f = F.when(gap_f <= tol_us, gap_f)
+        ok_b = _in_tolerance(gap_b, tolerance_seconds)
+        ok_f = _in_tolerance(gap_f, tolerance_seconds)
+        mb, gap_b = F.when(ok_b, mb), F.when(ok_b, gap_b)
+        mf, gap_f = F.when(ok_f, mf), F.when(ok_f, gap_f)
     pick_b = mb.isNotNull() & (mf.isNull() | (gap_b <= gap_f))
     chosen = cand.select(
         "__k", "__t", *passthrough,
         F.when(pick_b, mb).otherwise(mf).alias("__m"),
     )
-    return chosen.select(
-        F.col("__k").alias(on),
-        F.col("__t").alias(left_ts),
-        *passthrough,
-        *[F.col(f"__m.v_{c}").alias(f"{c}{suffix}") for c in value_cols],
-        F.col("__m.__mts").alias("__matched_ts"),
-    )
+    return _unpack(chosen, on, left_ts, passthrough, vcols["__v"], suffix)
 
 
 def asof_join_multi(
@@ -288,55 +295,10 @@ def asof_join_multi(
     (null = no match, zero temporal leakage by construction).
     """
     names = list(tables)
-    vmap = {
-        t: list(value_cols[t]) if value_cols and t in value_cols
-        else [c for c in tables[t].columns if c not in (on, right_ts)]
-        for t in names}
-    feat_rank, label_rank = (0, 1) if not strict else (1, 0)
-
-    ltypes = {f.name: f.dataType for f in labels.schema.fields}
-    passthrough = [c for c in labels.columns if c not in (on, left_ts)]
-
-    # one packed struct per table; a side's row carries its own struct
-    # and nulls for every other table's, so each running last() only
-    # ever sees its own table's rows.
-    def packed(t):
-        return F.struct(
-            F.col(right_ts).alias("__mts"),
-            *[F.col(c).alias(f"v_{c}") for c in vmap[t]])
-
-    tagged = []
-    struct_types = {}
-    for i, t in enumerate(names):
-        sel = tables[t].select(
-            F.col(on).alias("__k"),
-            F.col(right_ts).alias("__t"),
-            F.lit(feat_rank).alias("__side"),
-            packed(t).alias(f"__v_{t}"),
-        )
-        struct_types[t] = sel.schema[f"__v_{t}"].dataType
-        tagged.append(sel)
-    # fill in the other tables' null structs + null label passthrough
-    sides = []
-    for i, t in enumerate(names):
-        sides.append(tagged[i].select(
-            "__k", "__t", "__side",
-            *[F.col(f"__v_{u}") if u == t
-              else F.lit(None).cast(struct_types[u]).alias(f"__v_{u}")
-              for u in names],
-            *[F.lit(None).cast(ltypes[c]).alias(c) for c in passthrough],
-        ))
-    l_tagged = labels.select(
-        F.col(on).alias("__k"),
-        F.col(left_ts).alias("__t"),
-        F.lit(label_rank).alias("__side"),
-        *[F.lit(None).cast(struct_types[u]).alias(f"__v_{u}")
-          for u in names],
-        *passthrough,
-    )
-    unioned = l_tagged
-    for s in sides:
-        unioned = unioned.unionByName(s)
+    unioned, passthrough, vcols, label_rank = _tag_sides(
+        labels,
+        {f"__v_{t}": (tables[t], (value_cols or {}).get(t)) for t in names},
+        on, left_ts, right_ts, features_first=not strict)
 
     # ONE sort order shared by every aggregate: ties within table t are
     # broken by __v_t itself (all other tables' structs are equally
@@ -352,21 +314,16 @@ def asof_join_multi(
     ).filter(F.col("__side") == label_rank)
 
     for t in names:
-        tol = (tolerance_seconds or {}).get(t)
-        if tol is not None:
-            gap = (F.col("__t").cast("timestamp").cast("double")
-                   - F.col(f"__m_{t}.__mts").cast("timestamp")
-                      .cast("double"))
-            ok = F.col(f"__m_{t}").isNotNull() & (gap <= F.lit(float(tol)))
-            filled = filled.withColumn(
-                f"__m_{t}", F.when(ok, F.col(f"__m_{t}")))
+        filled = _drop_stale(filled, (tolerance_seconds or {}).get(t),
+                             f"__m_{t}")
 
     return filled.select(
         F.col("__k").alias(on),
         F.col("__t").alias(left_ts),
         *passthrough,
         *[c for t in names for c in
-          (*[F.col(f"__m_{t}.v_{v}").alias(f"{v}_{t}") for v in vmap[t]],
+          (*[F.col(f"__m_{t}.v_{v}").alias(f"{v}_{t}")
+             for v in vcols[f"__v_{t}"]],
            F.col(f"__m_{t}.__mts").alias(f"__matched_ts_{t}"))],
     )
 
@@ -476,11 +433,8 @@ def scd2_join(
     out = asof_join(facts, dim, on=on, left_ts=fact_ts,
                     right_ts=valid_from,
                     value_cols=value_cols + [valid_to])
-    ts_us = (F.col(fact_ts).cast("timestamp").cast("double")
-             * 1_000_000).cast("long")
-    to_us = (F.col(valid_to).cast("timestamp").cast("double")
-             * 1_000_000).cast("long")
-    covered = F.col(valid_to).isNull() | (ts_us < to_us)
+    covered = (F.col(valid_to).isNull()
+               | (ts_micros(fact_ts) < ts_micros(valid_to)))
     matched = F.col("__matched_ts").isNotNull() & covered
     for c in value_cols:
         out = out.withColumn(c, F.when(matched, F.col(c)))

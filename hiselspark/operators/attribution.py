@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .windows import ts_micros
+
 
 def touch_attribution(
     df: DataFrame,
@@ -40,8 +42,7 @@ def touch_attribution(
     microsecond gap conversion-minus-last-touch."""
     if horizon_seconds <= 0:
         raise ValueError("horizon_seconds must be positive")
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),
@@ -96,7 +97,7 @@ def u_shaped_attribution(
     them upstream via touch_attribution's NULL rows).  Returns one
     row per (conversion, touch): (entity, conv_order, conv_ts_us,
     touch_order, touch_ts_us, m_touches, pos, credit_pm)."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = ts_micros(ts_col)
     base = df.select(F.col(entity_col).alias("entity"),
                      us.alias("us"),
                      F.col(order_col).cast("long").alias("o"),

@@ -53,7 +53,10 @@ Exactness mechanisms, per operator:
   prefix-summed over buckets;
 * as-of join: the per-bucket last feature row is prefix-filled over
   buckets and joined on as a seed COLUMN (``coalesce(running_last,
-  seed)``) — no seed rows, no second shuffle.
+  seed)``) — no seed rows, no second shuffle.  Side tagging, the match
+  order ``(ts, side, value struct)``, the tolerance test and the
+  unpacking are ``asof.py``'s, so the running window and the seed
+  break ties on (entity, ts) the same way as ``asof_join``.
 
 The equality contract is asserted by tests/test_chunked.py against the
 plain operators on hot, sparse, and boundary-heavy inputs.
@@ -64,17 +67,12 @@ from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .windows import ts_seconds
+from .asof import _ORDER, _drop_stale, _match, _tag_sides, _unpack
+from .windows import ts_micros, ts_seconds
 
 _B = "__bucket"
 _CTX = "__ctx"
 _US = "__us"
-
-
-def _micros(ts_col) -> Column:
-    """Epoch microseconds as a long: the bucket's source and the range
-    windows' order key."""
-    return (ts_seconds(ts_col) * 1_000_000).cast("long")
 
 
 def _bucket(us: Column, bucket_seconds: float) -> Column:
@@ -82,7 +80,7 @@ def _bucket(us: Column, bucket_seconds: float) -> Column:
 
 
 def _bucket_of(ts_col, bucket_seconds: float) -> Column:
-    return _bucket(_micros(ts_col), bucket_seconds)
+    return _bucket(ts_micros(ts_col), bucket_seconds)
 
 
 def _cluster(df: DataFrame, entity_col: str) -> DataFrame:
@@ -232,7 +230,7 @@ def _clustered_with_context(df: DataFrame, entity_col: str, ts_col: str,
     Needs ``window_seconds <= bucket_seconds``."""
     if window_seconds > bucket_seconds:
         raise ValueError("rolling window must fit in one bucket")
-    keyed = df.withColumn(_US, _micros(ts_col))
+    keyed = df.withColumn(_US, ts_micros(ts_col))
     tagged = keyed.withColumn(_B, _bucket(F.col(_US), bucket_seconds))
     return _cluster(_overlap_context(tagged, bucket_seconds, window_seconds),
                     entity_col)
@@ -385,43 +383,24 @@ def chunked_asof_join(
     """Exact twin of ``asof.asof_join`` (backward) clustered by
     (entity, time-bucket): ONE shuffle of the unioned sides.  The
     unbounded backward lookback is restored by a per-bucket seed — the
-    prefix-filled last feature row of all earlier buckets — broadcast-
-    joined as a COLUMN and coalesced under the running last."""
-    if value_cols is None:
-        value_cols = [c for c in features.columns if c not in (on, right_ts)]
-    value_cols = list(value_cols)
-    feat_rank, label_rank = (0, 1) if not strict else (1, 0)
+    prefix-filled last feature row of all earlier buckets — joined on
+    the clustering keys as a COLUMN and coalesced under the running
+    last.  The side tagging, the match order (running window and seed
+    alike), the tolerance test and the unpacking are ``asof_join``'s
+    own (``asof._tag_sides``, ``_ORDER``, ``_drop_stale``, ``_unpack``),
+    so the twin holds on feature rows tied on (entity, ts) too, on any
+    input layout."""
+    unioned, passthrough, vcols, label_rank = _tag_sides(
+        labels, {"__v": (features, value_cols)}, on, left_ts, right_ts,
+        features_first=not strict)
+    clustered = _cluster(
+        unioned.withColumn(_B, _bucket_of("__t", bucket_seconds)), "__k")
 
-    ltypes = {f.name: f.dataType for f in labels.schema.fields}
-    passthrough = [c for c in labels.columns if c not in (on, left_ts)]
-
-    packed = F.struct(
-        F.col(right_ts).alias("__mts"),
-        *[F.col(c).alias(f"v_{c}") for c in value_cols])
-    f_tagged = features.select(
-        F.col(on).alias("__k"),
-        F.col(right_ts).alias("__t"),
-        F.lit(feat_rank).alias("__side"),
-        packed.alias("__v"),
-        *[F.lit(None).cast(ltypes[c]).alias(c) for c in passthrough],
-    )
-    null_struct = F.lit(None).cast(f_tagged.schema["__v"].dataType)
-    l_tagged = labels.select(
-        F.col(on).alias("__k"),
-        F.col(left_ts).alias("__t"),
-        F.lit(label_rank).alias("__side"),
-        null_struct.alias("__v"),
-        *passthrough,
-    )
-    unioned = (f_tagged.unionByName(l_tagged)
-               .withColumn(_B, _bucket_of("__t", bucket_seconds)))
-    clustered = _cluster(unioned, "__k")
-
-    # per-bucket last feature struct ("last" in (t, side) order — the
-    # same order the running window uses).  ONE aggregation pass over
-    # the clustered frame covers every bucket: max_by ignores rows with
-    # a null ordering key, so label-only buckets yield a null __last_v
-    # (an earlier two-pass version — feature-row agg + distinct + join —
+    # per-bucket last feature struct in the match order — the order the
+    # running window uses.  ONE aggregation pass over the clustered
+    # frame covers every bucket: max_by ignores rows with a null
+    # ordering key, so label-only buckets yield a null __last_v (an
+    # earlier two-pass version — feature-row agg + distinct + join —
     # plus an explicit broadcast of the seeds cost 11s of the stage
     # wall at 500k rows, and a broadcast of a per-(entity, bucket)
     # table is wrong at corpus scale anyway; the groupBy and the join
@@ -430,11 +409,9 @@ def chunked_asof_join(
     w_b = Window.partitionBy("__k").orderBy(_B)
     seeds = (clustered
              .groupBy("__k", _B)
-             .agg(F.max_by(
-                 "__v",
-                 F.when(F.col("__v").isNotNull(),
-                        F.struct(F.col("__t"), F.col("__side"))))
-                 .alias("__last_v"))
+             .agg(F.max_by("__v", F.when(F.col("__v").isNotNull(),
+                                         F.struct(*_ORDER)))
+                  .alias("__last_v"))
              .withColumn("__seed_v",
                          F.last("__last_v", ignorenulls=True).over(
                              w_b.rowsBetween(Window.unboundedPreceding, -1)))
@@ -442,29 +419,12 @@ def chunked_asof_join(
              .select("__k", _B, "__seed_v"))
 
     with_seed = clustered.join(seeds, ["__k", _B], "left")
-    w = (Window.partitionBy("__k", _B)
-               .orderBy(F.col("__t").asc(), F.col("__side").asc())
-               .rowsBetween(Window.unboundedPreceding, 0))
     filled = with_seed.select(
         "__k", "__t", "__side", *passthrough,
-        F.coalesce(F.last("__v", ignorenulls=True).over(w),
-                   F.col("__seed_v")).alias("__m"),
+        F.coalesce(_match(True, "__k", _B), F.col("__seed_v")).alias("__m"),
     ).filter(F.col("__side") == label_rank)
-
-    if tolerance_seconds is not None:
-        gap = (F.col("__t").cast("timestamp").cast("double")
-               - F.col("__m.__mts").cast("timestamp").cast("double"))
-        in_window = (F.col("__m").isNotNull()
-                     & (gap <= F.lit(float(tolerance_seconds))))
-        filled = filled.withColumn("__m", F.when(in_window, F.col("__m")))
-
-    return filled.select(
-        F.col("__k").alias(on),
-        F.col("__t").alias(left_ts),
-        *passthrough,
-        *[F.col(f"__m.v_{c}").alias(f"{c}{suffix}") for c in value_cols],
-        F.col("__m.__mts").alias("__matched_ts"),
-    )
+    filled = _drop_stale(filled, tolerance_seconds)
+    return _unpack(filled, on, left_ts, passthrough, vcols["__v"], suffix)
 
 
 def chunked_rolling_corr(

@@ -24,7 +24,7 @@ the category key, no self-join, no per-fold passes:
   category (frequency encoding, as-of the row's own timestamp).
 
 The strictly-before set is expressed as a RANGE frame ending one
-microsecond before the current row (``unix_micros`` ordering), which
+microsecond before the current row (``windows.ts_micros`` ordering), which
 is exactly DuckDB's ``RANGE BETWEEN UNBOUNDED PRECEDING AND 1
 PRECEDING`` over the same integer — the driver-gate oracle replays it
 verbatim; sums stay exact by quantizing the target to integer units
@@ -35,6 +35,8 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from .windows import ts_micros
 
 
 def hash_bucket(col, n_buckets: int, salt: int = 0) -> Column:
@@ -50,13 +52,8 @@ def hash_bucket(col, n_buckets: int, salt: int = 0) -> Column:
     return (content_hash(col, salt) % F.lit(int(n_buckets))).cast("long")
 
 
-def _micros(ts_col: str) -> Column:
-    # via TIMESTAMP to handle TIMESTAMP_NTZ parquet loads (UTC session)
-    return F.unix_micros(F.col(ts_col).cast("timestamp"))
-
-
 def _before_frame(category_col: str, ts_col: str):
-    return (Window.partitionBy(category_col).orderBy(_micros(ts_col))
+    return (Window.partitionBy(category_col).orderBy(ts_micros(ts_col))
             .rangeBetween(Window.unboundedPreceding, -1))
 
 
@@ -136,7 +133,7 @@ def _chunked_before_stats(
         tagged = tagged.withColumn("__v2", v * v)
     clustered = _cluster(tagged, category_col)
 
-    wl = (Window.partitionBy(category_col, _B).orderBy(_micros(ts_col))
+    wl = (Window.partitionBy(category_col, _B).orderBy(ts_micros(ts_col))
           .rangeBetween(Window.unboundedPreceding, -1))
     local = (clustered
              .withColumn("__ln", F.count(F.lit(1)).over(wl))
@@ -509,7 +506,7 @@ def embedding_profile_pit(
         F.col(order_col).alias("_o"),
         F.posexplode(F.col(vec_col)).alias("_dim", "_v"))
     w = (Window.partitionBy("_e", "_dim")
-         .orderBy(_micros("_ts"), F.col("_o"))
+         .orderBy(ts_micros("_ts"), F.col("_o"))
          .rowsBetween(Window.unboundedPreceding, -1))
     ex = (ex.withColumn("_s", F.sum(F.col("_v").cast("double")).over(w))
             .withColumn("_c", F.count("_v").over(w)))

@@ -25,6 +25,8 @@ from typing import Dict, List, Tuple
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .windows import ts_micros
+
 
 def train_hmm_counts(train: DataFrame, entity_col: str, ts_col: str,
                      order_col: str, state_col: str, obs_col: str,
@@ -37,7 +39,7 @@ def train_hmm_counts(train: DataFrame, entity_col: str, ts_col: str,
     counts, recomputable by any engine).  Observation symbols must be
     integers in [0, n_obs).  One window + three count shuffles."""
     w = Window.partitionBy(entity_col).orderBy(
-        F.unix_micros(F.col(ts_col).cast("timestamp")),
+        ts_micros(ts_col),
         F.col(order_col))
     seq = train.select(
         F.col(entity_col).alias("e"),
@@ -103,8 +105,7 @@ def viterbi_decode(train: DataFrame, score: DataFrame,
     k = len(states)
     seq = (score.select(
         F.col(entity_col).alias("entity"),
-        F.unix_micros(F.col(ts_col).cast("timestamp"))
-        .cast("long").alias("__t"),
+        ts_micros(ts_col).alias("__t"),
         F.col(order_col).cast("long").alias("__o"),
         F.col(obs_col).cast("long").alias("obs"))
         .groupBy("entity")
@@ -227,7 +228,7 @@ def seq_pair_support(
     rows resolve by the order tiebreaker (documented).  Returns one
     row per ordered pair with n_both > 0: (state_a, state_b, n_both,
     n_a_first, support)."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = ts_micros(ts_col)
     firsts = (df.select(F.col(entity_col).alias("e"),
                         F.col(state_col).alias("s"),
                         us.alias("us"),

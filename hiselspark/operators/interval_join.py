@@ -24,7 +24,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from .windows import ts_seconds
+from .windows import ts_micros
 
 
 def interval_join(
@@ -59,8 +59,8 @@ def interval_join(
         value_cols = [c for c in right.columns if c not in (on, right_ts)]
     value_cols = list(value_cols)
 
-    lus = (ts_seconds(left_ts) * 1_000_000).cast("long")
-    rus = (ts_seconds(right_ts) * 1_000_000).cast("long")
+    lus = ts_micros(left_ts)
+    rus = ts_micros(right_ts)
 
     l_tag = left.withColumn("__lus", lus)
     if how == "left":

@@ -34,7 +34,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .windows import entity_window, ts_seconds
+from .windows import entity_window, ts_micros, ts_seconds
 
 
 def triple_barrier(
@@ -58,7 +58,7 @@ def triple_barrier(
     horizon extends past the entity's last observation still label 0 —
     interpret trailing labels with the same care as any
     right-censored target (the purged split embargoes them)."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     h_us = int(horizon_seconds * 1_000_000)
     w = (Window.partitionBy(entity_col).orderBy(us)
                .rangeBetween(1, h_us))
@@ -122,7 +122,6 @@ def rfm_features(df: DataFrame, entity_col: str, ts_col: str,
     """
     from .encoding import quantile_bin
     cut = F.lit(cutoff_ts).cast("timestamp")
-    cut_us = F.unix_micros(cut)
     pre = df.filter(F.col(ts_col).cast("timestamp") < cut)
     agg = pre.groupBy(F.col(entity_col).alias("entity")).agg(
         F.expr(f"(unix_micros(CAST('{cutoff_ts}' AS TIMESTAMP))"
@@ -164,7 +163,7 @@ def horizon_label(
     microsecond arithmetic on one entity-clustered WindowExec pair
     (future-min + entity-max share the clustering).
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = ts_micros(ts_col)
     h_us = int(horizon_seconds * 1_000_000)
     order = [us] + [F.col(c) for c in tiebreak]
     w_future = (Window.partitionBy(entity_col).orderBy(*order)

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .windows import ts_micros
+
 
 def group_ols(df: DataFrame, group_col: str, x_col: str,
               y_col: str) -> DataFrame:
@@ -85,7 +87,7 @@ def pit_expanding_ols(
     where prediction = intercept + slope·x (the PIT forecast for the
     current row, to difference against the realized value).
     """
-    t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    t_us = ts_micros(ts_col)
     base = df.select(
         F.col(entity_col).alias("entity"),
         t_us.cast("long").alias("__us"),

@@ -29,6 +29,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from .asof import asof_join
+from .windows import ts_micros
 
 
 def time_grid(
@@ -108,9 +109,8 @@ def resample_interp(
                      suffix="_next", direction="forward")
     both = both.withColumnRenamed("__matched_ts", "__t_next")
 
-    us = lambda c: (F.col(c).cast("timestamp").cast("double")  # noqa: E731
-                    * 1_000_000).cast("long")
-    t, t0, t1 = us(grid_ts_col), us("__t_prev"), us("__t_next")
+    t, t0, t1 = (ts_micros(grid_ts_col), ts_micros("__t_prev"),
+                 ts_micros("__t_next"))
     v0 = F.col(f"{value_col}_prev").cast("double")
     v1 = F.col(f"{value_col}_next").cast("double")
     interp = (
@@ -186,7 +186,7 @@ def ohlc_bars(
     from .windows import ts_seconds
 
     bar_us = int(bar_seconds) * 1_000_000
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     d = df.withColumn("__us", us).withColumn(
         "__bar", F.floor(F.col("__us") / bar_us).cast("long"))
     asc = [F.col("__us").asc()] + [F.col(c).asc() for c in tiebreak]

@@ -29,6 +29,7 @@ from typing import Sequence, Tuple
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .dedup import normalize_text
+from .windows import ts_micros
 
 _MOD = 2_147_483_647  # 2^31 - 1; keeps acc*31 + codepoint < 2^36 in int64
 
@@ -120,10 +121,8 @@ def purged_time_split(
     partitioning); comparisons are microsecond-integer arithmetic so
     any engine reproduces the assignment exactly.
     """
-    us = (F.col(ts_col).cast("timestamp").cast("double")
-          * 1_000_000).cast("long")
-    cut = (F.lit(cutoff_ts).cast("timestamp").cast("double")
-           * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
+    cut = ts_micros(F.lit(cutoff_ts))
     horizon = F.lit(int(label_horizon_seconds * 1_000_000))
     embargo = F.lit(int(embargo_seconds * 1_000_000))
     label = (

@@ -37,14 +37,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .windows import ts_micros
+
 
 def _trailing(df: DataFrame, entity_col: str, ts_col: str,
               order_col: str, value_col: str, last_k: int) -> DataFrame:
     """Trailing ``last_k`` rows per entity as ONE sorted struct array
     ``z`` of (t seconds, o tiebreak, v long) — time-ascending, total
     order (t, o)."""
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),
@@ -193,8 +194,7 @@ def changepoint_mean(
     per-row candidate scores, and a groupBy argmax via struct max.
     No self-joins, no collection.
     """
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),

@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .windows import ts_micros
+
 
 def ts_profile(
     df: DataFrame,
@@ -44,8 +46,7 @@ def ts_profile(
     """One row per entity with the catalogue features above.  Series
     order is (``ts_col``, ``order_col``) — the tiebreaker makes every
     lag/lead and index engine-reproducible."""
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),
@@ -144,8 +145,7 @@ def sax_symbols(
     """
     if n_segments < 1:
         raise ValueError("n_segments must be >= 1")
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),
@@ -215,8 +215,7 @@ def seasonality_strength(
     """
     base = df.select(
         F.col(entity_col).alias("entity"),
-        F.unix_micros(F.col(ts_col).cast("timestamp"))
-        .cast("long").alias("epoch_us"),
+        ts_micros(ts_col).alias("epoch_us"),
         F.col(value_col).cast("long").alias("v"))
     base = base.withColumn("phase", F.expr(phase_expr))
     per = (base.groupBy("entity", "phase").agg(
@@ -276,8 +275,7 @@ def autocorrelation(
     groupBy(entity).  r_k is NULL when n ≤ k or the series is
     constant.  Returns (entity, n, r_<k>...).
     """
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),
@@ -350,8 +348,7 @@ def hampel_filter(
     2·half_window+1 values per row (bounded).  Returns the input keys
     plus (v, med2, mad2d, is_outlier).
     """
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),
@@ -413,8 +410,7 @@ def holt_linear(
     same contract as every per-series rank/recursion operator here).
     Returns (entity, n, level, trend, forecast_1).
     """
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),
@@ -474,8 +470,7 @@ def haar_energy(
     """
     if levels < 1 or levels > 10:
         raise ValueError("levels must be in [1, 10]")
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),
@@ -547,8 +542,7 @@ def classical_decompose(
     (subset-cluster-keys rule).  Returns the keys plus
     (v, seasonal, trend, resid).
     """
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),
@@ -1283,8 +1277,7 @@ def holt_winters_additive(
     m = int(period)
     if m < 2:
         raise ValueError(f"need period >= 2, got {m}")
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"),

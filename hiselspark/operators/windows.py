@@ -31,6 +31,22 @@ def ts_seconds(col) -> Column:
     return c.cast("timestamp").cast("double")
 
 
+def ts_micros(col) -> Column:
+    """Timestamp -> epoch microseconds as a long: THE order key of the
+    point-in-time operators (range windows, buckets, tolerance gaps).
+
+    ``unix_micros`` reads the timestamp's own µs count, so the key is
+    exact.  The double route ``(ts_seconds(c) * 1e6).cast(long)`` is
+    not: the epoch-seconds double cannot hold every µs fraction, and
+    the truncating cast returned the key one µs low for about a quarter
+    of µs-fraction timestamps in 2004–2005 (and ~1% elsewhere before
+    2007), moving rows across a closed range-window or tolerance edge.
+    TIMESTAMP_NTZ goes through TIMESTAMP first, as in
+    :func:`ts_seconds`."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.unix_micros(c.cast("timestamp"))
+
+
 def with_lags(
     df: DataFrame,
     entity_col: str,
@@ -154,7 +170,7 @@ def rolling_aggregates(
     """
     upper = 0 if include_current else -1  # microseconds
     w = (Window.partitionBy(entity_col)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
+               .orderBy(ts_micros(ts_col))
                .rangeBetween(-int(window_seconds * 1_000_000), upper))
     fns = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
            "count": F.count, "std": F.stddev_samp}
@@ -192,7 +208,7 @@ def rolling_corr(
     when fewer than 2 rows or either variance is zero.
     """
     w = (Window.partitionBy(entity_col)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
+               .orderBy(ts_micros(ts_col))
                .rangeBetween(-int(window_seconds * 1_000_000), 0))
     x, y = F.col(xcol), F.col(ycol)
     n = F.count(F.lit(1)).over(w)
@@ -233,10 +249,10 @@ def rolling_slope(
     reproducibility.  NULL when fewer than 2 rows or zero time
     variance (all rows in the same second)."""
     wfull = (Window.partitionBy(entity_col)
-             .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
+             .orderBy(ts_micros(ts_col))
              .rangeBetween(Window.unboundedPreceding,
                            Window.unboundedFollowing))
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     t0 = F.min(us).over(wfull)
     t = ((us - t0) / 1_000_000).cast("long")  # whole relative seconds
     w = (Window.partitionBy(entity_col)
@@ -275,7 +291,7 @@ def time_since_event(
     same-microsecond rows see each other in (ts, id) order.  The
     microsecond difference is exact int64 arithmetic; seconds come from
     one IEEE division by 1e6, identical in any engine."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col).orderBy(us, F.col(id_col))
          .rowsBetween(Window.unboundedPreceding, -1))
     last_us = F.max(F.when(cond, us)).over(w)
@@ -304,7 +320,7 @@ def horizon_lag(
     is lexicographic in both Spark and DuckDB).  NULL when the entity
     has no observation that old."""
     out_col = out_col or f"{col}_h{int(horizon_seconds)}s"
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col).orderBy(us)
          .rangeBetween(Window.unboundedPreceding,
                        -int(horizon_seconds * 1_000_000)))
@@ -343,7 +359,7 @@ def rolling_moments(
     (``m2^1.5`` is spelled ``m2·sqrt(m2)`` because ``pow`` is not
     correctly rounded in every libm, ``sqrt`` is.)  NULL when n < 2 or
     the window has zero variance."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col)
                .orderBy(us)
                .rangeBetween(-int(window_seconds * 1_000_000), 0))
@@ -391,7 +407,7 @@ def funnel_steps(
     window over the previous step's output — same partition and sort,
     so Catalyst stacks them without re-shuffling — and the final
     per-entity aggregation reuses the clustering."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col)
          .orderBy(us, F.col(id_col))
          .rowsBetween(Window.unboundedPreceding, 0))
@@ -444,7 +460,7 @@ def rolling_distinct(
     kernel twin is ``chunked.chunked_rolling_distinct`` (same oracle).
     """
     win = int(window_seconds * 1_000_000)
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     wv = (Window.partitionBy(entity_col, col)
           .orderBy(us, F.col(id_col)))
     base = (df.withColumn("__us", us)
@@ -508,7 +524,7 @@ def rolling_twap(
     not clipped integration — documented, exact, cross-engine).  NULL
     when the window holds no completed segment.  Ties at the same
     microsecond get zero duration via the ``(us, id)`` lead order."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     wl = Window.partitionBy(entity_col).orderBy(us, F.col(id_col))
     dur = F.lead(us, 1).over(wl) - us
     w = (Window.partitionBy(entity_col)
@@ -654,7 +670,7 @@ def rolling_quantile(
     clustering with the rest of the stack."""
     out_col = out_col or f"{col}_roll_q{q:g}"
     w = (Window.partitionBy(entity_col)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
+               .orderBy(ts_micros(ts_col))
                .rangeBetween(-int(window_seconds * 1_000_000), 0))
     return df.withColumn(out_col,
                          F.percentile(col, F.lit(float(q))).over(w))
@@ -690,7 +706,7 @@ def rolling_mad(
     frame shares the single entity clustering with the rest of the
     stack."""
     w = (Window.partitionBy(entity_col)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
+               .orderBy(ts_micros(ts_col))
                .rangeBetween(-int(window_seconds * 1_000_000), 0))
     arr = F.array_sort(F.collect_list(F.col(col).cast("double")).over(w))
 
@@ -734,7 +750,7 @@ def rolling_rank(
     ``len(list_filter(l, v -> v <= x)) / len(l)``)."""
     out_col = out_col or f"{col}_roll_rank"
     w = (Window.partitionBy(entity_col)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
+               .orderBy(ts_micros(ts_col))
                .rangeBetween(-int(window_seconds * 1_000_000), 0))
     arr = F.collect_list(F.col(col)).over(w)
     cur = F.col(col)
@@ -838,7 +854,7 @@ def seasonal_baseline(
     the identical timestamp are mutually invisible.  One shuffle on
     ``(entity, phase)``; exact integer sums/counts.  First occurrence
     of a phase has no baseline (NULL), by design."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     d = df.withColumn("__us", us).withColumn(
         "__phase",
         F.pmod(F.floor(F.col("__us") / 3_600_000_000), period_hours)
@@ -872,7 +888,7 @@ def expanding_ols_resid(
     exact, one entity shuffle shared with the rest of the window
     stack; quantize ``x_col``/``y_col`` upstream (hours, cents) and
     keep Σx², Σxy within 2^53 for cross-engine bit-equality."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col).orderBy(us)
                .rangeBetween(Window.unboundedPreceding, -1))
     x = F.col(x_col)
@@ -935,7 +951,7 @@ def rolling_entropy(
         categories = probe
     categories = sorted(categories)
     w = (Window.partitionBy(entity_col)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
+               .orderBy(ts_micros(ts_col))
                .rangeBetween(-int(window_seconds * 1_000_000), 0))
     n = F.count(F.lit(1)).over(w)
     ent = None
@@ -978,7 +994,7 @@ def winsorize_pit(
     out_col = out_col or f"{col}_wins"
     upper = -1 if strict else 0  # microseconds
     w = (Window.partitionBy(entity_col)
-               .orderBy((ts_seconds(ts_col) * 1_000_000).cast("long"))
+               .orderBy(ts_micros(ts_col))
                .rangeBetween(Window.unboundedPreceding, upper))
     lo = F.percentile(col, F.lit(float(lower_q))).over(w)
     hi = F.percentile(col, F.lit(float(upper_q))).over(w)
@@ -1128,7 +1144,7 @@ def with_inter_arrival(
     burstiness/arrival-rate signals.  One lag over the shared entity
     clustering; microsecond-exact arithmetic."""
     w = entity_window(entity_col, ts_col, *tie_cols)
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     prev = F.lag(us).over(w)
     return df.withColumn(
         out_col,
@@ -1186,7 +1202,7 @@ def session_paths(
     rows = distinct paths (bounded by statesᵐᵃˣ; realistically tiny);
     counts exact."""
     s = sessionize(df, entity_col, ts_col, gap_seconds)
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     key = F.struct(us.alias("us"),
                    *[F.col(c).alias(f"t{i}")
                      for i, c in enumerate(tiebreak)],
@@ -1261,8 +1277,7 @@ def sessionize_capped(
     """
     gap_us = int(gap_seconds * 1_000_000)
     cap_us = int(cap_seconds * 1_000_000)
-    t = (F.unix_micros(F.col(ts_col).cast("timestamp"))
-         .cast("long").alias("__t"))
+    t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
         F.col(order_col).cast("long").alias("__o"))
@@ -1340,7 +1355,7 @@ def decayed_count(
     if halflife_seconds <= 0:
         raise ValueError(f"halflife_seconds must be > 0, got "
                          f"{halflife_seconds}")
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = ts_micros(ts_col)
     horizon = int(40 * halflife_seconds * 1_000_000)
     w = (Window.partitionBy(entity_col).orderBy(us)
                .rangeBetween(-horizon, -1))
@@ -1381,7 +1396,7 @@ def rolling_vwap(
     under 2⁶³); the division is the one mirrored float op.  NULL when
     the window's volume is zero.  One entity exchange, two range
     windows on the shared clustering."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col)
                .orderBy(us)
                .rangeBetween(-int(window_seconds * 1_000_000), 0))
@@ -1421,7 +1436,7 @@ def bollinger_bands(
     hour-scale windows stay far inside int64; re-quantize for wider
     windows (documented)."""
     k = int(n_sigmas)
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col)
                .orderBy(us)
                .rangeBetween(-int(window_seconds * 1_000_000), 0))
@@ -1469,7 +1484,7 @@ def rolling_rsi(
     window containing the LATER observation.  NULL when the window
     has no nonzero move.  Adds ``out_col`` plus exact ``rsi_gain`` /
     ``rsi_loss`` sums."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     wl = Window.partitionBy(entity_col).orderBy(us, F.col(id_col))
     x = F.col(col).cast("long")
     diff = x - F.lag(x).over(wl)
@@ -1518,7 +1533,7 @@ def event_study(
     timeline (range-bounded, entity-keyed — never a cross join) +
     one tiny groupBy over 2·n_buckets+1 buckets.  Returns one row
     per bucket: (bucket, n, sum_v, mean_v, abnormal)."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     bus = int(bucket_seconds * 1_000_000)
     span = int(n_buckets) * bus
     v = F.col(value_col).cast("long")
@@ -1579,7 +1594,7 @@ def growth_accounting(
     table (one shuffle), counts exact int64.  Returns one row per
     period: (period, n_active, n_new, n_retained, n_resurrected,
     n_churned)."""
-    us = (ts_seconds(ts_col) * 1_000_000).cast("long")
+    us = ts_micros(ts_col)
     pus = int(period_seconds * 1_000_000)
     per = (df.select(F.col(entity_col).alias("__e"),
                      us.alias("__us"))
@@ -1645,7 +1660,7 @@ def cusumsq(
     division.  One entity-keyed window + one aggregate.  Entities
     with totsq = 0 yield NULL stat.  Returns one row per entity:
     (entity, n, k_at_max, cusumsq)."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = ts_micros(ts_col)
     base = df.select(F.col(entity_col).alias("entity"),
                      us.alias("us"),
                      F.col(order_col).cast("long").alias("o"),

@@ -217,3 +217,58 @@ def test_chunked_rolling_quantile_equals_plain(spark):
                .select("event_id", "m").toPandas()
                .sort_values("event_id").reset_index(drop=True))
     pd.testing.assert_frame_equal(plain, chunked)
+
+
+@pytest.fixture(scope="module")
+def tied(spark):
+    """Labels plus feature rows tied on (entity, ts): three rows with
+    different values at every feature timestamp, spread over many
+    buckets so a label's match often comes from an earlier bucket's
+    seed.  Some label timestamps equal a feature timestamp (strict and
+    non-strict differ there)."""
+    rng = np.random.default_rng(41)
+    feats, labels = [], []
+    for e in range(6):
+        offs = np.sort(rng.choice(2 * 86400, size=40, replace=False))
+        for off in offs:
+            for _ in range(3):
+                fw = None if rng.random() < 0.2 else int(rng.integers(0, 5))
+                feats.append((f"e{e}", int(off),
+                              round(float(rng.normal()), 3), fw))
+        for i in range(50):
+            off = (int(rng.choice(offs)) if i % 3 == 0
+                   else int(rng.integers(0, 2 * 86400)))
+            labels.append((f"e{e}", off, len(labels)))
+    base = pd.Timestamp("2024-05-01")
+    fp = pd.DataFrame(feats, columns=["entity_id", "off", "fv", "fw"])
+    fp["ts"] = base + pd.to_timedelta(fp["off"], unit="s")
+    fp["fw"] = fp["fw"].astype("Int64")
+    lp = pd.DataFrame(labels, columns=["entity_id", "off", "rid"])
+    lp["ts"] = base + pd.to_timedelta(lp["off"], unit="s")
+    f = spark.createDataFrame(fp.drop(columns=["off"])).persist()
+    lab = spark.createDataFrame(lp.drop(columns=["off"])).persist()
+    f.count(), lab.count()
+    yield lab, f
+    f.unpersist(), lab.unpersist()
+
+
+@pytest.mark.parametrize("strict,tol", [(False, None), (True, None),
+                                        (False, 1800.0)])
+def test_chunked_asof_ties_equal_plain_on_any_layout(spark, tied, strict,
+                                                     tol):
+    """Several feature rows on one (entity, ts): the chunked join picks
+    the same row as ``asof_join`` (the value struct breaks the tie),
+    whatever the input partitioning."""
+    from hiselspark.operators.asof import asof_join
+    from hiselspark.operators.chunked import chunked_asof_join
+
+    labels, feats = tied
+    kw = dict(on="entity_id", left_ts="ts", right_ts="ts",
+              value_cols=["fv", "fw"], strict=strict, tolerance_seconds=tol)
+    cols = ["rid", "fv", "fw", "__matched_ts"]
+    plain = _collect(asof_join(labels, feats, **kw))[cols]
+    assert plain["fv"].notna().sum() > 100
+    for n in (1, 3, 7):
+        chunk = chunked_asof_join(labels, feats.repartition(n),
+                                  bucket_seconds=BUCKET, **kw)
+        pd.testing.assert_frame_equal(_collect(chunk)[cols], plain)
