@@ -59,7 +59,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .windows import ts_micros
+from .windows import seconds_to_micros, ts_micros
 
 _ORDER = ("__t", "__side", "__v")
 
@@ -128,7 +128,7 @@ def _match(backward: bool, *keys: str) -> Column:
 
 def _in_tolerance(gap_us: Column, tolerance_seconds: float) -> Column:
     """The tolerance test on an integer-µs gap (null gap: no match)."""
-    return gap_us <= F.lit(int(tolerance_seconds * 1_000_000))
+    return gap_us <= F.lit(seconds_to_micros(tolerance_seconds))
 
 
 def _drop_stale(filled: DataFrame, tolerance_seconds: Optional[float],

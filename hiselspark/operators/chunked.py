@@ -68,7 +68,7 @@ from typing import Dict, List, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .asof import _ORDER, _drop_stale, _match, _tag_sides, _unpack
-from .windows import ts_micros, ts_seconds
+from .windows import seconds_to_micros, ts_micros, ts_seconds
 
 _B = "__bucket"
 _CTX = "__ctx"
@@ -76,7 +76,7 @@ _US = "__us"
 
 
 def _bucket(us: Column, bucket_seconds: float) -> Column:
-    return F.floor(us / F.lit(int(bucket_seconds * 1_000_000)))
+    return F.floor(us / F.lit(seconds_to_micros(bucket_seconds)))
 
 
 def _bucket_of(ts_col, bucket_seconds: float) -> Column:
@@ -212,9 +212,9 @@ def _overlap_context(tagged: DataFrame, bucket_seconds: float,
     Single-scan form: each tail-window row ``explode``s into itself
     plus its next-bucket context copy, so this step reads its input
     once (an earlier two-branch union scanned it twice)."""
-    bucket_us = int(bucket_seconds * 1_000_000)
+    bucket_us = seconds_to_micros(bucket_seconds)
     in_tail = (F.col(_US) >= (F.col(_B) + 1) * bucket_us
-               - F.lit(int(overlap_seconds * 1_000_000)))
+               - F.lit(seconds_to_micros(overlap_seconds)))
     dup = F.explode(F.when(in_tail, F.array(F.lit(0), F.lit(1)))
                     .otherwise(F.array(F.lit(0))))
     out = tagged.withColumn(_CTX, dup)
@@ -239,7 +239,7 @@ def _clustered_with_context(df: DataFrame, entity_col: str, ts_col: str,
 def _range_window(entity_col: str, window_seconds: float, upper: int = 0):
     """Trailing time range per (entity, bucket), ordered by ``__us``."""
     return (Window.partitionBy(entity_col, _B).orderBy(_US)
-            .rangeBetween(-int(window_seconds * 1_000_000), upper))
+            .rangeBetween(-seconds_to_micros(window_seconds), upper))
 
 
 def chunked_rolling(
@@ -578,7 +578,7 @@ def chunked_rolling_distinct(
     import pandas as pd
     import pyspark.sql.types as T
 
-    win_us = int(window_seconds * 1_000_000)
+    win_us = seconds_to_micros(window_seconds)
     clustered = _clustered_with_context(df, entity_col, ts_col,
                                         bucket_seconds, window_seconds)
 

@@ -24,7 +24,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from .windows import ts_micros
+from .windows import seconds_to_micros, ts_micros
 
 
 def interval_join(
@@ -51,9 +51,9 @@ def interval_join(
     """
     if hi_seconds <= lo_seconds:
         raise ValueError("need hi_seconds > lo_seconds")
-    width_us = max(int((hi_seconds - lo_seconds) * 1_000_000), 1)
-    lo_us = int(lo_seconds * 1_000_000)
-    hi_us = int(hi_seconds * 1_000_000)
+    lo_us = seconds_to_micros(lo_seconds)
+    hi_us = seconds_to_micros(hi_seconds)
+    width_us = max(hi_us - lo_us, 1)
 
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in (on, right_ts)]

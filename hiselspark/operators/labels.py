@@ -34,7 +34,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .windows import entity_window, ts_micros, ts_seconds
+from .windows import (entity_window, seconds_to_micros, ts_micros,
+                      ts_seconds)
 
 
 def triple_barrier(
@@ -59,7 +60,7 @@ def triple_barrier(
     interpret trailing labels with the same care as any
     right-censored target (the purged split embargoes them)."""
     us = ts_micros(ts_col)
-    h_us = int(horizon_seconds * 1_000_000)
+    h_us = seconds_to_micros(horizon_seconds)
     w = (Window.partitionBy(entity_col).orderBy(us)
                .rangeBetween(1, h_us))
     fwd = F.array_sort(
@@ -164,7 +165,7 @@ def horizon_label(
     (future-min + entity-max share the clustering).
     """
     us = ts_micros(ts_col)
-    h_us = int(horizon_seconds * 1_000_000)
+    h_us = seconds_to_micros(horizon_seconds)
     order = [us] + [F.col(c) for c in tiebreak]
     w_future = (Window.partitionBy(entity_col).orderBy(*order)
                 .rowsBetween(1, Window.unboundedFollowing))

@@ -29,7 +29,7 @@ from typing import Sequence, Tuple
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .dedup import normalize_text
-from .windows import ts_micros
+from .windows import seconds_to_micros, ts_micros
 
 _MOD = 2_147_483_647  # 2^31 - 1; keeps acc*31 + codepoint < 2^36 in int64
 
@@ -123,8 +123,8 @@ def purged_time_split(
     """
     us = ts_micros(ts_col)
     cut = ts_micros(F.lit(cutoff_ts))
-    horizon = F.lit(int(label_horizon_seconds * 1_000_000))
-    embargo = F.lit(int(embargo_seconds * 1_000_000))
+    horizon = F.lit(seconds_to_micros(label_horizon_seconds))
+    embargo = F.lit(seconds_to_micros(embargo_seconds))
     label = (
         F.when(us >= cut + embargo, F.lit("eval"))
          .when(us >= cut, F.lit("embargo"))

@@ -47,6 +47,16 @@ def ts_micros(col) -> Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
+def seconds_to_micros(seconds: float) -> int:
+    """A seconds parameter (window, tolerance, bucket, horizon) as the
+    nearest whole µs: THE bound on the :func:`ts_micros` key.  A
+    truncating ``int(seconds * 1_000_000)`` comes out one µs short for
+    many fractional values (``int(2.01 * 1_000_000) == 2009999``), which
+    drops a row exactly ``seconds`` away.  Whole seconds give the same
+    literal either way."""
+    return int(round(seconds * 1_000_000))
+
+
 def with_lags(
     df: DataFrame,
     entity_col: str,
@@ -171,7 +181,7 @@ def rolling_aggregates(
     upper = 0 if include_current else -1  # microseconds
     w = (Window.partitionBy(entity_col)
                .orderBy(ts_micros(ts_col))
-               .rangeBetween(-int(window_seconds * 1_000_000), upper))
+               .rangeBetween(-seconds_to_micros(window_seconds), upper))
     fns = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max,
            "count": F.count, "std": F.stddev_samp}
     out = df
@@ -209,7 +219,7 @@ def rolling_corr(
     """
     w = (Window.partitionBy(entity_col)
                .orderBy(ts_micros(ts_col))
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     x, y = F.col(xcol), F.col(ycol)
     n = F.count(F.lit(1)).over(w)
     sx, sy = F.sum(x).over(w), F.sum(y).over(w)
@@ -257,7 +267,7 @@ def rolling_slope(
     t = ((us - t0) / 1_000_000).cast("long")  # whole relative seconds
     w = (Window.partitionBy(entity_col)
                .orderBy(us)
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     x = F.col(col)
     n = F.count(F.lit(1)).over(w)
     st = F.sum(t).over(w)
@@ -323,7 +333,7 @@ def horizon_lag(
     us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col).orderBy(us)
          .rangeBetween(Window.unboundedPreceding,
-                       -int(horizon_seconds * 1_000_000)))
+                       -seconds_to_micros(horizon_seconds)))
     packed = F.max(F.struct(us.alias("us"),
                             F.col(id_col).alias("id"),
                             F.col(col).alias("v"))).over(w)
@@ -362,7 +372,7 @@ def rolling_moments(
     us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col)
                .orderBy(us)
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     x = F.col(col)
     xd = x.cast("decimal(19,0)")
     n = F.count(F.lit(1)).over(w)
@@ -459,7 +469,7 @@ def rolling_distinct(
     semantics (same-microsecond peers count).  The skew-proof Arrow-
     kernel twin is ``chunked.chunked_rolling_distinct`` (same oracle).
     """
-    win = int(window_seconds * 1_000_000)
+    win = seconds_to_micros(window_seconds)
     us = ts_micros(ts_col)
     wv = (Window.partitionBy(entity_col, col)
           .orderBy(us, F.col(id_col)))
@@ -529,7 +539,7 @@ def rolling_twap(
     dur = F.lead(us, 1).over(wl) - us
     w = (Window.partitionBy(entity_col)
                .orderBy(us)
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     x = F.col(col)
     tagged = df.withColumn("__dur", dur)
     sw = F.sum(F.col("__dur")).over(w)
@@ -671,7 +681,7 @@ def rolling_quantile(
     out_col = out_col or f"{col}_roll_q{q:g}"
     w = (Window.partitionBy(entity_col)
                .orderBy(ts_micros(ts_col))
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     return df.withColumn(out_col,
                          F.percentile(col, F.lit(float(q))).over(w))
 
@@ -707,7 +717,7 @@ def rolling_mad(
     stack."""
     w = (Window.partitionBy(entity_col)
                .orderBy(ts_micros(ts_col))
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     arr = F.array_sort(F.collect_list(F.col(col).cast("double")).over(w))
 
     def median_of(sorted_arr):
@@ -751,7 +761,7 @@ def rolling_rank(
     out_col = out_col or f"{col}_roll_rank"
     w = (Window.partitionBy(entity_col)
                .orderBy(ts_micros(ts_col))
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     arr = F.collect_list(F.col(col)).over(w)
     cur = F.col(col)
     return (df.withColumn("__arr", arr)
@@ -952,7 +962,7 @@ def rolling_entropy(
     categories = sorted(categories)
     w = (Window.partitionBy(entity_col)
                .orderBy(ts_micros(ts_col))
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     n = F.count(F.lit(1)).over(w)
     ent = None
     for c in categories:
@@ -1275,8 +1285,8 @@ def sessionize_capped(
     Returns the input keys + (session_id, session_start_us) per event;
     session ids are 0-based per entity in time order.
     """
-    gap_us = int(gap_seconds * 1_000_000)
-    cap_us = int(cap_seconds * 1_000_000)
+    gap_us = seconds_to_micros(gap_seconds)
+    cap_us = seconds_to_micros(cap_seconds)
     t = ts_micros(ts_col).alias("__t")
     base = df.select(
         F.col(entity_col).alias("entity"), t,
@@ -1356,7 +1366,7 @@ def decayed_count(
         raise ValueError(f"halflife_seconds must be > 0, got "
                          f"{halflife_seconds}")
     us = ts_micros(ts_col)
-    horizon = int(40 * halflife_seconds * 1_000_000)
+    horizon = seconds_to_micros(40 * halflife_seconds)
     w = (Window.partitionBy(entity_col).orderBy(us)
                .rangeBetween(-horizon, -1))
     item = us if weight_col is None else F.struct(
@@ -1399,7 +1409,7 @@ def rolling_vwap(
     us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col)
                .orderBy(us)
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     p = F.col(price_col).cast("long")
     v = F.col(volume_col).cast("long")
     sv = F.sum(v).over(w)
@@ -1439,7 +1449,7 @@ def bollinger_bands(
     us = ts_micros(ts_col)
     w = (Window.partitionBy(entity_col)
                .orderBy(us)
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     x = F.col(col).cast("long")
     n = F.count(F.lit(1)).over(w)
     sv = F.sum(x).over(w)
@@ -1493,7 +1503,7 @@ def rolling_rsi(
     tagged = (df.withColumn("__g", gain).withColumn("__l", loss))
     w = (Window.partitionBy(entity_col)
                .orderBy(us)
-               .rangeBetween(-int(window_seconds * 1_000_000), 0))
+               .rangeBetween(-seconds_to_micros(window_seconds), 0))
     sg = F.sum("__g").over(w)
     sl = F.sum("__l").over(w)
     rsi = F.when(sg + sl > 0,
@@ -1534,7 +1544,7 @@ def event_study(
     one tiny groupBy over 2·n_buckets+1 buckets.  Returns one row
     per bucket: (bucket, n, sum_v, mean_v, abnormal)."""
     us = ts_micros(ts_col)
-    bus = int(bucket_seconds * 1_000_000)
+    bus = seconds_to_micros(bucket_seconds)
     span = int(n_buckets) * bus
     v = F.col(value_col).cast("long")
     flag = is_event if not isinstance(is_event, str) \
@@ -1595,7 +1605,7 @@ def growth_accounting(
     period: (period, n_active, n_new, n_retained, n_resurrected,
     n_churned)."""
     us = ts_micros(ts_col)
-    pus = int(period_seconds * 1_000_000)
+    pus = seconds_to_micros(period_seconds)
     per = (df.select(F.col(entity_col).alias("__e"),
                      us.alias("__us"))
            .select("__e", F.expr(f"__us DIV {pus}").alias("__p"))

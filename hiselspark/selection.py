@@ -14,6 +14,13 @@ the driver sums the (d*d+d)-length blocks in minibatch-key order, and
 runs LARS on the d x d result.  The feature map — ~1e12 * b rows at
 production scale — never exists.
 
+Standardization is split in two: one narrow Spark aggregate over the
+stacked ``(position, value)`` rows gives each continuous column's
+centre and scale (``_moments``), and each minibatch UDF applies ``(x -
+centre) / scale`` to its own rows in NumPy.  Both keep their plan size
+fixed at any column count, so the aggregate stays in whole-stage codegen
+and the shuffle moves the raw columns.
+
 Two batching modes:
 
 * ``mode="hash"`` (default) — the production route: each row goes to
@@ -135,6 +142,21 @@ def _stats_kwargs(x_kind: KernelKind, y_kind: KernelKind, cat_split: int,
     )
 
 
+def _standardizer(moments: Dict[str, Tuple[float, float]]):
+    """``pdf -> pdf`` with each moments column replaced by ``(x -
+    centre) / scale`` in float64 — the same IEEE operations as a Spark
+    projection, run inside the minibatch UDF."""
+    cols = list(moments)
+    centre = np.array([m[0] for m in moments.values()])
+    scale = np.array([m[1] for m in moments.values()])
+
+    def standardize(pdf: pd.DataFrame) -> pd.DataFrame:
+        z = (pdf[cols].to_numpy(dtype=np.float64) - centre) / scale
+        return pdf.assign(**dict(zip(cols, z.T)))
+
+    return standardize
+
+
 # ---------------------------------------------------------------------------
 # driver-side assembly (parity with reference select.py helpers)
 # ---------------------------------------------------------------------------
@@ -210,29 +232,48 @@ class SparkHSICSelector:
 
     def _moments(self, df: DataFrame
                  ) -> Tuple[int, Dict[str, Tuple[float, float]]]:
-        """One aggregate over the input rows: the row count and each
-        continuous column's ``(centre, scale)``.  The centre replicates
-        the reference's quirk of subtracting the column SUM, not the
-        mean (``select.py:379-383``) — kept for parity.  Discrete
-        columns pass through."""
+        """The row count and each continuous column's ``(centre,
+        scale)``.  The centre replicates the reference's quirk of
+        subtracting the column SUM, not the mean (``select.py:379-383``)
+        — kept for parity.  Discrete columns pass through.
+
+        One narrow aggregate over the stacked ``(position, value)`` rows
+        of the continuous features and the RBF target, grouped by
+        position: its four aggregate expressions do not grow with the
+        column count.  A wide aggregate with a ``sum`` and a
+        ``stddev_pop`` per column has ``1 + 4c`` buffer fields; past
+        ``spark.sql.codegen.maxFields`` (100, so from 25 columns on)
+        Spark runs both of its ``HashAggregate`` nodes outside
+        whole-stage codegen, through generated projections that cost
+        more CPU than the HSIC kernel.  Each column's fold visits the
+        same rows in the same order as in the wide aggregate, so the
+        moments are the same bits.
+
+        Raises ``ValueError`` on an empty input and names the
+        continuous or RBF-target columns that hold nulls."""
         cols = self.feature_cols[self.cat_split:] + (
             self.target_cols if self.y_kind == KernelKind.RBF else [])
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in cols:
-            aggs += [F.sum(c).alias(f"{c}__center"),
-                     F.stddev_pop(c).alias(f"{c}__scale")]
-        row = df.agg(*aggs).collect()[0].asDict()
-        return int(row["__n"]), {
-            c: (float(row[f"{c}__center"]),
-                1e-9 + float(row[f"{c}__scale"] or 0.0)) for c in cols}
-
-    @staticmethod
-    def _standardized(df: DataFrame,
-                      moments: Dict[str, Tuple[float, float]]) -> DataFrame:
-        """The standardization projection ``(x - centre) / scale``."""
-        return df.withColumns({
-            c: (F.col(c).cast("double") - F.lit(center)) / F.lit(scale)
-            for c, (center, scale) in moments.items()})
+        if not cols:
+            n, rows = df.count(), []
+        else:
+            stacked = df.select(F.posexplode(F.array(
+                *[F.col(c).cast("double") for c in cols])).alias(
+                    "__pos", "__v"))
+            rows = sorted(stacked.groupBy("__pos").agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count("__v").alias("non_null"),
+                F.sum("__v").alias("centre"),
+                F.stddev_pop("__v").alias("scale")).collect(),
+                key=lambda r: r["__pos"])
+            n = rows[0]["n"] if rows else 0
+        if n == 0:
+            raise ValueError("hsic selection needs at least one row")
+        nulls = [c for c, r in zip(cols, rows) if r["non_null"] < n]
+        if nulls:
+            raise ValueError(f"continuous feature or RBF target columns "
+                             f"hold nulls: {nulls}")
+        return n, {c: (r["centre"], 1e-9 + r["scale"])
+                   for c, r in zip(cols, rows)}
 
     # -- sufficient stats -------------------------------------------------
 
@@ -259,7 +300,10 @@ class SparkHSICSelector:
         The column-pruned input is persisted for the two passes over
         it (row count and standardization aggregate, then sufficient
         stats) — vital when the upstream plan is expensive (as-of
-        join, image decode) — and unpersisted on return."""
+        join, image decode) — and unpersisted on return.  The second
+        pass shuffles the raw columns; each minibatch UDF standardizes
+        its rows with the moments of the first before it sorts them
+        and builds the Grams."""
         if mode not in ("hash", "parity"):
             raise ValueError(f"mode must be 'hash' or 'parity', "
                              f"not {mode!r}")
@@ -274,9 +318,8 @@ class SparkHSICSelector:
             if mode == "hash":
                 return self._hash_stats(base, n, moments, minibatch_size,
                                         order_col, epochs, seed, precision)
-            return self._parity_stats(self._standardized(base, moments), n,
-                                      minibatch_size, order_col,
-                                      batch_size, epochs, seed)
+            return self._parity_stats(base, n, moments, minibatch_size,
+                                      order_col, batch_size, epochs, seed)
         finally:
             base.unpersist()
 
@@ -316,18 +359,19 @@ class SparkHSICSelector:
             h = F.xxhash64(F.lit(seed), F.col("__epoch"), *hash_cols)
         else:
             h = F.xxhash64(F.lit(seed), *hash_cols)
-        df = (self._standardized(df.withColumn("__h", h), moments)
-              .withColumn("__mb", F.pmod("__h", F.lit(num_mb))))
+        df = (df.withColumn("__h", h)
+                .withColumn("__mb", F.pmod("__h", F.lit(num_mb))))
 
         d = len(self.feature_cols)
         dy = len(self.target_cols)
         fc, tc = list(self.feature_cols), list(self.target_cols)
         kw = _stats_kwargs(self.x_kind, self.y_kind, self.cat_split, dy,
                            precision)
+        standardize = _standardizer(moments)
 
         def per_minibatch(key: Tuple[Any, ...],
                           pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["__h"] + fc)
+            pdf = standardize(pdf).sort_values(["__h"] + fc)
             if len(pdf) < 2:
                 return _make_stats_row(key[0], np.zeros((d, d)),
                                        np.zeros(d), 0, 0)
@@ -347,8 +391,8 @@ class SparkHSICSelector:
         return [(xtx, xty, int(stats["n_rows"].sum()),
                  int(stats["n_batches"].sum()))]
 
-    def _parity_stats(self, df, n, minibatch_size, order_col, batch_size,
-                      epochs, seed):
+    def _parity_stats(self, df, n, moments, minibatch_size, order_col,
+                      batch_size, epochs, seed):
         """Reference-exact batching: global row order → outer batches of
         ``batch_size`` rows (remainder dropped) → optional seeded epoch
         shuffles within each outer batch → minibatches of
@@ -395,10 +439,11 @@ class SparkHSICSelector:
         dy = len(self.target_cols)
         fc, tc = list(self.feature_cols), list(self.target_cols)
         kw = _stats_kwargs(self.x_kind, self.y_kind, self.cat_split, dy)
+        standardize = _standardizer(moments)
 
         def per_minibatch(key: Tuple[Any, ...],
                           pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("__spos")
+            pdf = standardize(pdf.sort_values("__spos"))
             bx, by = batch_sufficient_stats(
                 pdf[fc].to_numpy(), pdf[tc].to_numpy(), **kw)
             # pack (outer, mb) into one key so the driver can sum the

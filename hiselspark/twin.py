@@ -180,10 +180,10 @@ def load_events(sf_dir: str) -> pd.DataFrame:
 
 def _twin_standardize(cols: Dict[str, np.ndarray],
                       names: Sequence[str]) -> Dict[str, np.ndarray]:
-    """'hisel' standardization replica (``selection.py
-    _standardized``): subtract the column SUM (the reference's quirk),
-    divide by ``1e-9 + stddev_pop`` — aggregates replayed in row
-    order."""
+    """'hisel' standardization replica (``selection.py _moments``, then
+    the minibatch UDFs' ``_standardizer``): subtract the column SUM (the
+    reference's quirk), divide by ``1e-9 + stddev_pop`` — aggregates
+    replayed in row order."""
     out = dict(cols)
     for c in names:
         arr = out[c]

@@ -847,3 +847,33 @@ def test_image_scan_one_task_per_core_no_shuffle(spark, tmp_path):
     parallelism = spark.sparkContext.defaultParallelism
     assert scan.rdd.getNumPartitions() <= parallelism
     assert scan.count() == 240
+
+
+@pytest.mark.parametrize("n_cols", [40, 64])
+def test_selector_moments_aggregate_stays_in_codegen(spark, n_cols):
+    """The standardization moments are one narrow aggregate: a fixed
+    four aggregate expressions at any column count, both HashAggregate
+    nodes inside whole-stage codegen.  (A sum and a stddev_pop per
+    column crossed spark.sql.codegen.maxFields from 25 columns on.)"""
+    import numpy as np
+    import pandas as pd
+
+    from hiselspark.selection import SparkHSICSelector
+    from tools.codegen_fallbacks import outside_codegen, recorded_actions
+
+    rng = np.random.default_rng(n_cols)
+    cols = [f"f{i}" for i in range(n_cols)]
+    pdf = pd.DataFrame(rng.standard_normal((300, n_cols + 1)),
+                       columns=cols + ["y"])
+    df = spark.createDataFrame(pdf)
+    with recorded_actions() as frames:
+        SparkHSICSelector(df, cols, ["y"])._moments(df)
+    assert len(frames) == 1
+    nodes = _final_plan_nodes(frames[0])
+    aggs = [n for n in nodes
+            if n.getClass().getSimpleName() == "HashAggregateExec"]
+    assert len(aggs) == 2
+    assert all(a.aggregateExpressions().size() == 4 for a in aggs)
+    outside = [n.getClass().getSimpleName() for n in outside_codegen(
+        frames[0]._jdf.queryExecution().executedPlan())]
+    assert "HashAggregateExec" not in outside, outside

@@ -133,6 +133,122 @@ def test_hash_mode_mixed_types(spark):
     assert set(res.features) == {"c0", "g1"}
 
 
+def _mixed_frame(n=700, seed=5):
+    """Two discrete (int64, int32) and six continuous columns, one of
+    them float32, one constant; y depends on c0 and x1."""
+    rng = np.random.default_rng(seed)
+    pdf = pd.DataFrame({"c0": rng.integers(0, 4, n),
+                        "c1": rng.integers(0, 3, n).astype(np.int32)})
+    for i in range(4):
+        pdf[f"x{i}"] = rng.standard_normal(n)
+    pdf["x4"] = rng.standard_normal(n).astype(np.float32)
+    pdf["x5"] = 0.25
+    pdf["y"] = np.sin(pdf["x1"]) + pdf["c0"] + 0.1 * rng.standard_normal(n)
+    pdf["_idx"] = np.arange(n)
+    return pdf, ["c0", "c1"] + [f"x{i}" for i in range(6)]
+
+
+def test_moments_equal_per_column_aggregates_on_any_layout(spark):
+    """The narrow (position, value) aggregate gives each column the
+    bits of its own F.sum / F.stddev_pop, at any partitioning; a
+    constant column's scale is 1e-9."""
+    from pyspark.sql import functions as F
+
+    pdf, fc = _mixed_frame()
+    df = spark.createDataFrame(pdf)
+    cont = [*fc[2:], "y"]
+    for parts in (1, 3, 7):
+        part = df.repartition(parts).persist()
+        try:
+            n, moments = SparkHSICSelector(part, fc, ["y"])._moments(part)
+            assert n == len(pdf)
+            assert list(moments) == cont
+            for c in cont:
+                r = part.agg(F.sum(c), F.stddev_pop(c)).first()
+                want = (r[0], 1e-9 + r[1])
+                assert [v.hex() for v in moments[c]] == [
+                    v.hex() for v in want], (parts, c)
+            assert moments["x5"][1] == 1e-9
+        finally:
+            part.unpersist()
+
+
+def _parity_twin(pdf, fc, cat_split, tc, minibatch_size, batch_size):
+    """Reference-order batching without Spark: standardize with the
+    twin's row-order replay of the moments, outer batches then
+    minibatches by row position, blocks summed in key order."""
+    from hiselspark.kernels import KernelKind, batch_sufficient_stats
+    from hiselspark.selection import _stats_kwargs
+    from hiselspark.twin import _twin_standardize
+
+    zcols = [*fc[cat_split:], *tc]
+    std = _twin_standardize(
+        {c: pdf[c].to_numpy(dtype=np.float64) for c in zcols}, zcols)
+    work = pdf.sort_values("_idx").assign(**std)
+    kw = _stats_kwargs(KernelKind.MIXED, KernelKind.RBF, cat_split,
+                       len(tc))
+    bs = batch_size
+    per_outer = []
+    for outer in range(len(work) // bs):
+        blocks = [batch_sufficient_stats(
+            g[fc].to_numpy(), g[tc].to_numpy(), **kw)
+            for g in (work.iloc[outer * bs + m * minibatch_size:
+                                outer * bs + (m + 1) * minibatch_size]
+                      for m in range(bs // minibatch_size))]
+        d = len(fc)
+        xtx = np.sum(np.stack([bx.ravel() for bx, _ in blocks]),
+                     axis=0).reshape(d, d)
+        xty = np.sum(np.stack([by for _, by in blocks]), axis=0)
+        per_outer.append((xtx, xty, len(blocks) * minibatch_size,
+                          len(blocks)))
+    return per_outer
+
+
+def test_parity_mode_equals_twin_bit_for_bit(spark):
+    """Parity mode standardizes inside the minibatch UDF with the
+    moments of the Spark aggregate: on one partition its blocks, HSIC
+    scores and lasso path are the bits of a row-order NumPy replay."""
+    from hiselspark.selection import assemble_selection_result
+
+    pdf, fc = _mixed_frame()
+    sdf = spark.createDataFrame(pdf).coalesce(1)
+    sel = SparkHSICSelector(sdf, fc, ["y"])
+    res = sel.run(number_of_features=3, minibatch_size=100, mode="parity",
+                  order_col="_idx", batch_size=350)
+    twin = assemble_selection_result(
+        _parity_twin(pdf, fc, 2, ["y"], 100, 350), fc, 3, 0.01)
+    assert res.n_rows_used == twin.n_rows_used == 600
+    assert res.features == twin.features
+    for (ax, ay), (bx, by) in zip(res.stats, twin.stats):
+        assert ax.tobytes() == bx.tobytes()
+        assert ay.tobytes() == by.tobytes()
+    assert res.lasso_path.values.tobytes() == \
+        twin.lasso_path.values.tobytes()
+
+
+def test_empty_and_null_inputs_raise_clear_errors(spark):
+    """An empty frame, and nulls in a continuous feature or an RBF
+    target, raise ValueError naming the columns."""
+    pdf, fc = _mixed_frame(n=50)
+    sdf = spark.createDataFrame(pdf)
+    with pytest.raises(ValueError, match="at least one row"):
+        hsic_lasso_select(sdf.limit(0), fc, ["y"], number_of_features=2)
+    with pytest.raises(ValueError, match="at least one row"):
+        hsic_lasso_select(sdf.limit(0), ["c0", "c1"], ["_idx"],
+                          number_of_features=1)
+    from pyspark.sql import functions as F
+
+    holes = sdf.withColumns({
+        "x0": F.lit(None).cast("double"),
+        "x2": F.when(F.col("_idx") != 7, F.col("x2")),
+        "y": F.when(F.col("_idx") != 9, F.col("y"))})
+    with pytest.raises(ValueError, match=r"\['x0', 'x2', 'y'\]"):
+        hsic_lasso_select(holes, fc, ["y"], number_of_features=2)
+    with pytest.raises(ValueError, match=r"\['x0', 'x2', 'y'\]"):
+        SparkHSICSelector(holes, fc, ["y"]).run(
+            number_of_features=2, mode="parity", order_col="_idx")
+
+
 def test_autoselect_threshold_cut(spark):
     x, y = _planted_continuous(n=1000)
     sdf, cols, ycols = _to_sdf(spark, x, y)
