@@ -23,6 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from . import permutohedron
+from .selection import stack_columns
 from .stats import adjusted_mutual_info
 
 
@@ -30,13 +31,15 @@ def _column_offsets_and_cards(df: DataFrame,
                               cols: Sequence[str]) -> Tuple[Dict[str, int],
                                                             Dict[str, int]]:
     """Per-column min (for the min-subtract normalization, reference
-    ``categorical.py:132-133``) and cardinality ``1 + max(x - min)``."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"{c}__min"), F.max(c).alias(f"{c}__max")]
-    row = df.agg(*aggs).collect()[0].asDict()
-    mins = {c: int(row[f"{c}__min"]) for c in cols}
-    cards = {c: int(row[f"{c}__max"]) - mins[c] + 1 for c in cols}
+    ``categorical.py:132-133``) and cardinality ``1 + max(x - min)``,
+    from one narrow aggregate over the stacked values cast to long (a
+    min and a max per column left codegen from 51 columns on)."""
+    stacked = stack_columns(df, cols, "long")
+    rows = {r["__pos"]: r for r in stacked.groupBy("__pos").agg(
+        F.min("__v").alias("lo"), F.max("__v").alias("hi")).collect()}
+    mins = {c: int(rows[i]["lo"]) for i, c in enumerate(cols)}
+    cards = {c: int(rows[i]["hi"]) - mins[c] + 1
+             for i, c in enumerate(cols)}
     return mins, cards
 
 

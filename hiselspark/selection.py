@@ -12,7 +12,9 @@ sums of per-minibatch (d, d)/(d,) blocks.  So executors compute
 per-minibatch sufficient statistics inside Arrow-batched pandas UDFs,
 the driver sums the (d*d+d)-length blocks in minibatch-key order, and
 runs LARS on the d x d result.  The feature map — ~1e12 * b rows at
-production scale — never exists.
+production scale — never exists.  Both selector modes and
+``select_features_by_segment`` share that reduce (``_block_sums``);
+each route only keys the rows and prepares a minibatch's ``(x, y)``.
 
 Standardization is split in two: one narrow Spark aggregate over the
 stacked ``(position, value)`` rows gives each continuous column's
@@ -38,7 +40,7 @@ Two batching modes:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Dict, List, Optional, Sequence, Tuple
+from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -67,6 +69,15 @@ def _classify_columns(df: DataFrame, cols: Sequence[str]) -> Dict[str, str]:
         else:
             raise TypeError(f"column {c}: unsupported feature type {dt}")
     return out
+
+
+def stack_columns(df: DataFrame, cols: Sequence[str],
+                  cast: str) -> DataFrame:
+    """``cols`` as ``(__pos, __v)`` rows: an aggregate grouped by the
+    column index ``__pos`` has a fixed number of expressions at any
+    column count, so it stays inside whole-stage codegen."""
+    return df.select(F.posexplode(F.array(
+        *[F.col(c).cast(cast) for c in cols])).alias("__pos", "__v"))
 
 
 def _kernel_routing(df: DataFrame, feature_cols: Sequence[str],
@@ -111,23 +122,40 @@ class SelectionResult:
 # sufficient-statistics stage
 # ---------------------------------------------------------------------------
 
-_STAT_SCHEMA = T.StructType([
-    T.StructField("group_key", T.LongType()),
-    T.StructField("xtx", T.ArrayType(T.DoubleType())),
-    T.StructField("xty", T.ArrayType(T.DoubleType())),
-    T.StructField("n_rows", T.LongType()),
-    T.StructField("n_batches", T.LongType()),
-])
+_BLOCK_SCHEMA = ("outer long, mb long, xtx array<double>, "
+                 "xty array<double>, n_rows long")
 
 
-def _make_stats_row(group_key, xtx, xty, n_rows, n_batches):
-    return pd.DataFrame({
-        "group_key": [group_key],
-        "xtx": [xtx.ravel().tolist()],
-        "xty": [xty.ravel().tolist()],
-        "n_rows": [n_rows],
-        "n_batches": [n_batches],
-    })
+def _block_sums(df: DataFrame, keys: Sequence, prepare: Callable, kw: dict,
+                d: int) -> Dict[int, Tuple[np.ndarray, np.ndarray, int, int]]:
+    """``{outer: (X^T X, X^T y, rows, minibatches)}``, the reduce every
+    route shares.  ``df`` is grouped by ``keys`` (outer then minibatch
+    key, or the minibatch key alone for one outer batch 0); one
+    ``applyInPandas`` turns each group into ``prepare(pdf) -> (x, y)``
+    — ``None`` drops it — and one ``batch_sufficient_stats`` block.
+    The driver sums each outer batch's blocks in minibatch-key order,
+    so the fold order is fixed at any layout.  It holds one row of
+    ``d*d + d`` doubles per block — about 25 MB at the 2M-image scaling
+    corpus; past ``spark.driver.maxResultSize`` the collect fails with
+    an error instead of truncating."""
+
+    def block(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
+        xy = prepare(pdf)
+        if xy is None:
+            return pd.DataFrame()
+        bx, by = batch_sufficient_stats(*xy, **kw)
+        return pd.DataFrame({
+            "outer": [key[0] if len(key) > 1 else 0], "mb": [key[-1]],
+            "xtx": [bx.ravel().tolist()], "xty": [by.ravel().tolist()],
+            "n_rows": [len(xy[0])]})
+
+    blocks = (df.groupBy(*keys).applyInPandas(block, _BLOCK_SCHEMA)
+                .toPandas().sort_values(["outer", "mb"]))
+    return {int(outer): (
+        np.sum(np.stack(g["xtx"].map(np.asarray)), axis=0).reshape(d, d),
+        np.sum(np.stack(g["xty"].map(np.asarray)), axis=0),
+        int(g["n_rows"].sum()), len(g))
+        for outer, g in blocks.groupby("outer", sort=True)}
 
 
 def _stats_kwargs(x_kind: KernelKind, y_kind: KernelKind, cat_split: int,
@@ -256,9 +284,7 @@ class SparkHSICSelector:
         if not cols:
             n, rows = df.count(), []
         else:
-            stacked = df.select(F.posexplode(F.array(
-                *[F.col(c).cast("double") for c in cols])).alias(
-                    "__pos", "__v"))
+            stacked = stack_columns(df, cols, "double")
             rows = sorted(stacked.groupBy("__pos").agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count("__v").alias("non_null"),
@@ -315,16 +341,27 @@ class SparkHSICSelector:
         base = self.df.select(*needed).persist()
         try:
             n, moments = self._moments(base)
+            standardize = _standardizer(moments)
             if mode == "hash":
-                return self._hash_stats(base, n, moments, minibatch_size,
-                                        order_col, epochs, seed, precision)
-            return self._parity_stats(base, n, moments, minibatch_size,
-                                      order_col, batch_size, epochs, seed)
+                keyed, keys, prepare = self._hash_minibatches(
+                    base, n, standardize, minibatch_size, order_col,
+                    epochs, seed)
+            else:
+                keyed, keys, prepare = self._parity_minibatches(
+                    base, n, standardize, minibatch_size, order_col,
+                    batch_size, epochs, seed)
+                precision = "float64"
+            sums = _block_sums(keyed, keys, prepare, _stats_kwargs(
+                self.x_kind, self.y_kind, self.cat_split,
+                len(self.target_cols), precision), len(self.feature_cols))
         finally:
             base.unpersist()
+        if not sums:
+            raise ValueError(f"no complete minibatch in {mode} mode")
+        return list(sums.values())
 
-    def _hash_stats(self, df, n, moments, minibatch_size, order_col,
-                    epochs, seed, precision: str = "float64"):
+    def _hash_minibatches(self, df, n, standardize, minibatch_size,
+                          order_col, epochs, seed):
         """Deterministic *production* batching: every row is assigned to
         a minibatch by a seeded content hash (``pmod(xxhash64(...),
         num_mb)``) of ``order_col``, or else of the raw feature and
@@ -332,7 +369,9 @@ class SparkHSICSelector:
         sums vary in the last bit with the partitioning.  No global
         sort, no single-task stage, and the batch membership (hence the
         per-batch delta-kernel counts) is independent of partition
-        layout.  One shuffle of the narrow numeric frame.
+        layout.  One shuffle of the narrow numeric frame; a minibatch is
+        standardized, then sorted by (hash, features), and adds no
+        block below 2 rows.
 
         ``epochs > 1`` replicates each row into ``epochs`` copies whose
         hashes differ by epoch id, so every epoch lands in a different
@@ -340,16 +379,9 @@ class SparkHSICSelector:
         reference's shuffled-concatenation augmentation
         (``select.py:384-389``): more minibatch diversity per LARS run.
         The copies are made after the standardization aggregate, so the
-        centres are those of the input rows.
-
-        The per-minibatch blocks are collected and summed on the driver
-        in minibatch-key order, so the float fold order is fixed at any
-        layout.  The driver holds ``n * epochs / minibatch_size`` rows of
-        ``d*d + d`` doubles — about 25 MB at the 2M-image scaling
-        corpus; past ``spark.driver.maxResultSize`` the collect fails
-        with an error instead of truncating."""
-        hash_cols = [order_col] if order_col else [
-            *self.feature_cols, *self.target_cols]
+        centres are those of the input rows."""
+        fc, tc = list(self.feature_cols), list(self.target_cols)
+        hash_cols = [order_col] if order_col else [*fc, *tc]
         b = max(8, minibatch_size)
         num_mb = max(1, (n * epochs) // b)
         if epochs > 1:
@@ -362,41 +394,21 @@ class SparkHSICSelector:
         df = (df.withColumn("__h", h)
                 .withColumn("__mb", F.pmod("__h", F.lit(num_mb))))
 
-        d = len(self.feature_cols)
-        dy = len(self.target_cols)
-        fc, tc = list(self.feature_cols), list(self.target_cols)
-        kw = _stats_kwargs(self.x_kind, self.y_kind, self.cat_split, dy,
-                           precision)
-        standardize = _standardizer(moments)
-
-        def per_minibatch(key: Tuple[Any, ...],
-                          pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = standardize(pdf).sort_values(["__h"] + fc)
+        def prepare(pdf: pd.DataFrame):
             if len(pdf) < 2:
-                return _make_stats_row(key[0], np.zeros((d, d)),
-                                       np.zeros(d), 0, 0)
-            bx, by = batch_sufficient_stats(
-                pdf[fc].to_numpy(), pdf[tc].to_numpy(), **kw)
-            return _make_stats_row(key[0], bx, by, len(pdf), 1)
+                return None
+            pdf = standardize(pdf).sort_values(["__h"] + fc)
+            return pdf[fc].to_numpy(), pdf[tc].to_numpy()
 
-        stats = (df.groupBy("__mb")
-                   .applyInPandas(per_minibatch, _STAT_SCHEMA)
-                   .toPandas()
-                   .sort_values("group_key"))
-        if stats.empty or int(stats["n_batches"].sum()) == 0:
-            raise ValueError("no complete minibatch in hash mode")
-        xtx = np.sum(np.stack(stats["xtx"].map(np.asarray)),
-                     axis=0).reshape(d, d)
-        xty = np.sum(np.stack(stats["xty"].map(np.asarray)), axis=0)
-        return [(xtx, xty, int(stats["n_rows"].sum()),
-                 int(stats["n_batches"].sum()))]
+        return df, ["__mb"], prepare
 
-    def _parity_stats(self, df, n, moments, minibatch_size, order_col,
-                      batch_size, epochs, seed):
+    def _parity_minibatches(self, df, n, standardize, minibatch_size,
+                            order_col, batch_size, epochs, seed):
         """Reference-exact batching: global row order → outer batches of
         ``batch_size`` rows (remainder dropped) → optional seeded epoch
         shuffles within each outer batch → minibatches of
-        ``minibatch_size`` rows (remainder dropped)."""
+        ``minibatch_size`` rows (remainder dropped).  Each minibatch is
+        sorted by its position, then standardized."""
         from pyspark.sql import Window
         bs = min(n, batch_size or n)
         num_outer = n // bs
@@ -434,36 +446,13 @@ class SparkHSICSelector:
         num_mb = rows_per_outer // b
         df = (df.filter(F.col("__spos") < num_mb * b)
                 .withColumn("__mb", (F.col("__spos") / b).cast("long")))
-
-        d = len(self.feature_cols)
-        dy = len(self.target_cols)
         fc, tc = list(self.feature_cols), list(self.target_cols)
-        kw = _stats_kwargs(self.x_kind, self.y_kind, self.cat_split, dy)
-        standardize = _standardizer(moments)
 
-        def per_minibatch(key: Tuple[Any, ...],
-                          pdf: pd.DataFrame) -> pd.DataFrame:
+        def prepare(pdf: pd.DataFrame):
             pdf = standardize(pdf.sort_values("__spos"))
-            bx, by = batch_sufficient_stats(
-                pdf[fc].to_numpy(), pdf[tc].to_numpy(), **kw)
-            # pack (outer, mb) into one key so the driver can sum the
-            # blocks in a fixed order — bit-reproducible across layouts
-            return _make_stats_row(key[0] * (2 ** 32) + key[1],
-                                   bx, by, len(pdf), 1)
+            return pdf[fc].to_numpy(), pdf[tc].to_numpy()
 
-        stats = (df.groupBy("__outer", "__mb")
-                   .applyInPandas(per_minibatch, _STAT_SCHEMA)
-                   .toPandas()
-                   .sort_values("group_key"))
-        out = []
-        for outer in range(num_outer):
-            part = stats[stats["group_key"] // (2 ** 32) == outer]
-            xtx = np.sum(np.stack(part["xtx"].map(np.asarray)),
-                         axis=0).reshape(d, d)
-            xty = np.sum(np.stack(part["xty"].map(np.asarray)), axis=0)
-            out.append((xtx, xty, int(part["n_rows"].sum()),
-                        int(part["n_batches"].sum())))
-        return out
+        return df, ["__outer", "__mb"], prepare
 
     # -- selection --------------------------------------------------------
 
@@ -576,13 +565,12 @@ def select_features_by_segment(
     LARS touches the feature map only through ``X^T X`` and ``X^T y``)
     is associative PER SEGMENT, so all segments share one plan:
     deterministic hash minibatches ``(segment, pmod(xxhash64(order),
-    n_minibatches))`` -> one ``applyInPandas`` computing each
-    minibatch's ``(d, d)``/``(d,)`` blocks (rows sorted by
-    ``order_col`` inside the group, so the result is bit-identical on
-    any partition layout) -> the driver collects the blocks and sums
-    each segment's in minibatch order, as hash mode does -> the tiny
-    per-segment LARS runs on the driver (O(segments * d^3), with d
-    tens and segments thousands this is milliseconds each).
+    n_minibatches))`` -> the block reduce the selector's modes share
+    (``_block_sums``; rows sorted by ``order_col`` inside the group, so
+    the result is bit-identical on any partition layout), with the
+    segment as the outer key -> the tiny per-segment LARS runs on the
+    driver (O(segments * d^3), with d tens and segments thousands this
+    is milliseconds each).
 
     Standardization is PER MINIBATCH (each minibatch z-scores its own
     rows inside the kernel, batch-norm style): a Spark aggregate for
@@ -599,12 +587,12 @@ def select_features_by_segment(
     LARS activation order, ``hsic_score = (X^T y)[feature]`` (n^2 x
     HSIC_b of feature vs target within the segment).
 
-    Segments whose every hash minibatch holds fewer than 8 rows (no
-    Gram worth centering) contribute no stats and are absent from the
-    output — a segment needs ~``8 * n_minibatches`` rows to be
-    selectable; size ``n_minibatches`` to the smallest segment you
-    care about.  ``segment_col`` must be integer-castable (hash or
-    dictionary-encode string segments upstream).
+    A minibatch of fewer than 8 rows (no Gram worth centering) adds no
+    block, and a segment with no block is absent from the output — a
+    segment needs ~``8 * n_minibatches`` rows to be selectable; size
+    ``n_minibatches`` to the smallest segment you care about.
+    ``segment_col`` must be integer-castable (hash or dictionary-encode
+    string segments upstream).
     """
     if order_col is None:
         raise ValueError("order_col is required: it keys the "
@@ -612,57 +600,36 @@ def select_features_by_segment(
     fc, cat_split, x_kind, y_kind = _kernel_routing(
         df, feature_cols, target_cols)
     tc = list(target_cols)
-    d, dy = len(fc), len(tc)
+    d = len(fc)
     k = min(number_of_features, d - 1)
-
-    base = df.select(segment_col, order_col, *fc, *tc)
     z_y = y_kind == KernelKind.RBF
-    kw = _stats_kwargs(x_kind, y_kind, cat_split, dy, precision)
-    schema = T.StructType([
-        T.StructField("segment", T.LongType()),
-        T.StructField("mb", T.IntegerType()),
-        T.StructField("xtx", T.ArrayType(T.DoubleType())),
-        T.StructField("xty", T.ArrayType(T.DoubleType())),
-    ])
 
-    def group_stats(key: Tuple[Any, ...],
-                    pdf: pd.DataFrame) -> pd.DataFrame:
-        seg, mb = key
+    def prepare(pdf: pd.DataFrame):
         pdf = pdf.sort_values(order_col, kind="mergesort")
         x = pdf[fc].to_numpy(dtype=np.float64)
         y = pdf[tc].to_numpy(dtype=np.float64)
         if len(x) < 8:      # degenerate minibatch: no Gram to center
-            return pd.DataFrame(
-                {"segment": [], "mb": [], "xtx": [], "xty": []}).astype(
-                {"segment": "int64", "mb": "int32"})
+            return None
         if cat_split < d:       # z-score the continuous block in-batch
             xc = x[:, cat_split:]
             x[:, cat_split:] = ((xc - xc.mean(axis=0))
                                 / (1e-9 + xc.std(axis=0)))
         if z_y:
             y = (y - y.mean(axis=0)) / (1e-9 + y.std(axis=0))
-        bx, by = batch_sufficient_stats(x, y, **kw)
-        return pd.DataFrame({
-            "segment": [int(seg)], "mb": [int(mb)],
-            "xtx": [bx.ravel().tolist()], "xty": [by.ravel().tolist()]})
+        return x, y
 
-    mb = F.pmod(F.xxhash64(F.col(order_col)),
-                F.lit(n_minibatches)).cast("int")
-    stats = (base
-             .withColumn("__mb", mb)
-             .groupBy(F.col(segment_col).cast("long").alias("__seg"),
-                      F.col("__mb"))
-             .applyInPandas(group_stats, schema)
-             .toPandas()
-             .sort_values(["segment", "mb"]))   # fixed fold order
-
+    keyed = (df.select(segment_col, order_col, *fc, *tc)
+               .withColumn("__mb", F.pmod(F.xxhash64(F.col(order_col)),
+                                          F.lit(n_minibatches))))
+    sums = _block_sums(
+        keyed, [F.col(segment_col).cast("long").alias("__seg"), "__mb"],
+        prepare, _stats_kwargs(x_kind, y_kind, cat_split, len(tc),
+                               precision), d)
     out_rows = []
-    for seg, blocks in stats.groupby("segment", sort=True):
-        xtx = np.sum(np.stack(blocks["xtx"].map(np.asarray)), axis=0)
-        xty = np.sum(np.stack(blocks["xty"].map(np.asarray)), axis=0)
-        active, _ = lar.solve_gram(xtx.reshape(d, d), xty, k)
+    for seg, (xtx, xty, _, _) in sums.items():
+        active, _ = lar.solve_gram(xtx, xty, k)
         for rank, idx in enumerate(active[:k], start=1):
-            out_rows.append((int(seg), rank, fc[idx], float(xty[idx])))
+            out_rows.append((seg, rank, fc[idx], float(xty[idx])))
     return pd.DataFrame(
         out_rows, columns=["segment", "rank", "feature", "hsic_score"]
     ).sort_values(["segment", "rank"]).reset_index(drop=True)

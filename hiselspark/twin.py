@@ -174,7 +174,7 @@ def load_events(sf_dir: str) -> pd.DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# the hash-mode HSIC selector twin (selection.py _hash_stats + run)
+# the hash-mode HSIC selector twin (selection.py hash mode + run)
 # ---------------------------------------------------------------------------
 
 
@@ -201,10 +201,12 @@ def _twin_hash_stats(pdf: pd.DataFrame, fc: List[str], tc: List[str],
                      y_kind: KernelKind = KernelKind.RBF,
                      cat_split: int = 0
                      ) -> Tuple[np.ndarray, np.ndarray, int, int]:
-    """Replica of ``SparkHSICSelector._hash_stats``: xxhash64-keyed
-    minibatches, per-minibatch ``batch_sufficient_stats`` on rows
-    sorted by (hash, features), blocks summed in sorted key order —
-    identical fold order, no Spark."""
+    """Replica of ``SparkHSICSelector._hash_minibatches`` and
+    ``_block_sums``: xxhash64-keyed minibatches, per-minibatch
+    ``batch_sufficient_stats`` on rows sorted by (hash, features),
+    blocks summed in sorted key order — identical fold order, no
+    Spark.  A minibatch under 2 rows adds a zero block here and none
+    there: the same bits."""
     d = len(fc)
     dy = len(tc)
     n = len(pdf)

@@ -104,10 +104,11 @@ def test_flagship_hash_mode_plan_no_global_sort(spark):
     shuffle on the minibatch key; the per-minibatch blocks are then
     collected and summed on the driver.  (The old parity path planned
     a rangepartitioning Sort for the global row_number — the
-    scale-killer this test pins against.)"""
-    from pyspark.sql import Window  # noqa: F401
+    scale-killer this test pins against.)  Checked on the block frame
+    the selector itself collects."""
     from hiselspark.selection import SparkHSICSelector
-    import hiselspark.selection as S
+    from tools.codegen_fallbacks import recorded_actions
+
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     wide = emb.select(
         "vec_id",
@@ -115,19 +116,17 @@ def test_flagship_hash_mode_plan_no_global_sort(spark):
         *[F.col("embedding")[i].cast("double").alias(f"e{i}")
           for i in range(8)])
     cols = [f"e{i}" for i in range(8)]
-    sel = SparkHSICSelector(wide, cols, ["y"])
-    # reproduce the hash-mode stats frame (pre-reduce) without running
-    num_mb = 5
-    h = F.xxhash64(F.lit(0), F.col("vec_id"))
-    df = (wide.select(*cols, "y", "vec_id")
-          .withColumn("__h", h)
-          .withColumn("__mb", F.pmod("__h", F.lit(num_mb))))
-    stats = df.groupBy("__mb").applyInPandas(
-        lambda key, pdf: None, S._STAT_SCHEMA)
-    txt = plan_str(stats, "simple")
+    with recorded_actions() as frames:
+        SparkHSICSelector(wide, cols, ["y"]).sufficient_stats(
+            minibatch_size=100, order_col="vec_id")
+    blocks = [f for f in frames if "FlatMapGroupsInPandas"
+              in plan_str(f, "simple")]
+    assert len(blocks) == 1, len(frames)
+    txt = plan_str(blocks[0], "simple").split("== Initial Plan ==")[0]
     assert "rangepartitioning" not in txt, txt
     assert "SinglePartition" not in txt, txt
     assert txt.count("Exchange hashpartitioning") == 1, txt
+    assert "Exchange hashpartitioning(__mb" in txt, txt
 
 
 def test_hash_mode_epochs_augment_batches(spark):
@@ -874,6 +873,37 @@ def test_selector_moments_aggregate_stays_in_codegen(spark, n_cols):
             if n.getClass().getSimpleName() == "HashAggregateExec"]
     assert len(aggs) == 2
     assert all(a.aggregateExpressions().size() == 4 for a in aggs)
+    outside = [n.getClass().getSimpleName() for n in outside_codegen(
+        frames[0]._jdf.queryExecution().executedPlan())]
+    assert "HashAggregateExec" not in outside, outside
+
+
+def test_categorical_min_max_aggregate_stays_in_codegen(spark):
+    """The categorical search's per-column min and max are one narrow
+    aggregate over the stacked (position, value) rows: two aggregate
+    expressions at 64 columns, both HashAggregate nodes inside
+    whole-stage codegen.  (A min and a max per column crossed
+    spark.sql.codegen.maxFields from 51 columns on.)"""
+    import numpy as np
+    import pandas as pd
+
+    from hiselspark.categorical import _column_offsets_and_cards
+    from tools.codegen_fallbacks import outside_codegen, recorded_actions
+
+    rng = np.random.default_rng(64)
+    cols = [f"c{i}" for i in range(64)]
+    pdf = pd.DataFrame(rng.integers(-3, 5, (300, 64)), columns=cols)
+    df = spark.createDataFrame(pdf)
+    with recorded_actions() as frames:
+        mins, cards = _column_offsets_and_cards(df, cols)
+    assert mins == {c: int(pdf[c].min()) for c in cols}
+    assert cards == {c: int(pdf[c].max() - pdf[c].min()) + 1 for c in cols}
+    assert len(frames) == 1
+    nodes = _final_plan_nodes(frames[0])
+    aggs = [n for n in nodes
+            if n.getClass().getSimpleName() == "HashAggregateExec"]
+    assert len(aggs) == 2
+    assert all(a.aggregateExpressions().size() == 2 for a in aggs)
     outside = [n.getClass().getSimpleName() for n in outside_codegen(
         frames[0]._jdf.queryExecution().executedPlan())]
     assert "HashAggregateExec" not in outside, outside

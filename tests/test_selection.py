@@ -226,6 +226,74 @@ def test_parity_mode_equals_twin_bit_for_bit(spark):
         twin.lasso_path.values.tobytes()
 
 
+def test_hash_mode_one_row_minibatch_adds_nothing(spark):
+    """A hash minibatch of one row adds no block: the rows used and
+    the minibatches leave it out, and the summed blocks are the bits
+    of the twin's, which adds a zero block there."""
+    from hiselspark.twin import _twin_hash_stats, _twin_standardize, hash_rows
+
+    x, y = _planted_continuous(n=400, seed=2)
+    fc, num_mb = [f"f{i}" for i in range(8)], 400 // 8
+    pdf = pd.DataFrame(x, columns=fc).assign(y=y[:, 0], _idx=np.arange(400))
+    for seed in range(100):
+        mb = hash_rows([pdf["_idx"].to_numpy()], ["long"],
+                       lead=[(seed, "int")]) % num_mb
+        counts = np.bincount(mb, minlength=num_mb)
+        if (counts == 1).any():
+            break
+    assert (counts == 1).any()
+    stats = SparkHSICSelector(
+        spark.createDataFrame(pdf).coalesce(1), fc, ["y"]).sufficient_stats(
+            minibatch_size=8, order_col="_idx", seed=seed)
+    std = _twin_standardize(
+        {c: pdf[c].to_numpy(dtype=np.float64) for c in fc + ["y"]},
+        fc + ["y"])
+    twin = _twin_hash_stats(pdf.assign(**std), fc, ["y"], "_idx", 8,
+                            seed=seed)
+    (xtx, xty, rows, mbs), = stats
+    assert rows == twin[2] == int(counts[counts >= 2].sum())
+    assert mbs == twin[3] == int((counts >= 2).sum())
+    assert xtx.tobytes() == twin[0].tobytes()
+    assert xty.tobytes() == twin[1].tobytes()
+
+
+def test_hash_mode_one_row_input_raises(spark):
+    pdf = pd.DataFrame({"f0": [1.0], "f1": [2.0], "y": [3.0]})
+    with pytest.raises(ValueError, match="no complete minibatch in hash"):
+        hsic_lasso_select(spark.createDataFrame(pdf), ["f0", "f1"], ["y"],
+                          number_of_features=1)
+
+
+def test_segment_short_minibatch_adds_nothing(spark):
+    """A (segment, minibatch) group under 8 rows adds no block: its
+    segment's result is that of the frame without those rows, and a
+    segment with only short minibatches is absent."""
+    from hiselspark.selection import select_features_by_segment
+    from hiselspark.twin import hash_rows
+
+    rng = np.random.default_rng(11)
+    rid = np.arange(400)
+    mb = hash_rows([rid], ["long"]) % 4
+    seg = np.where(rid < 200, 0, 1)
+    short = rid[(mb == 0) & (seg == 0)][:5]
+    keep = (mb != 0) | (seg == 1) | np.isin(rid, short)
+    pdf = pd.DataFrame(rng.normal(size=(400, 4)),
+                       columns=[f"f{i}" for i in range(4)])
+    pdf = pdf.assign(seg=seg, rid=rid, y=2.0 * pdf["f1"] - pdf["f3"])[keep]
+    tiny = pdf.iloc[:6].assign(seg=2)
+    fc = ["f0", "f1", "f2", "f3"]
+
+    def run(frame):
+        return select_features_by_segment(
+            spark.createDataFrame(frame), "seg", fc, ["y"],
+            number_of_features=2, n_minibatches=4, order_col="rid")
+
+    got = run(pd.concat([pdf, tiny]))
+    want = run(pdf[~pdf["rid"].isin(short)])
+    assert sorted(set(got["segment"])) == [0, 1]
+    assert got.equals(want)
+
+
 def test_empty_and_null_inputs_raise_clear_errors(spark):
     """An empty frame, and nulls in a continuous feature or an RBF
     target, raise ValueError naming the columns."""
