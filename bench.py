@@ -175,9 +175,10 @@ def main() -> None:
     # two steady-state reps estimates the uncontended wall
     # float32 = the corpus-scale configuration: float32 Gram tiles
     # (float64 accumulators) — the documented opt-in for 10^12-row
-    # runs, where the bandwidth-bound Gram stage gains 2.5-2.9x
-    # (BASELINE.md).  Selection must agree with the float64 run;
-    # headline stays float64 for round-over-round comparability.
+    # runs, where the Gram kernel is about 1.9x faster at b=1000,
+    # d=40 (kernels.batch_sufficient_stats).  Selection must agree
+    # with the float64 run; headline stays float64 for
+    # round-over-round comparability.
     # Reps interleave f64/f32 so each pair of observations is
     # separated in time (same noise rationale as the headliners).
     north_sec = north32_sec = float("inf")

@@ -16,7 +16,7 @@ contingency tables runs on the driver.
 """
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import permutohedron
 from .selection import stack_columns
-from .stats import adjusted_mutual_info
+from .stats import ami_from_table
 
 
 def _column_offsets_and_cards(df: DataFrame,
@@ -53,21 +53,7 @@ def _ami_from_pairs(pairs: List[Tuple[int, int, int]]) -> float:
     table = np.zeros((len(codes), len(ys)), dtype=np.int64)
     for code, yv, cnt in pairs:
         table[codes[code], ys[yv]] += cnt
-    # expand back to label vectors? not needed: AMI works off the table
-    from .stats import (entropy_of_counts, expected_mutual_info,
-                        mutual_info_from_table)
-    n = int(table.sum())
-    r, c = table.shape
-    if r == 1 and c == 1:
-        return 1.0
-    mi = mutual_info_from_table(table)
-    emi = expected_mutual_info(table.sum(axis=1), table.sum(axis=0), n)
-    h = 0.5 * (entropy_of_counts(table.sum(axis=1))
-               + entropy_of_counts(table.sum(axis=0)))
-    denom = h - emi
-    eps = np.finfo(float).eps
-    denom = min(denom, -eps) if denom < 0 else max(denom, eps)
-    return float((mi - emi) / denom)
+    return ami_from_table(table)
 
 
 def _prefix_code_exprs(perm_cols: List[str], mins: Dict[str, int],
@@ -151,44 +137,35 @@ def categorical_search(
     """Greedy AMI search over integer features; control flow mirrors the
     reference (``categorical.py:115-186``) including the featurewise
     union fallback."""
-    feature_cols = list(feature_cols)
-    d = len(feature_cols)
-    if num_permutations is None:
-        num_permutations = 1
     mins, cards = _column_offsets_and_cards(df, feature_cols)
+    return _search(
+        list(feature_cols),
+        lambda tries: _score_round(df, tries, target_col, mins, cards),
+        num_permutations, im_ratio, max_iter, random_state)
 
-    active_set = set(range(d))
-    chosen = np.array([], dtype=np.int64)
-    best_overall = 0.0
-    it = 0
-    while len(active_set) > 0 and it < max_iter:
-        active = np.array(sorted(active_set), dtype=np.int64)
-        k = len(active)
-        n_samples = min(max(1, num_permutations // k), max(2 ** k // k, 1))
-        perms = permutohedron.sample_permutations(
-            k, size=n_samples, random_state=random_state)
-        tries_idx = [active[list(p)] for p in perms]
-        tries_cols = [[feature_cols[i] for i in t] for t in tries_idx]
-        scores = _score_round(df, tries_cols, target_col, mins, cards)
-        im, sel = 0.0, active
-        for t, prefix_scores in enumerate(scores):
+
+def _search(feature_cols: List[str],
+            score_round: Callable[[List[List[str]]], List[List[float]]],
+            num_permutations: Optional[int], im_ratio: float,
+            max_iter: int, random_state: Optional[int]) -> List[str]:
+    """The greedy AMI search and its featurewise fallback over a
+    ``score_round`` that maps column orderings to the AMI of every
+    prefix; shared by :func:`categorical_search` and the no-Spark twin
+    (``hiselspark/twin.py``), which differ only in how they count."""
+    def score_tries(tries: List[np.ndarray]):
+        scores = score_round([[feature_cols[i] for i in t] for t in tries])
+        for t, prefix_scores in zip(tries, scores):
             s = int(np.argmax(prefix_scores))
-            if prefix_scores[s] > im:
-                im = prefix_scores[s]
-                sel = tries_idx[t][: s + 1]
-        if im < im_ratio * best_overall:
-            break
-        if im > best_overall:
-            best_overall = im
-        chosen = np.concatenate((chosen, sel))
-        active_set -= set(chosen.tolist())
-        it += 1
+            yield prefix_scores[s], t[: s + 1]
 
+    chosen, best_overall = permutohedron.greedy_search(
+        len(feature_cols), score_tries,
+        1 if num_permutations is None else num_permutations,
+        im_ratio, max_iter, random_state, stop_at=0)
     # featurewise fallback: single-feature AMI above threshold
     threshold = im_ratio * best_overall
-    singles = _score_round(df, [[c] for c in feature_cols], target_col,
-                           mins, cards)
-    fallback = [i for i in range(d) if singles[i][0] > threshold]
+    singles = score_round([[c] for c in feature_cols])
+    fallback = [i for i, s in enumerate(singles) if s[0] > threshold]
     final = sorted(set(chosen.tolist()) | set(fallback))
     return [feature_cols[i] for i in final]
 

@@ -58,6 +58,21 @@ def score_permutation(x: np.ndarray, lc: np.ndarray, kind: KernelKind,
     return float(scores[best]), selection[: best + 1]
 
 
+def _search_inputs(x: np.ndarray, y: np.ndarray
+                   ) -> Tuple[np.ndarray, np.ndarray, KernelKind]:
+    """``(x, centered y-Gram, x kernel)`` of a collected sample: an
+    all-integer block takes the delta kernel (as int64), any other the
+    RBF."""
+    def kind_of(m: np.ndarray) -> Tuple[np.ndarray, KernelKind]:
+        if np.all(m == np.round(m)):
+            return m.astype(np.int64), KernelKind.DELTA
+        return m, KernelKind.RBF
+    x, kind = kind_of(x)
+    y, y_kind = kind_of(y)
+    lc = double_center(gram_joint(y, float(np.sqrt(y.shape[1])), y_kind))
+    return x, lc, kind
+
+
 def sample_matrix(df: DataFrame, cols: Sequence[str], sample_cap: int,
                   seed: int = 0) -> np.ndarray:
     """Deterministic bounded sample collected to the driver: rows ranked
@@ -91,18 +106,7 @@ def hsic_search(
     dx = len(feature_cols)
     mat = sample_matrix(df, [*feature_cols, *target_cols],
                         sample_cap, seed=random_state or 0)
-    x = mat[:, :dx]
-    y = mat[:, dx:]
-    x_int = np.all(x == np.round(x))
-    kind = KernelKind.DELTA if x_int else KernelKind.RBF
-    if x_int:
-        x = x.astype(np.int64)
-    y_int = np.all(y == np.round(y))
-    y_kind = KernelKind.DELTA if y_int else KernelKind.RBF
-    if y_int:
-        y = y.astype(np.int64)
-    dy = y.shape[1]
-    lc = double_center(gram_joint(y, float(np.sqrt(dy)), y_kind))
+    x, lc, kind = _search_inputs(mat[:, :dx], mat[:, dx:])
 
     if num_permutations is None:
         num_permutations = 3 * dx
@@ -132,27 +136,8 @@ def hsic_search(
         return [(r["im"], np.asarray(r["sel"], dtype=np.int64))
                 for r in rows]
 
-    active_set = set(range(dx))
-    chosen = np.array([], dtype=np.int64)
-    best_overall = 0.0
-    it = 0
-    while len(active_set) > 1 and it < max_iter:
-        active = np.array(sorted(active_set), dtype=np.int64)
-        k = len(active)
-        n_samples = min(max(1, num_permutations // k), 2 ** k // k)
-        perms = permutohedron.sample_permutations(
-            k, size=n_samples, random_state=random_state)
-        tries = run_tries([active[list(p)] for p in perms])
-        im, sel = 0.0, active
-        for im_, sel_ in tries:
-            if im_ > im:
-                im, sel = im_, sel_
-        if im < im_ratio * best_overall:
-            break
-        if im > best_overall:
-            best_overall = im
-        chosen = np.concatenate((chosen, sel))
-        active_set -= set(chosen.tolist())
-        it += 1
+    chosen, _ = permutohedron.greedy_search(
+        dx, run_tries, num_permutations, im_ratio, max_iter,
+        random_state, stop_at=1)
     bc.unpersist()
     return [feature_cols[i] for i in chosen]

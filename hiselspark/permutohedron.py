@@ -12,10 +12,13 @@ Haar sampling itself uses the QR-of-Gaussian construction with the
 R-diagonal sign fix (Mezzadri 2007, "How to generate random matrices
 from the classical compact groups") plus a determinant fix into SO(n) —
 scipy is not available in this sandbox.
+
+``greedy_search`` is the driver loop both searches share: sample
+orderings, score every try, keep the best, stop on ``im_ratio``.
 """
 from __future__ import annotations
 
-from typing import Optional, Set, Tuple
+from typing import Callable, Iterable, List, Optional, Set, Tuple
 
 import numpy as np
 
@@ -62,3 +65,42 @@ def sample_permutations(d: int, size: int = 1,
     return {tuple(orders[s, :, j])
             for s in range(orders.shape[0])
             for j in range(orders.shape[2])}
+
+
+def greedy_search(d: int,
+                  score_tries: Callable[[List[np.ndarray]],
+                                        Iterable[Tuple[float, np.ndarray]]],
+                  num_permutations: int, im_ratio: float, max_iter: int,
+                  random_state: Optional[int], stop_at: int
+                  ) -> Tuple[np.ndarray, float]:
+    """The driver loop shared by the greedy HSIC and categorical
+    searches (reference ``hsic.py:44-117``, ``categorical.py:115-186``).
+    Each round samples orderings of the active features, lets
+    ``score_tries`` map them (index arrays) to one ``(score, best
+    prefix)`` per try, accepts the first strictly best try, and stops
+    when that score falls under ``im_ratio`` of the best so far, after
+    ``max_iter`` rounds, or once at most ``stop_at`` features remain.
+    Returns the accepted indices in acceptance order and the best
+    score."""
+    active_set = set(range(d))
+    chosen = np.array([], dtype=np.int64)
+    best_overall = 0.0
+    it = 0
+    while len(active_set) > stop_at and it < max_iter:
+        active = np.array(sorted(active_set), dtype=np.int64)
+        k = len(active)
+        n_samples = min(max(1, num_permutations // k), 2 ** k // k)
+        perms = sample_permutations(k, size=n_samples,
+                                    random_state=random_state)
+        im, sel = 0.0, active
+        for im_, sel_ in score_tries([active[list(p)] for p in perms]):
+            if im_ > im:
+                im, sel = im_, sel_
+        if im < im_ratio * best_overall:
+            break
+        if im > best_overall:
+            best_overall = im
+        chosen = np.concatenate((chosen, sel))
+        active_set -= set(chosen.tolist())
+        it += 1
+    return chosen, best_overall

@@ -24,6 +24,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from .stats import mutual_info_from_table
+
 
 def _bin_expr(df: DataFrame, col: str, edges: List[float]):
     """Column expression assigning ``col`` to its histogram bin id via
@@ -104,12 +106,7 @@ def mi_from_count_frame(counts: pd.DataFrame, n_features: int) -> np.ndarray:
     for fi, g in counts.groupby("fi"):
         table = g.pivot_table(index="xb", columns="yb", values="count",
                               aggfunc="sum", fill_value=0).to_numpy()
-        n = table.sum()
-        nz = table > 0
-        pij = table[nz] / n
-        outer = (table.sum(axis=1)[:, None] * table.sum(axis=0)[None, :])[nz]
-        mis[int(fi)] = float(np.sum(
-            pij * (np.log(table[nz] * n) - np.log(outer))))
+        mis[int(fi)] = mutual_info_from_table(table)
     return mis
 
 

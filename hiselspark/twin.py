@@ -398,8 +398,7 @@ def twin_mi_preselect(sf_dir: str) -> pd.DataFrame:
 def twin_greedy_hsic_search(sf_dir: str) -> pd.DataFrame:
     """Twin of ``q_greedy_hsic_search`` (`hsic_search`): seeded
     permutohedron tries scored locally instead of as Spark tasks."""
-    from .hsic_search import score_permutation
-    from .kernels import double_center, gram_joint
+    from .hsic_search import _search_inputs, score_permutation
     pdf, mat = load_embeddings(sf_dir)
     d = 16
     cols = [f"e{i}" for i in range(d)] + ["y"]
@@ -408,41 +407,12 @@ def twin_greedy_hsic_search(sf_dir: str) -> pd.DataFrame:
     h = hash_rows(arrs, ["double"] * len(arrs), lead=[(0, "int")])
     order = np.lexsort(tuple(a for a in reversed(arrs)) + (h,))
     take = order[:2000]
-    x = np.stack([a[take] for a in arrs[:d]], axis=1)
-    y = arrs[d][take][:, None]
-    x_int = np.all(x == np.round(x))
-    kind = KernelKind.DELTA if x_int else KernelKind.RBF
-    if x_int:
-        x = x.astype(np.int64)
-    y_int = np.all(y == np.round(y))
-    y_kind = KernelKind.DELTA if y_int else KernelKind.RBF
-    if y_int:
-        y = y.astype(np.int64)
-    lc = double_center(gram_joint(y, 1.0, y_kind))
-
-    num_permutations, max_iter, random_state = 16, 2, 0
-    active_set = set(range(d))
-    chosen = np.array([], dtype=np.int64)
-    best_overall = 0.0
-    it = 0
-    while len(active_set) > 1 and it < max_iter:
-        active = np.array(sorted(active_set), dtype=np.int64)
-        kk = len(active)
-        n_samples = min(max(1, num_permutations // kk), 2 ** kk // kk)
-        perms = permutohedron.sample_permutations(
-            kk, size=n_samples, random_state=random_state)
-        im, sel = 0.0, active
-        for p in perms:
-            im_, sel_ = score_permutation(x, lc, kind, active[list(p)])
-            if im_ > im:
-                im, sel = im_, sel_
-        if im < 0.1 * best_overall:
-            break
-        if im > best_overall:
-            best_overall = im
-        chosen = np.concatenate((chosen, sel))
-        active_set -= set(chosen.tolist())
-        it += 1
+    x, lc, kind = _search_inputs(
+        np.stack([a[take] for a in arrs[:d]], axis=1), arrs[d][take][:, None])
+    chosen, _ = permutohedron.greedy_search(
+        d, lambda tries: [score_permutation(x, lc, kind, t) for t in tries],
+        num_permutations=16, im_ratio=0.1, max_iter=2, random_state=0,
+        stop_at=1)
     names = [cols[i] for i in chosen]
     rows = list(enumerate(names)) or [(-1, "none")]
     return pd.DataFrame({
@@ -477,11 +447,8 @@ def _twin_categorical_search(feats: Dict[str, np.ndarray],
                              im_ratio: float, max_iter: int,
                              random_state: Optional[int]) -> List[str]:
     """Replica of ``categorical.categorical_search`` with pandas
-    contingency counts; shares ``_ami_from_pairs``."""
-    from .categorical import _ami_from_pairs
-    d = len(feature_cols)
-    if num_permutations is None:
-        num_permutations = 1
+    contingency counts; shares the search, fallback and AMI."""
+    from .categorical import _ami_from_pairs, _search
     mins = {c: int(feats[c].min()) for c in feature_cols}
     cards = {c: int(feats[c].max()) - mins[c] + 1 for c in feature_cols}
 
@@ -502,38 +469,8 @@ def _twin_categorical_search(feats: Dict[str, np.ndarray],
             out.append(scores)
         return out
 
-    active_set = set(range(d))
-    chosen = np.array([], dtype=np.int64)
-    best_overall = 0.0
-    it = 0
-    while len(active_set) > 0 and it < max_iter:
-        active = np.array(sorted(active_set), dtype=np.int64)
-        k = len(active)
-        n_samples = min(max(1, num_permutations // k),
-                        max(2 ** k // k, 1))
-        perms = permutohedron.sample_permutations(
-            k, size=n_samples, random_state=random_state)
-        tries_idx = [active[list(p)] for p in perms]
-        tries_cols = [[feature_cols[i] for i in t] for t in tries_idx]
-        scores = score_round(tries_cols)
-        im, sel = 0.0, active
-        for t, prefix_scores in enumerate(scores):
-            s = int(np.argmax(prefix_scores))
-            if prefix_scores[s] > im:
-                im = prefix_scores[s]
-                sel = tries_idx[t][: s + 1]
-        if im < im_ratio * best_overall:
-            break
-        if im > best_overall:
-            best_overall = im
-        chosen = np.concatenate((chosen, sel))
-        active_set -= set(chosen.tolist())
-        it += 1
-    threshold = im_ratio * best_overall
-    singles = score_round([[c] for c in feature_cols])
-    fallback = [i for i in range(d) if singles[i][0] > threshold]
-    final = sorted(set(chosen.tolist()) | set(fallback))
-    return [feature_cols[i] for i in final]
+    return _search(feature_cols, score_round, num_permutations, im_ratio,
+                   max_iter, random_state)
 
 
 def twin_categorical_search(sf_dir: str) -> pd.DataFrame:

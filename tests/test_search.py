@@ -25,6 +25,55 @@ def test_sample_permutations_degenerate():
     assert permutohedron.sample_permutations(1) == {(0,)}
 
 
+def _fake_scorer(rounds):
+    """Scorer for ``greedy_search`` that gives try ``t`` of round ``r``
+    the score ``rounds[r][t]`` (last entry repeated) and its prefix of
+    ``t + 1`` features; records the tries of every round."""
+    seen = []
+
+    def score_tries(tries):
+        scores = rounds[min(len(seen), len(rounds) - 1)]
+        seen.append(tries)
+        return [(scores[min(t, len(scores) - 1)], p[: t + 1])
+                for t, p in enumerate(tries)]
+    return score_tries, seen
+
+
+def test_greedy_search_im_ratio_break():
+    score, seen = _fake_scorer([[10.0], [0.5]])
+    chosen, best = permutohedron.greedy_search(
+        6, score, 12, im_ratio=0.1, max_iter=5, random_state=0, stop_at=1)
+    assert len(seen) == 2 and best == 10.0
+    np.testing.assert_array_equal(chosen, seen[0][0][:1])
+
+
+def test_greedy_search_first_of_equal_scores_wins():
+    score, seen = _fake_scorer([[1.0, 3.0, 3.0]])
+    chosen, best = permutohedron.greedy_search(
+        6, score, 12, im_ratio=0.1, max_iter=1, random_state=0, stop_at=1)
+    assert len(seen[0]) >= 3 and best == 3.0
+    np.testing.assert_array_equal(chosen, seen[0][1][:2])
+
+
+def test_greedy_search_max_iter_bound():
+    score, seen = _fake_scorer([[1.0], [2.0], [3.0]])
+    chosen, best = permutohedron.greedy_search(
+        6, score, 12, im_ratio=0.1, max_iter=2, random_state=0, stop_at=1)
+    assert len(seen) == 2 and len(chosen) == 2 and best == 2.0
+
+
+@pytest.mark.parametrize("stop_at, rounds", [(1, 1), (0, 2)])
+def test_greedy_search_stop_at(stop_at, rounds):
+    """Two features, one accepted per round: HSIC (``stop_at=1``) stops
+    with one left, categorical (``stop_at=0``) scores the last alone."""
+    score, seen = _fake_scorer([[1.0]])
+    chosen, _ = permutohedron.greedy_search(
+        2, score, 4, im_ratio=0.1, max_iter=5, random_state=0,
+        stop_at=stop_at)
+    assert len(seen) == rounds
+    assert len(set(chosen.tolist())) == len(chosen) == rounds
+
+
 # ---------------------------------------------------------------------------
 # prefix grams vs reference
 # ---------------------------------------------------------------------------
@@ -79,14 +128,21 @@ def test_ami_independent_near_zero():
     assert abs(stats.adjusted_mutual_info(a, b)) < 0.01
 
 
-def test_emi_matches_bruteforce_tiny():
+@pytest.mark.parametrize("a, b", [
+    ([0, 0, 1, 1], [0, 1, 0, 1]),
+    # row sums (3, 2) against column sums (4, 1): the (3, 4) cell's
+    # support starts at a + b - n = 2
+    ([0, 0, 0, 1, 1], [0, 0, 0, 0, 1]),
+], ids=["square", "support_above_1"])
+def test_emi_matches_bruteforce_tiny(a, b):
     """Exact EMI vs brute-force enumeration over all permutations of a
     tiny labeling (the permutation model definition)."""
     from itertools import permutations as iperm
-    a = np.array([0, 0, 1, 1])
-    b = np.array([0, 1, 0, 1])
+    a = np.array(a)
+    b = np.array(b)
     table = stats.contingency(a, b)
-    emi = stats.expected_mutual_info(table.sum(axis=1), table.sum(axis=0), 4)
+    emi = stats.expected_mutual_info(table.sum(axis=1), table.sum(axis=0),
+                                     len(a))
     mis = [stats.mutual_info_from_table(
         stats.contingency(a, np.array(p))) for p in iperm(b)]
     assert emi == pytest.approx(np.mean(mis), rel=1e-9)

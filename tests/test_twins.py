@@ -86,7 +86,8 @@ def test_round_and_percentile_replication(spark):
 
 
 @pytest.mark.parametrize("name", ["mi_preselect", "segmented_select",
-                                  "pca_project", "semantic_dedup"])
+                                  "pca_project", "semantic_dedup",
+                                  "categorical_search"])
 def test_twin_agrees_with_engine(spark, name):
     """Representation-exact twin-vs-engine agreement on a fast subset
     of the pin family at sf0.001 (pin_all.py asserts all 11 at every
